@@ -1,0 +1,171 @@
+"""Resume cost and commit unit of the checkpointed cascade: tier partition
+sets come from directory listings, the Gorilla pack commits with its 1m
+partition, and a refresh keeps the packed tier in step with tier_1m."""
+
+from __future__ import annotations
+
+import os
+from collections import Counter
+
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
+
+from tods_spark import pipeline
+from tods_spark.datagen import token_table
+from tods_spark.operators.compression import unpack_tier
+from tods_spark.pipeline import refresh_engine, run_engine
+from tods_spark.plans.checkpoint import CheckpointLog
+from tods_spark.sources.storage import PartitionedTable
+
+
+def _files(path: str) -> dict:
+    out = {}
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            st = os.stat(os.path.join(root, f))
+            out[os.path.join(root, f)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def _packed(spark, base: str) -> list[tuple]:
+    rows = spark.read.parquet(f"{base}/tier_1m_gorilla").select(
+        "source", "chunk_start", "n_points", "blob").collect()
+    return sorted((r[0], r[1], r[2], bytes(r[3])) for r in rows)
+
+
+def _records(base: str) -> list[dict]:
+    return CheckpointLog(f"{base}/checkpoint.jsonl").records()
+
+
+def _assert_unpack_equals_1m(spark, base: str) -> None:
+    t1m = (spark.read.parquet(f"{base}/tier_1m")
+           .select("source", "window_start", "avg_n_tok").toPandas()
+           .sort_values(["source", "window_start"], ignore_index=True))
+    got = (unpack_tier(spark.read.parquet(f"{base}/tier_1m_gorilla"))
+           .toPandas().sort_values(["source", "window_start"],
+                                   ignore_index=True))
+    assert len(got) == len(t1m)
+    assert (got["source"].to_numpy() == t1m["source"].to_numpy()).all()
+    assert (got["window_start"].to_numpy()
+            == t1m["window_start"].to_numpy()).all()
+    np.testing.assert_array_equal(
+        got["avg_n_tok"].to_numpy().view(np.int64),
+        t1m["avg_n_tok"].to_numpy().view(np.int64),
+    )
+
+
+def test_refresh_repacks_gorilla_tier(spark, tmp_path):
+    """After a late batch, unpacking tier_1m_gorilla gives tier_1m's
+    (source, window_start, avg_n_tok) bitwise, on the merging run and on
+    the fenced re-run."""
+    raw = token_table(spark, 8000, partitions=4)
+    doc_n = F.substring("doc_id", 5, 15).cast("long")
+    base = str(tmp_path / "eng")
+    run_engine(spark, raw.filter(doc_n % 13 != 0), base, with_digest=True)
+    late = raw.filter(doc_n % 13 == 0)
+    rep = refresh_engine(spark, late, base)
+    assert rep["1m"]["merged"] is True
+    _assert_unpack_equals_1m(spark, base)
+    rep2 = refresh_engine(spark, late, base)
+    assert rep2["1m"]["merged"] is False
+    _assert_unpack_equals_1m(spark, base)
+
+
+def test_pack_crash_recomputes_with_its_1m_partitions(spark, tmp_path,
+                                                      monkeypatch):
+    """A pack write that fails inside the 1m stage leaves no 1m marks, so
+    the next run recomputes and packs those partitions; the packed tier
+    then equals a clean run's."""
+    raw = token_table(spark, 4000, partitions=3)
+    clean = str(tmp_path / "clean")
+    run_engine(spark, raw, clean, with_digest=False)
+
+    real = pipeline.pack_days
+    calls = []
+
+    def crash_once(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("planted pack crash")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "pack_days", crash_once)
+    base = str(tmp_path / "crash")
+    with pytest.raises(RuntimeError, match="planted pack crash"):
+        run_engine(spark, raw, base, with_digest=False)
+    assert os.path.isdir(f"{base}/tier_1m")  # the tier write went through
+    assert not [r for r in _records(base) if r["tier"] == "1m"]
+
+    rep = run_engine(spark, raw, base, with_digest=False)
+    assert rep["1m"]["computed"] and not rep["1m"]["skipped"]
+    assert len(calls) == 2
+    assert _packed(spark, base) == _packed(spark, clean)
+
+
+def test_full_skip_resume_job_budget(spark, tmp_path):
+    """A resume with every tier done runs at most two Spark jobs (the raw
+    partition count) and rewrites nothing, the packed tier included."""
+    raw = token_table(spark, 3000, partitions=3)
+    base = str(tmp_path / "eng")
+    run_engine(spark, raw, base, with_digest=True)
+    before = _files(base + "/tier_1m_gorilla")
+    assert before
+
+    sc = spark.sparkContext
+    sc.setJobGroup("resume-budget", "full-skip resume")
+    try:
+        rep = run_engine(spark, raw, base, with_digest=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("resume-budget")
+    assert all(not rep[t]["computed"] and rep[t]["skipped"]
+               for t in ("1m", "1h", "1d"))
+    assert 0 < len(jobs) <= 2, jobs
+    assert _files(base + "/tier_1m_gorilla") == before
+
+
+def test_cascade_lineage_parity(spark, tmp_path):
+    """Per partition, each cascade tier's rows_in is the rows_out of the
+    tier below, and the log keeps one record per computed (tier,
+    partition)."""
+    raw = token_table(spark, 12000, partitions=4)
+    base = str(tmp_path / "eng")
+    rep = run_engine(spark, raw, base, with_digest=True)
+    recs = _records(base)
+    per = {(r["tier"], r["partition"]): r for r in recs}
+    counts = Counter((r["tier"], r["partition"]) for r in recs)
+    assert set(counts.values()) == {1}
+    assert set(per) == {(t, p) for t in ("1m", "1h", "1d")
+                        for p in rep[t]["computed"]}
+    assert sum(per["1m", p]["rows_in"] for p in rep["1m"]["computed"]) \
+        == 12000
+    for lo, hi in (("1m", "1h"), ("1h", "1d")):
+        assert rep[hi]["computed"] == rep[lo]["computed"]
+        for p in rep[hi]["computed"]:
+            assert per[hi, p]["rows_in"] == per[lo, p]["rows_out"] > 0
+
+
+def test_partition_listing(spark, tmp_path):
+    """partitions() is the directory listing: Hive-unescaped values, SQL
+    NULL as None, and no `_`/`.` entries or empty directories."""
+    path = str(tmp_path / "tbl")
+    tbl = PartitionedTable(spark, path, ["k"])
+    keys = ["a:b", "c d", "x%y", "2024-01-01", None]
+    tbl.overwrite_partitions(spark.createDataFrame(
+        [(k, i) for i, k in enumerate(keys)], "k string, v long"))
+    for junk in ("_temporary/0", ".spark-staging-1/k=zz", "k=empty"):
+        os.makedirs(os.path.join(path, junk))
+    with open(os.path.join(path, ".spark-staging-1", "k=zz", "f.parquet"),
+              "w"):
+        pass
+    assert os.path.exists(os.path.join(path, "_manifest.jsonl"))
+
+    listed = [p["k"] for p in tbl.partitions()]
+    assert sorted(listed, key=str) == sorted(keys, key=str)
+    read = {r["k"] for r in tbl.read().select(
+        F.col("k").cast("string").alias("k")).collect()}
+    assert read == set(keys)
+    assert not PartitionedTable(spark, str(tmp_path / "none"),
+                                ["k"]).partitions()

@@ -5,15 +5,21 @@ on a cluster).
     raw token table
       → (optional) timestamp dedup               operators/validation
       → 1m rollup (algebraic + digest)           operators/rollup
-      → 1h, 1d cascade                           operators/rollup
+        + Gorilla pack of the same days          operators/compression
+      → 1h, 1d (optional 1w) cascade             operators/rollup
       each tier: checkpointed partition write    plans/checkpoint, sources/storage
-      → tumbling gap-fill view of each tier      operators/gapfill
-      → Gorilla pack of each tier                operators/compression
-      → retention expiry per tier                plans/retention
+      → (optional) small-file compaction         sources/storage
+      → (optional) retention expiry per tier     plans/retention
 
 Every stage is resumable: re-running `run_engine` after a crash skips
 completed (tier, partition) pairs via the checkpoint log and converges to
-identical bytes (dynamic partition overwrite).
+identical bytes (dynamic partition overwrite). The pack is written inside
+the 1m stage, before the 1m checkpoint marks, so a 1m partition and its
+packed day commit together. A resume pays for the partitions still to do:
+the raw partition set costs one count, each cascade tier lists the
+directory of the tier below, and a tier with nothing to do opens no table.
+`refresh_engine` is the late-data half: it merges a late batch into the
+affected 1m days, repacks them and re-derives 1h and 1d upward.
 """
 
 from __future__ import annotations
@@ -31,6 +37,15 @@ from tods_spark.operators.rollup import (
 from tods_spark.plans.checkpoint import CheckpointLog, run_tier
 from tods_spark.plans.retention import DEFAULT_HORIZON_DAYS, expire_partitions
 from tods_spark.sources.storage import PartitionedTable
+
+
+def pack_days(packed_table: PartitionedTable, t1m, keys) -> None:
+    """Gorilla-pack the 1m rows in `t1m` into the day partitions of
+    `packed_table` (one blob per key and day), replacing those days."""
+    packed = compression.pack_tier(t1m, value_col="avg_n_tok", keys=keys).withColumn(
+        "part_key", F.date_format("chunk_start", "yyyy-MM-dd")
+    )
+    packed_table.overwrite_partitions(packed)
 
 
 def run_engine(
@@ -80,24 +95,26 @@ def run_engine(
             df, "1m", value_col=value_col, keys=keys, with_digest=False
         )
     t1m_table = PartitionedTable(spark, f"{base_dir}/tier_1m", ["part_key"])
+    packed_table = PartitionedTable(spark, f"{base_dir}/tier_1m_gorilla",
+                                    ["part_key"])
     report["1m"] = run_tier(
         spark, raw_df, raw_to_1m, t1m_table, ckpt, job_id, "1m", in_ts_col="ts",
         verify_resume=verify_resume,
+        also_write=(lambda t1m: pack_days(packed_table, t1m, keys)) if pack
+        else None,
     )
 
-    t1m = t1m_table.read()
     t1h_table = PartitionedTable(spark, f"{base_dir}/tier_1h", ["part_key"])
     report["1h"] = run_tier(
-        spark, t1m.drop("part_key"),
+        spark, t1m_table,
         lambda df: rollup_cascade(df, "1m", "1h", keys=keys),
         t1h_table, ckpt, job_id, "1h", in_ts_col="window_start",
         verify_resume=verify_resume,
     )
 
-    t1h = t1h_table.read()
     t1d_table = PartitionedTable(spark, f"{base_dir}/tier_1d", ["part_key"])
     report["1d"] = run_tier(
-        spark, t1h.drop("part_key"),
+        spark, t1h_table,
         lambda df: rollup_cascade(df, "1h", "1d", keys=keys),
         t1d_table, ckpt, job_id, "1d", in_ts_col="window_start",
         verify_resume=verify_resume,
@@ -108,20 +125,12 @@ def run_engine(
         t1w_table = PartitionedTable(spark, f"{base_dir}/tier_1w",
                                      ["part_key"])
         report["1w"] = run_tier(
-            spark, t1d_table.read().drop("part_key"),
+            spark, t1d_table,
             lambda df: rollup_cascade(df, "1d", "1w", keys=keys),
             t1w_table, ckpt, job_id, "1w", in_ts_col="window_start",
             verify_resume=verify_resume,
         )
         tier_tables.append(("1w", t1w_table))
-
-    if pack:
-        packed = compression.pack_tier(
-            t1m_table.read().drop("part_key"), value_col="avg_n_tok", keys=keys
-        ).withColumn("part_key", F.date_format("chunk_start", "yyyy-MM-dd"))
-        PartitionedTable(
-            spark, f"{base_dir}/tier_1m_gorilla", ["part_key"]
-        ).overwrite_partitions(packed)
 
     if compact:
         # maintenance pass: merge per-run small files tier by tier (no-op
@@ -259,6 +268,17 @@ def refresh_engine(
         )
         _overwrite(t1m_table, "1m", refreshed, dates, commit_mark=True)
         report["1m"]["merged"] = True
+
+    # repack the refreshed days from the merged 1m tier; like the upward
+    # cascade below this is idempotent, so a fenced re-run repeats it
+    packed_table = PartitionedTable(spark, f"{base_dir}/tier_1m_gorilla",
+                                    ["part_key"])
+    if packed_table.exists():
+        pack_days(
+            packed_table,
+            t1m_table.read().filter(F.col("part_key").isin(dates)),
+            keys,
+        )
 
     # upward: a 1h/1d window lies within one day, so recomputing the
     # affected DAYS of tier N+1 from the refreshed DAYS of tier N is

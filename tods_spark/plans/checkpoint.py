@@ -16,13 +16,27 @@ Design:
     rows — computed from a read-back of the written bytes, so resume-time
     drift in any single partition is detectable), plus status and wall
     seconds;
-  * `run_tier` lists partitions already 'done' for (job_id, tier), filters
-    them OUT of the input (partition pruning — the filter lands on the
-    parquet scan), computes the rest, writes results with dynamic partition
-    overwrite (idempotent), then marks them done;
-  * a crash between "write" and "mark" re-runs that partition; the
-    partition overwrite converges to the same bytes, so resume is exactly-
-    once in effect (at-least-once execution, idempotent apply).
+  * `run_tier` plans the partition set without scanning history: a raw
+    DataFrame input gives its partition set and every partition's rows_in
+    in one groupBy(part_key).count() job; a tier input is the
+    PartitionedTable below, whose partition set is its directory listing
+    and whose rows_in are the Parquet footer counts of the todo partitions
+    (no Spark job); the table is opened only when some partition is still
+    to do;
+  * partitions already 'done' for (job_id, tier) are filtered OUT of the
+    input (partition pruning — the filter lands on the parquet scan), the
+    rest are computed and written with dynamic partition overwrite
+    (idempotent), then marked done;
+  * a second output of a tier (the 1m tier's Gorilla pack) is written from
+    the read-back of exactly the todo partitions, after the tier write and
+    before the marks; it keeps no records of its own, so the tier's record
+    is its commit and the log keeps one record per tier partition;
+  * a crash between "write" and "mark" re-runs that partition and its
+    second output; the partition overwrite converges to the same bytes, so
+    resume is exactly-once in effect (at-least-once execution, idempotent
+    apply);
+  * a resume with every partition done costs the raw count alone: two
+    Spark jobs, none of them proportional to the tier tables.
 
 The checkpoint table itself is tiny (one row per partition per tier) and is
 stored as JSON lines appended atomically per run — on a cluster this becomes
@@ -94,7 +108,7 @@ def _per_partition_stats(df: DataFrame, partition_col: str) -> dict:
 
 def run_tier(
     spark: SparkSession,
-    input_df: DataFrame,
+    source: DataFrame | PartitionedTable,
     compute,  # (DataFrame) -> DataFrame : the tier transformation
     out_table: PartitionedTable,
     ckpt: CheckpointLog,
@@ -104,12 +118,26 @@ def run_tier(
     out_ts_col: str = "window_start",
     partition_col: str = "part_key",
     verify_resume: bool = False,
+    also_write=None,  # (DataFrame) -> None : output committed with the tier
 ) -> dict:
     """Run one rollup tier with per-partition lineage + resume.
 
     The coarse partition key is the DAY of the event time — derived from
     `in_ts_col` on the input and `out_ts_col` on the output (a tier never
     maps an input day to a different output day for tiers ≤ 1d).
+
+    `source` is either a DataFrame (raw rows: one groupBy job gives the
+    partition set and every partition's rows_in) or the PartitionedTable
+    of the tier below, partitioned by the day of `in_ts_col` under
+    `partition_col`. A table's partition set is its directory listing, its
+    rows_in the footer counts of the todo partitions, and the table is
+    opened only when some partition is still to do.
+
+    `also_write`, when given, receives the pruned read-back of the
+    partitions just written and writes a second output from it before
+    their checkpoint marks: that output commits with the tier partition,
+    so a crash before the marks recomputes both, and a resume that skips
+    the partition writes neither.
 
     verify_resume=True audits every 'done' partition before trusting it:
     the WRITTEN bytes are re-fingerprinted (one groupBy over the pruned
@@ -123,15 +151,23 @@ def run_tier(
     """
     in_expr = F.date_format(in_ts_col, "yyyy-MM-dd")
     out_expr = F.date_format(out_ts_col, "yyyy-MM-dd")
-    inp = input_df.withColumn(partition_col, in_expr)
 
-    all_parts = [
-        r[partition_col]
-        for r in inp.select(partition_col).distinct().collect()
-    ]
+    if isinstance(source, PartitionedTable):
+        # the partition set is the directory listing: no Spark job, and the
+        # table is opened below only when some partition is still to do
+        dirs = {v[partition_col]: path for path, v in source.partition_dirs()}
+        all_parts = sorted(dirs)
+    else:
+        # one job gives the partition set and every partition's rows_in
+        inp = source.withColumn(partition_col, in_expr)
+        rows_in = {
+            r[partition_col]: int(r["count"])
+            for r in inp.groupBy(partition_col).count().collect()
+        }
+        all_parts = sorted(rows_in)
     done = ckpt.done_partitions(job_id, tier)
-    todo = sorted(p for p in all_parts if p not in done)
-    skipped = sorted(p for p in all_parts if p in done)
+    todo = [p for p in all_parts if p not in done]
+    skipped = [p for p in all_parts if p in done]
     drifted: list[str] = []
 
     if verify_resume and skipped and out_table.exists():
@@ -158,16 +194,16 @@ def run_tier(
     rows_out_total = 0
     if todo:
         run_id = uuid.uuid4().hex[:12]
-        # partition-pruned input: the IN filter pushes to the scan
-        pending = inp.filter(F.col(partition_col).isin(todo))
-        # per-partition input row counts (lineage contract: each checkpoint
-        # record carries ITS partition's metrics, not run-wide totals)
-        rows_in = {
-            r[partition_col]: int(r["n"])
-            for r in pending.groupBy(partition_col)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+        # partition-pruned input: the IN filter pushes to the scan. Each
+        # checkpoint record carries ITS partition's rows_in; a table input's
+        # come from the Parquet footers of the todo partitions
+        if isinstance(source, PartitionedTable):
+            rows_in = {p: PartitionedTable.partition_rows(dirs[p]) for p in todo}
+            pending = source.read().filter(
+                F.col(partition_col).isin(todo)
+            ).drop(partition_col).withColumn(partition_col, in_expr)
+        else:
+            pending = inp.filter(F.col(partition_col).isin(todo))
         t0 = time.time()
         result = compute(pending.drop(partition_col)).withColumn(
             partition_col, out_expr
@@ -177,11 +213,15 @@ def run_tier(
         # stats from the WRITTEN bytes (read-back), not a recompute or a
         # .cache(): what's fingerprinted is exactly what resume would see
         # (and MemoryStore persists anti-scale on fault-convoy kernels)
-        written = out_table.read().filter(F.col(partition_col).isin(todo))
+        written = out_table.read(result.schema).filter(
+            F.col(partition_col).isin(todo)
+        )
         stats = _per_partition_stats(written, partition_col)
         out_table.annotate_snapshot(
             snapshot_id, {p: stats.get(p, (0, 0))[0] for p in todo}
         )
+        if also_write is not None:
+            also_write(written)
         for p in todo:
             n_out, fp = stats.get(p, (0, 0))
             ckpt.mark(

@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import shutil
 from datetime import datetime, timedelta
-from pathlib import Path
 
 from tods_spark.plans.checkpoint import CheckpointLog
 from tods_spark.sources.storage import PartitionedTable
@@ -39,15 +38,10 @@ def expire_partitions(
         return []
     cutoff = (now - timedelta(days=horizon_days)).strftime("%Y-%m-%d")
     dropped = []
-    root = Path(table.path)
-    if not root.exists():
-        return []
-    for child in sorted(root.iterdir()):
-        if not child.name.startswith(f"{partition_col}="):
-            continue
-        key = child.name.split("=", 1)[1]
-        if key < cutoff:
-            shutil.rmtree(child)
+    for path, values in table.partition_dirs():
+        key = values[partition_col]
+        if key is not None and key < cutoff:
+            shutil.rmtree(path)
             dropped.append(key)
             if ckpt is not None:
                 ckpt.mark(

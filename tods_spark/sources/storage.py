@@ -16,8 +16,16 @@ partition by the output committer).
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+
+def _unescape(value: str) -> str | None:
+    """A partition directory value as a column value: Hive escapes special
+    characters as %XX and spells SQL NULL as __HIVE_DEFAULT_PARTITION__."""
+    return None if value == "__HIVE_DEFAULT_PARTITION__" else unquote(value)
 
 
 class PartitionedTable:
@@ -86,15 +94,52 @@ class PartitionedTable:
     def append(self, df: DataFrame) -> None:
         df.write.mode("append").partitionBy(*self.partition_cols).parquet(self.path)
 
-    def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+    def read(self, schema: StructType | None = None) -> DataFrame:
+        """The table. A caller that knows the schema (it just wrote the
+        table) passes it, and Spark runs no schema-inference job."""
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self.path)
+
+    def partition_dirs(self) -> list[tuple[str, dict]]:
+        """(directory, {column: value}) of every partition that holds a data
+        file, from the directory listing alone: no Spark job. Entries whose
+        name starts with ``_`` or ``.`` (the manifest, ``_temporary``,
+        ``.spark-staging-*``) are not partitions. Values are Hive-unescaped
+        strings, as Spark reads them back, with ``None`` for SQL NULL."""
+        out: list[tuple[str, dict]] = []
+
+        def walk(path: str, cols: list[str], values: dict) -> None:
+            names = sorted(n for n in os.listdir(path)
+                           if not n.startswith(("_", ".")))
+            if not cols:
+                if any(os.path.isfile(os.path.join(path, n)) for n in names):
+                    out.append((path, values))
+                return
+            for name in names:
+                col, sep, val = name.partition("=")
+                sub = os.path.join(path, name)
+                if sep and col == cols[0] and os.path.isdir(sub):
+                    walk(sub, cols[1:], {**values, col: _unescape(val)})
+
+        if os.path.isdir(self.path):
+            walk(self.path, list(self.partition_cols), {})
+        return out
+
+    @staticmethod
+    def partition_rows(directory: str) -> int:
+        """Rows in one partition directory, from the row counts in its
+        Parquet footers (read on the driver: no Spark job)."""
+        import pyarrow.parquet as pq
+
+        return sum(
+            pq.read_metadata(os.path.join(directory, f)).num_rows
+            for f in os.listdir(directory)
+            if not f.startswith(("_", "."))
+        )
 
     def partitions(self) -> list[dict]:
-        """Manifest view: list partition value dicts currently in the table."""
-        if not self.exists():
-            return []
-        rows = self.read().select(*self.partition_cols).distinct().collect()
-        return [r.asDict() for r in rows]
+        """Partition value dicts currently in the table (directory listing)."""
+        return [values for _path, values in self.partition_dirs()]
 
     def file_report(self) -> list[dict]:
         """(partition dir, n_files, bytes) per leaf partition — the input to
@@ -151,16 +196,12 @@ class PartitionedTable:
         # select the CROSS PRODUCT of values and dynamic overwrite would
         # silently rewrite untouched partitions outside the todo set)
         def part_kv(p: str) -> dict[str, str | None]:
-            # Hive escapes special chars as %XX and spells SQL NULL as
-            # __HIVE_DEFAULT_PARTITION__ — unescape so the filter and the
-            # nout join match the actual column values, not the dir names
-            from urllib.parse import unquote
-
+            # unescape so the filter and the nout join match the actual
+            # column values, not the dir names
             out = {}
             for seg in p.split(os.sep):
                 col, _, val = seg.partition("=")
-                out[col] = (None if val == "__HIVE_DEFAULT_PARTITION__"
-                            else unquote(val))
+                out[col] = _unescape(val)
             return out
 
         def part_cond(p: str):
