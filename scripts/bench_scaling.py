@@ -89,6 +89,11 @@ v6 (round 7) — estimator hardening + serial reduction:
      posture. lo/hi run the identical job, so the ratio stays apples to
      apples; absolute seconds are not comparable to v5 sessions.
 
+Every JSON record this script prints carries ``"wl": WORKLOAD_VERSION``
+(currently v6.1: the v6 job with the 1m count in the worker pool), so
+BENCH/*.jsonl records of different timed-job shapes can be told apart;
+absolute seconds compare only within one ``wl``.
+
 Summary reports BOTH medians: over protocol (clean) pairs and over all
 executed attempts, plus the full gate/contamination trace.
 
@@ -116,6 +121,7 @@ GATE_WAIT_MAX = 900.0  # per-run gate budget (seconds); then run anyway
 SETTLE_MIN = 45.0      # minimum inter-run settle (v4: see _gate docstring)
 MAX_RETRIES = 10       # extra pair attempts allowed session-wide
 SUPERLINEAR_INVALID = 1.15  # eff above this is contamination evidence
+WORKLOAD_VERSION = "v6.1"  # bump whenever the timed job changes shape
 PF_KTHREAD = 0x00200000
 HZ = os.sysconf("SC_CLK_TCK")
 
@@ -237,6 +243,11 @@ for line in sys.stdin:
 """
 
 
+def _emit(rec: dict) -> None:
+    """Print one JSON record tagged with the timed job's version."""
+    print(json.dumps({"wl": WORKLOAD_VERSION, **rec}), flush=True)
+
+
 # ---------------------------------------------------------------- /proc walk
 
 def _proc_table() -> dict[int, tuple[int, int, bool]]:
@@ -312,9 +323,8 @@ def _gate(tag: str) -> dict:
             return {"gate_load1": round(load1, 2), "gate_ext_cores": round(ext, 2),
                     "gate_waited_s": round(waited, 1),
                     "gated": load1 < LOAD1_GATE and ext < EXT_GATE}
-        print(json.dumps({"gate_wait": tag, "load1": round(load1, 2),
-                          "ext_cores": round(ext, 2),
-                          "waited_s": round(waited, 1)}), flush=True)
+        _emit({"gate_wait": tag, "load1": round(load1, 2),
+               "ext_cores": round(ext, 2), "waited_s": round(waited, 1)})
         time.sleep(8.0)
 
 
@@ -367,7 +377,7 @@ def _warm(p: subprocess.Popen, tag: str, max_tries: int = 6) -> None:
         r = _timed(p, f"warm_{tag}")
         r["warm"] = tag
         r["try"] = i
-        print(json.dumps(r), flush=True)
+        _emit(r)
         if r["ext_cores"] > EXT_CONTAM:
             continue
         # plateau = no further SIGNIFICANT IMPROVEMENT: stop only when the
@@ -430,7 +440,7 @@ def main() -> None:
                                     else order[::-1]):
                     r = _timed(p, tag)
                     r["run"] = k
-                    print(json.dumps({"raw": tag, **r}), flush=True)
+                    _emit({"raw": tag, **r})
                     acc.append(r)
             best_lo = min(rs_lo, key=lambda r: r["sec"])
             best_hi = min(rs_hi, key=lambda r: r["sec"])
@@ -461,7 +471,7 @@ def main() -> None:
                 "superlinear_invalid": superlinear,
             }
             attempts.append(rec)
-            print(json.dumps(rec), flush=True)
+            _emit(rec)
             # r7 (ADVICE): an invalid pair NEVER enters the clean set —
             # previously, once MAX_RETRIES was exhausted, contaminated
             # pairs were appended to `clean` and silently entered the
@@ -521,7 +531,7 @@ def main() -> None:
         "load1_per_pair": [r["load1"] for r in attempts],
         "ext_cores_per_pair": [[r["ext_lo"], r["ext_hi"]] for r in attempts],
     }
-    print(json.dumps(summary))
+    _emit(summary)
 
 
 if __name__ == "__main__":

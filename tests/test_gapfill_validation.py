@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from tods_spark.operators import gapfill, segmentation, validation
 
@@ -97,6 +98,31 @@ def test_gap_fill_tier_chunked_matches_perkey(spark):
            .select(cols).orderBy("source", "window_start").toPandas())
     pd.testing.assert_frame_equal(old, new, check_exact=True)
     assert new["is_gap"].any() and (~new["is_gap"]).any()
+
+
+def test_gap_fill_tier_rejects_negative_chunk_intervals(spark):
+    """A negative chunk width would order chunks in reverse time and let
+    interpolation read future points as preceding ones; 0 (per-key windows)
+    and the default keep their results."""
+    pdf = pd.DataFrame(
+        {
+            "source": ["web"] * 3 + ["chat"] * 2,
+            "window_start": pd.to_datetime([0, 60, 240, 0, 180], unit="s"),
+            "cnt": [4, 2, 6, 1, 3],
+            "avg_n_tok": [10.0, 20.0, 50.0, 5.0, 35.0],
+        }
+    )
+    df = spark.createDataFrame(pdf)
+    with pytest.raises(ValueError, match="chunk_intervals"):
+        gapfill.gap_fill_tier(df, 60, chunk_intervals=-1)
+    for kw in ({}, {"chunk_intervals": 0}):
+        out = (gapfill.gap_fill_tier(df, 60, **kw)
+               .orderBy("source", "window_start").toPandas())
+        assert list(out["source"]) == ["chat"] * 4 + ["web"] * 5
+        np.testing.assert_array_equal(out["cnt"], [1, 0, 0, 3, 4, 2, 0, 0, 6])
+        np.testing.assert_allclose(
+            out["avg_n_tok"],
+            [5.0, 15.0, 25.0, 35.0, 10.0, 20.0, 30.0, 40.0, 50.0])
 
 
 def test_dedup_first_and_average(spark):

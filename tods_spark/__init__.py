@@ -15,6 +15,14 @@ Layout:
   sources/     — Iceberg-style partition-overwrite storage over Parquet
   plans/       — checkpoint / lineage table, idempotent resume
   streaming/   — Structured Streaming tier-0 rollup
+
+Importing the package installs ``_zipstamp`` in the importing process: in a
+Python < 3.12 pyspark worker it stops every task from re-reading
+``pyspark.zip``'s directory (see that module).
 """
 
+from tods_spark import _zipstamp
+
 __version__ = "0.1.0"
+
+_zipstamp.install()

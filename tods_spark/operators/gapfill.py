@@ -143,8 +143,13 @@ def gap_fill_tier(
     with one window over that table and an equi-join back on the window's
     own (keys, chunk) partitioning. Results are identical (same global
     prev/next observed points, same formula); parallelism becomes
-    |keys| × |chunks|. ``chunk_intervals=0`` restores the per-key windows.
+    |keys| × |chunks|. ``chunk_intervals=0`` restores the per-key windows;
+    a negative value raises ``ValueError`` (it would order chunks in
+    reverse time and interpolate from future points).
     """
+    if chunk_intervals < 0:
+        raise ValueError(
+            f"chunk_intervals must be >= 0, got {chunk_intervals}")
     span = tier_df.groupBy(*keys).agg(
         F.min(window_col).alias("__lo__"), F.max(window_col).alias("__hi__")
     )

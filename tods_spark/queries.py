@@ -41,6 +41,10 @@ _READ_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
 def _read_cached(spark: SparkSession, path: str) -> DataFrame:
+    """Session-cached ``spark.read.parquet(path)``, for data that is not
+    rewritten within the session: the cached handle pins the file listing
+    and the schema for the session's lifetime, so a rewrite of ``path``
+    surfaces as missing files or stale rows."""
     per_session = _READ_MEMO.setdefault(spark, {})
     df = per_session.get(path)
     if df is None:
