@@ -7,13 +7,14 @@ column names + order-insensitive values. Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -47,7 +48,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
-    spark = get_spark(cores=8, shuffle_partitions=8)
+    spark = get_spark(shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -5,10 +5,11 @@ whole-stage codegen around window stats. Run: python scripts/explain_audit.py
 
 from __future__ import annotations
 
+import os
 import re as _re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _window_partition_keys(spec_args: str) -> list[str]:
@@ -38,7 +39,7 @@ def check(name: str, ok: bool, detail: str = "") -> None:
 
 
 def main() -> None:
-    spark = get_spark(cores=8)
+    spark = get_spark()
 
     # 1. column pruning: the rollup over the token table must NOT read tokens
     import tempfile

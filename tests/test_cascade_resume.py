@@ -1,11 +1,13 @@
 """Resume cost and commit unit of the checkpointed cascade: tier partition
 sets come from directory listings, the Gorilla pack commits with its 1m
-partition, and a refresh keeps the packed tier in step with tier_1m."""
+partition, a refresh keeps the packed tier in step with tier_1m, and a
+week is always derived from all of its member days."""
 
 from __future__ import annotations
 
 import os
 from collections import Counter
+from datetime import date, timedelta
 
 import numpy as np
 import pytest
@@ -14,6 +16,7 @@ from pyspark.sql import functions as F
 from tods_spark import pipeline
 from tods_spark.datagen import token_table
 from tods_spark.operators.compression import unpack_tier
+from tods_spark.operators.rollup import rollup_cascade
 from tods_spark.pipeline import refresh_engine, run_engine
 from tods_spark.plans.checkpoint import CheckpointLog
 from tods_spark.sources.storage import PartitionedTable
@@ -36,6 +39,45 @@ def _packed(spark, base: str) -> list[tuple]:
 
 def _records(base: str) -> list[dict]:
     return CheckpointLog(f"{base}/checkpoint.jsonl").records()
+
+
+def _week_start(day) -> str:
+    """The 1970-01-01-aligned (Thursday) week start of a day."""
+    d = date.fromisoformat(str(day))
+    return str(d - timedelta(days=(d - date(1970, 1, 1)).days % 7))
+
+
+def _tier(spark, base: str, tier: str):
+    return (spark.read.parquet(f"{base}/tier_{tier}").drop("part_key")
+            .toPandas().sort_values(["source", "window_start"],
+                                    ignore_index=True))
+
+
+def _assert_tiers_equal(got, exp, tier: str) -> None:
+    assert len(got) == len(exp), tier
+    assert (got["source"] == exp["source"]).all(), tier
+    assert (got["window_start"] == exp["window_start"]).all(), tier
+    np.testing.assert_array_equal(got["cnt"], exp["cnt"], err_msg=tier)
+    for c in ("sum_n_tok", "min_n_tok", "max_n_tok", "sum_sq_n_tok"):
+        np.testing.assert_allclose(got[c], exp[c], rtol=1e-12,
+                                   err_msg=f"{tier}.{c}")
+    if "qdigest" in exp:
+        for a, b in zip(got["qdigest"], exp["qdigest"]):
+            np.testing.assert_allclose(np.asarray(a, float),
+                                       np.asarray(b, float), rtol=1e-12,
+                                       err_msg=f"{tier}.qdigest")
+
+
+def _assert_weekly_lineage(spark, base: str) -> None:
+    """The latest 1w record of every week (any job) holds that week's
+    rows, and only weeks hold records."""
+    latest = {r["partition"]: r for r in _records(base)
+              if r["tier"] == "1w" and r["status"] == "done"}
+    t1w = spark.read.parquet(f"{base}/tier_1w")
+    per_week = {str(r[0]): r[1] for r in
+                t1w.groupBy("part_key").count().collect()}
+    assert {p: r["rows_out"] for p, r in latest.items()} == per_week
+    assert sum(r["rows_out"] for r in latest.values()) == t1w.count()
 
 
 def _assert_unpack_equals_1m(spark, base: str) -> None:
@@ -169,3 +211,69 @@ def test_partition_listing(spark, tmp_path):
     assert read == set(keys)
     assert not PartitionedTable(spark, str(tmp_path / "none"),
                                 ["k"]).partitions()
+
+
+def test_weekly_resume_rebuilds_weeks_from_all_days(spark, tmp_path):
+    """A build that ends mid-week, resumed over all days with the same job
+    id, rebuilds the straddled week from all its member days: every 1w
+    row equals the cascade of the 1d tier, and each week is recorded once
+    per computation with its own rows."""
+    raw = token_table(spark, 1500, cadence_s=3600).cache()  # ~9 weeks
+    first = raw.agg(F.min("ts")).collect()[0][0].date()
+    cut = first + timedelta(days=10)
+    assert _week_start(cut) != str(cut)  # the build ends mid-week
+    base = str(tmp_path / "eng")
+    run_engine(spark, raw.filter(F.col("ts") < F.lit(str(cut))), base,
+               with_digest=False, pack=False, with_weekly=True)
+    rep = run_engine(spark, raw, base, with_digest=False, pack=False,
+                     with_weekly=True)
+    exp = (rollup_cascade(spark.read.parquet(f"{base}/tier_1d")
+                          .drop("part_key"), "1d", "1w")
+           .toPandas().sort_values(["source", "window_start"],
+                                   ignore_index=True))
+    _assert_tiers_equal(_tier(spark, base, "1w"), exp, "1w")
+    assert int(exp["cnt"].sum()) == 1500
+    _assert_weekly_lineage(spark, base)
+    assert _week_start(cut) in rep["1w"]["computed"]
+    raw.unpersist()
+
+
+def test_weekly_refresh_equals_full_rebuild(spark, tmp_path):
+    """refresh_engine(with_weekly=True) on a late batch that touches some
+    weeks leaves 1m, 1h, 1d and 1w equal to a full rebuild over all rows,
+    digests included, and the 1w lineage is kept per week. A
+    fenced re-run merges nothing and skips the upward partitions it
+    already derived."""
+    raw = token_table(spark, 1500, cadence_s=3600).cache()
+    doc_n = F.substring("doc_id", 5, 15).cast("long")
+    first = raw.agg(F.min("ts")).collect()[0][0].date()
+    lo, hi = str(first + timedelta(days=12)), str(first + timedelta(days=30))
+    is_late = (doc_n % 5 == 0) & (F.col("ts") >= lo) & (F.col("ts") < hi)
+    late = raw.filter(is_late)
+
+    base_r = str(tmp_path / "refresh")
+    run_engine(spark, raw.filter(~is_late), base_r, pack=False,
+               with_weekly=True)
+    rep = refresh_engine(spark, late, base_r, with_weekly=True)
+    assert rep["1m"]["merged"] is True
+    weeks = {_week_start(d) for d in rep["1m"]["refreshed"]}
+    assert sorted(weeks) == rep["1w"]["refreshed"]
+    all_weeks = {p["part_key"] for p in
+                 PartitionedTable(spark, f"{base_r}/tier_1w",
+                                  ["part_key"]).partitions()}
+    assert weeks < all_weeks  # some weeks are left alone
+
+    base_f = str(tmp_path / "full")
+    run_engine(spark, raw, base_f, pack=False, with_weekly=True)
+    for tier in ("1m", "1h", "1d", "1w"):
+        _assert_tiers_equal(_tier(spark, base_r, tier),
+                            _tier(spark, base_f, tier), tier)
+    _assert_weekly_lineage(spark, base_r)
+    _assert_weekly_lineage(spark, base_f)
+
+    rep2 = refresh_engine(spark, late, base_r, with_weekly=True)
+    assert rep2["1m"]["merged"] is False
+    assert not any(rep2[t]["refreshed"] for t in ("1h", "1d", "1w"))
+    _assert_tiers_equal(_tier(spark, base_r, "1w"),
+                        _tier(spark, base_f, "1w"), "1w")
+    raw.unpersist()

@@ -93,8 +93,10 @@ def test_refresh_empty_late_batch_is_identity(spark):
 
 def test_refresh_tier_side_never_shuffles(spark):
     """Scale claim: every join touching the stored tier is a broadcast
-    hash join — the plan has no SortMergeJoin and no exchange whose
-    input is the tier scan (only the late batch's aggregate shuffles)."""
+    hash join — the plan has no SortMergeJoin. Untouched tier rows never
+    cross an exchange; only the tier rows in affected windows, at most
+    one per late window, join the late partials in one late-sized
+    exchange (the merge_states group-by)."""
     pdf = _events(500)
     df = spark.createDataFrame(pdf)
     tier = rollup.rollup_raw(

@@ -156,12 +156,12 @@ def test_merge_digest_series_matches_per_row_kernel():
 def test_partial_digest_rollup_equivalent(spark):
     """Map-side partial digest path: identical algebraic state to the
     collect_list path, digests rank-equivalent (exact at small windows)."""
-    from tods_spark.operators.rollup import rollup_raw_partial_digest
+    from tods_spark.operators.rollup import rollup_raw, rollup_raw_partial_digest
 
     n = 3000
     raw = token_table(spark, n, partitions=6)
     a = (
-        full_cascade(raw, with_digest=True, digest_mode="collect")["1m"]
+        rollup_raw(raw, "1m", with_digest=True)
         .orderBy("source", "window_start")
         .toPandas()
     )

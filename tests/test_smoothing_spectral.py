@@ -101,6 +101,41 @@ def test_holt_winters_auto_spark_matches_local(spark):
     )
 
 
+def test_holt_winters_auto_twin_takes_the_ses_branch(spark, tmp_path):
+    """A series shorter than 2m points is SES-smoothed by
+    holt_winters_auto; the DuckDB twin of holt_winters_auto_1d must take
+    the same branch (it used to run the optimizer and emit NaN) and still
+    replay the optimizer for a long series: values equal to the last bit."""
+    import duckdb
+
+    from tods_spark.queries import ORACLES, QUERIES
+
+    rng = np.random.default_rng(7)
+    t0 = pd.Timestamp("2024-01-01")
+    minutes = np.r_[np.zeros(2, int), [1, 2, 4], np.arange(40)]
+    pd.DataFrame({
+        "event_id": np.arange(len(minutes)),
+        "ts": t0 + pd.to_timedelta(minutes * 60 + rng.integers(0, 60, len(minutes)), "s"),
+        "user_id": np.zeros(len(minutes), int),
+        "event_type": ["short"] * 5 + ["long"] * 40,
+        "value": rng.normal(50, 10, len(minutes)).round(2),
+        "props": ["{}"] * len(minutes),
+    }).to_parquet(tmp_path / "events.parquet", coerce_timestamps="us")
+
+    name = "holt_winters_auto_1d"
+    got = QUERIES[name](spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
+    exp = con.sql(ORACLES[name]).df()
+    got, exp = (d.sort_values(["event_type", "window_start"], ignore_index=True)
+                for d in (got, exp))
+    assert (got.event_type == "short").sum() == 4  # < 2m = 6 points
+    assert not exp["v_hw"].isna().any()
+    assert (got["window_start"] == exp["window_start"]).all()
+    np.testing.assert_array_equal(got["v_hw"].to_numpy(float),
+                                  exp["v_hw"].to_numpy(float))
+
+
 def test_spectral_residual_matches_reference_kernel(spark):
     rng = np.random.default_rng(4)
     y = np.sin(np.arange(64) / 5.0) * 10 + rng.normal(0, 0.5, 64)

@@ -194,43 +194,18 @@ def rollup_raw_partial_digest(
     # second exchange)
     width = df.sparkSession.sparkContext.defaultParallelism
     part = part.repartition(width, *key_list, "window_start")
-
-    @F.pandas_udf("array<double>")
-    def merge(states: pd.Series) -> pd.Series:
-        return pd.Series(sketches.merge_digest_series(states))
-
-    out = (
-        part.groupBy(*key_list, "window_start")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum_n_tok").alias("sum_n_tok"),
-            F.min("min_n_tok").alias("min_n_tok"),
-            F.max("max_n_tok").alias("max_n_tok"),
-            F.sum("sum_sq_n_tok").alias("sum_sq_n_tok"),
-            F.collect_list(F.struct("qdigest", "cnt")).alias("_dstate"),
-        )
-        .withColumn("avg_n_tok", F.col("sum_n_tok") / F.col("cnt"))
-        .withColumn("qdigest", merge("_dstate"))
-        .drop("_dstate")
-    )
-    return out.select(
-        *key_list, "window_start", F.lit(tier).alias("tier"), *AGG_COLS,
-        "qdigest",
-    )
+    return merge_states(part, key_list, tier)
 
 
-def rollup_cascade(
-    tier_df: DataFrame,
-    from_tier: str,
-    to_tier: str,
-    keys: tuple[str, ...] = ("source",),
-) -> DataFrame:
-    """tier N → tier N+1 by re-aggregating stored state (algebraic compose;
-    digests merged via the weighted-grid kernel). Never touches raw."""
-    assert TIER_SECONDS[to_tier] % TIER_SECONDS[from_tier] == 0
-    has_digest = "qdigest" in tier_df.columns
-    parent = F.window("window_start", TIER_INTERVAL[to_tier])["start"]
-    gb = tier_df.groupBy(*keys, parent.alias("window_start"))
+def merge_states(df: DataFrame, keys, tier: str) -> DataFrame:
+    """Compose the tier states that share (keys, window_start) into one
+    row per window: cnt/sum/sum_sq add, min/max fold, avg is re-derived
+    and digests merge through `sketches.merge_digest_series`, weighted by
+    each state's cnt. Every batch path that combines tier state (the
+    raw→1m partial reduce, the cascade, the late-data refresh) goes
+    through here, so the tiers agree by construction. `df` needs keys,
+    window_start and the five algebraic columns; qdigest is optional."""
+    has_digest = "qdigest" in df.columns
     aggs = [
         F.sum("cnt").alias("cnt"),
         F.sum("sum_n_tok").alias("sum_n_tok"),
@@ -243,7 +218,7 @@ def rollup_cascade(
         aggs.append(
             F.collect_list(F.struct("qdigest", "cnt")).alias("_dstate")
         )
-    out = gb.agg(*aggs).withColumn(
+    out = df.groupBy(*keys, "window_start").agg(*aggs).withColumn(
         "avg_n_tok", F.col("sum_n_tok") / F.col("cnt")
     )
     if has_digest:
@@ -253,10 +228,24 @@ def rollup_cascade(
             return pd.Series(sketches.merge_digest_series(states))
 
         out = out.withColumn("qdigest", merge("_dstate")).drop("_dstate")
-    cols = [*keys, "window_start", F.lit(to_tier).alias("tier"), *AGG_COLS]
-    if has_digest:
-        cols.append("qdigest")
-    return out.select(*cols)
+    return out.select(
+        *keys, "window_start", F.lit(tier).alias("tier"), *AGG_COLS,
+        *(["qdigest"] if has_digest else []),
+    )
+
+
+def rollup_cascade(
+    tier_df: DataFrame,
+    from_tier: str,
+    to_tier: str,
+    keys: tuple[str, ...] = ("source",),
+) -> DataFrame:
+    """tier N → tier N+1 by re-aggregating stored state (algebraic compose;
+    digests merged via the weighted-grid kernel). Never touches raw."""
+    assert TIER_SECONDS[to_tier] % TIER_SECONDS[from_tier] == 0
+    parent = F.window("window_start", TIER_INTERVAL[to_tier])["start"]
+    return merge_states(tier_df.withColumn("window_start", parent), keys,
+                        to_tier)
 
 
 def variance_from_state(df: DataFrame) -> DataFrame:
@@ -274,22 +263,15 @@ def full_cascade(
     keys: tuple[str, ...] = ("source",),
     value_col: str = "n_tok",
     with_digest: bool = False,
-    digest_mode: str = "partial",
 ) -> dict[str, DataFrame]:
-    """Run raw → 1m → 1h → 1d; returns {tier: DataFrame}.
-
-    digest_mode (when with_digest):
-      * "partial" (default) — map-side partial digests; the raw→1m shuffle
-        ships O(#batches × windows) digest rows, not O(rows) raw values.
-        The only choice that survives 10^12-row inputs.
-      * "collect" — collect_list of raw values per window, digest built
-        after the shuffle; kept as the equivalence baseline for tests.
-    """
-    if with_digest and digest_mode == "partial":
+    """Run raw → 1m → 1h → 1d; returns {tier: DataFrame}. Digests, when
+    asked for, come from map-side partials (rollup_raw_partial_digest):
+    the raw→1m shuffle ships O(#batches × windows) digest rows, not
+    O(rows) raw values. rollup_raw(with_digest=True) is its test oracle."""
+    if with_digest:
         t1m = rollup_raw_partial_digest(raw, "1m", value_col=value_col, keys=keys)
     else:
-        t1m = rollup_raw(raw, "1m", value_col=value_col, keys=keys,
-                         with_digest=with_digest)
+        t1m = rollup_raw(raw, "1m", value_col=value_col, keys=keys)
     t1h = rollup_cascade(t1m, "1m", "1h", keys=keys)
     t1d = rollup_cascade(t1h, "1h", "1d", keys=keys)
     return {"1m": t1m, "1h": t1h, "1d": t1d}
@@ -338,101 +320,46 @@ def refresh_tier(
 ) -> DataFrame:
     """Incremental continuous-aggregate refresh on late-arriving raw rows
     (the TimescaleDB invalidation-log pattern): aggregate ONLY the late
-    batch to tier partials, then merge them into the stored tier by the
-    algebraic composition (cnt/sum add, min/max fold, avg re-derived).
+    batch to tier partials, then merge them into the stored tier with
+    `merge_states`, the composition every other tier path uses.
     Equivalent to recomputing the tier from raw ∪ late — proven by the
     oracle twin — at the cost of the late batch, never a raw rescan.
 
     Scale shape (10^12-row raw, tier orders of magnitude smaller but
     still too big to shuffle casually): the late batch is one shuffle on
-    (keys, window) with map-side combine; everything touching the TIER
-    is a broadcast hash join against the late partials or their key set —
-      * untouched rows: LEFT ANTI broadcast(affected windows),
-      * affected rows:  INNER broadcast(partials), merged column-wise,
-      * brand-new windows: partials LEFT ANTI broadcast(affected ∩ tier —
-        computed from the inner side, itself late-sized).
-    The tier is scanned once and never exchanged; in an Iceberg
-    deployment the untouched branch is elided entirely by dynamic
-    partition overwrite (only affected partitions rewrite — the
+    (keys, window) with map-side combine; the tier is split by broadcast
+    hash joins against the late partials' window set —
+      * untouched rows: LEFT ANTI broadcast(affected windows), never
+        exchanged;
+      * affected rows: LEFT SEMI broadcast(affected windows), unioned with
+        the late partials and merged by `merge_states`. Only these rows
+        cross an exchange, and it is late-sized: at most one tier row per
+        late window. Windows the tier has never seen come out of the same
+        merge, with the late partial as their only state.
+    In an Iceberg deployment the untouched branch is elided entirely by
+    dynamic partition overwrite (only affected partitions rewrite — the
     checkpoint/lineage story in plans/checkpoint.py applies per refresh).
     """
-    has_digest = "qdigest" in tier_df.columns
+    dig = ["qdigest"] if "qdigest" in tier_df.columns else []
+    state = [*keys, "window_start", "cnt", "sum_n_tok", "min_n_tok",
+             "max_n_tok", "sum_sq_n_tok", *dig]
     late = rollup_raw(
         late_raw, tier, ts_col=ts_col, value_col=value_col, keys=keys,
-        with_digest=has_digest,
-    ).select(
-        *keys,
-        "window_start",
-        F.col("cnt").alias("_l_cnt"),
-        F.col("sum_n_tok").alias("_l_sum"),
-        F.col("min_n_tok").alias("_l_min"),
-        F.col("max_n_tok").alias("_l_max"),
-        F.col("sum_sq_n_tok").alias("_l_sq"),
-        *([F.col("qdigest").alias("_l_dig")] if has_digest else []),
-    )
-    dig = ["qdigest"] if has_digest else []
-    if has_digest:
-        # two-state digest merge (the rollup_cascade kernel, arity 2):
-        # weights are the PRE-merge counts of each side
-        @F.pandas_udf("array<double>")
-        def merge2(a: pd.Series, ca: pd.Series, b: pd.Series,
-                   cb: pd.Series) -> pd.Series:
-            return pd.Series(
-                [
-                    sketches.merge_digests(
-                        [np.asarray(x, float), np.asarray(y, float)],
-                        np.asarray([wx, wy], float),
-                    )
-                    for x, wx, y, wy in zip(a, ca, b, cb)
-                ]
-            )
-
+        with_digest=bool(dig),
+    ).select(*state)
+    windows = F.broadcast(late.select(*keys, "window_start"))
     on = [*keys, "window_start"]
-    # tier rows in affected windows, merged with their late partial
-    touched = (
-        tier_df.join(F.broadcast(late), on, "inner")
-        .select(
-            *on,
-            F.lit(tier).alias("tier"),
-            (F.col("cnt") + F.col("_l_cnt")).alias("cnt"),
-            (F.col("sum_n_tok") + F.col("_l_sum")).alias("sum_n_tok"),
-            F.least("min_n_tok", "_l_min").alias("min_n_tok"),
-            F.greatest("max_n_tok", "_l_max").alias("max_n_tok"),
-            (F.col("sum_sq_n_tok") + F.col("_l_sq")).alias("sum_sq_n_tok"),
-            *(
-                [merge2("qdigest", "cnt", "_l_dig", "_l_cnt")
-                 .alias("qdigest")]
-                if has_digest
-                else []
-            ),
-        )
-        .withColumn("avg_n_tok", F.col("sum_n_tok") / F.col("cnt"))
-        .select(*on, "tier", *AGG_COLS, *dig)
-    )
-    # windows the tier has never seen: the late partial IS the tier row
-    fresh = (
-        late.join(F.broadcast(touched.select(*on)), on, "left_anti")
-        .select(
-            *on,
-            F.lit(tier).alias("tier"),
-            F.col("_l_cnt").alias("cnt"),
-            F.col("_l_sum").alias("sum_n_tok"),
-            F.col("_l_min").alias("min_n_tok"),
-            F.col("_l_max").alias("max_n_tok"),
-            (F.col("_l_sum") / F.col("_l_cnt")).alias("avg_n_tok"),
-            F.col("_l_sq").alias("sum_sq_n_tok"),
-            *([F.col("_l_dig").alias("qdigest")] if has_digest else []),
-        )
-        .select(*on, "tier", *AGG_COLS, *dig)
-    )
+    affected = tier_df.join(windows, on, "left_semi").select(*state)
     # rebuilt from state so the input tier needs only keys + window + the
     # five algebraic columns (derived tier/avg columns are optional)
     untouched = (
-        tier_df.join(F.broadcast(late.select(*on)), on, "left_anti")
+        tier_df.join(windows, on, "left_anti")
         .withColumn("avg_n_tok", F.col("sum_n_tok") / F.col("cnt"))
         .select(*on, F.lit(tier).alias("tier"), *AGG_COLS, *dig)
     )
-    return untouched.unionByName(touched).unionByName(fresh)
+    return untouched.unionByName(
+        merge_states(affected.unionByName(late), keys, tier)
+    )
 
 
 def rollup_distinct(

@@ -11,20 +11,27 @@ on a cluster).
       → (optional) small-file compaction         sources/storage
       → (optional) retention expiry per tier     plans/retention
 
-Every stage is resumable: re-running `run_engine` after a crash skips
-completed (tier, partition) pairs via the checkpoint log and converges to
-identical bytes (dynamic partition overwrite). The pack is written inside
-the 1m stage, before the 1m checkpoint marks, so a 1m partition and its
-packed day commit together. A resume pays for the partitions still to do:
-the raw partition set costs one count, each cascade tier lists the
-directory of the tier below, and a tier with nothing to do opens no table.
-`refresh_engine` is the late-data half: it merges a late batch into the
-affected 1m days, repacks them and re-derives 1h and 1d upward.
+Every tier is written by `plans.checkpoint.run_tier`, the one place that
+maps input partitions to output partitions: an input day feeds the output
+partition that starts its epoch-aligned tier window (the day itself up to
+1d, the week's Thursday for 1w), and an output partition is always
+recomputed from all its member days. Every stage is resumable: re-running
+`run_engine` after a crash skips completed (tier, partition) pairs via the
+checkpoint log and converges to identical bytes (dynamic partition
+overwrite); a week that gained days since it was written is rebuilt. The
+pack is written inside the 1m stage, before the 1m checkpoint marks, so a
+1m partition and its packed day commit together. A resume pays for the
+partitions still to do: the raw partition set costs one count, each
+cascade tier lists the directory of the tier below, and a tier with
+nothing to do opens no table. `refresh_engine` is the late-data half: it
+merges a late batch into the affected 1m days, repacks them and runs the
+same upward cascade over the output partitions those days feed.
 """
 
 from __future__ import annotations
 
 from datetime import datetime
+from functools import partial
 
 from pyspark.sql import SparkSession, functions as F
 
@@ -38,6 +45,8 @@ from tods_spark.plans.checkpoint import CheckpointLog, run_tier
 from tods_spark.plans.retention import DEFAULT_HORIZON_DAYS, expire_partitions
 from tods_spark.sources.storage import PartitionedTable
 
+CASCADE = (("1m", "1h"), ("1h", "1d"), ("1d", "1w"))
+
 
 def pack_days(packed_table: PartitionedTable, t1m, keys) -> None:
     """Gorilla-pack the 1m rows in `t1m` into the day partitions of
@@ -46,6 +55,19 @@ def pack_days(packed_table: PartitionedTable, t1m, keys) -> None:
         "part_key", F.date_format("chunk_start", "yyyy-MM-dd")
     )
     packed_table.overwrite_partitions(packed)
+
+
+def _cascade_up(spark, base_dir, ckpt, job_id, keys, with_weekly,
+                **run_args):
+    """The upward cascade 1m → 1h → 1d (→ 1w): one run_tier per tier over
+    the table of the tier below. Yields (tier, table, run_tier report)."""
+    below = PartitionedTable(spark, f"{base_dir}/tier_1m", ["part_key"])
+    for lo, hi in (CASCADE if with_weekly else CASCADE[:2]):
+        table = PartitionedTable(spark, f"{base_dir}/tier_{hi}", ["part_key"])
+        compute = partial(rollup_cascade, from_tier=lo, to_tier=hi, keys=keys)
+        yield hi, table, run_tier(spark, below, compute, table, ckpt, job_id,
+                                  hi, in_ts_col="window_start", **run_args)
+        below = table
 
 
 def run_engine(
@@ -83,17 +105,12 @@ def run_engine(
             keys=keys, order_col="doc_id",
         )
 
-    # digest path: map-side partials by default — the collect_list variant
-    # ships every raw value through the raw→1m shuffle (O(rows)); partials
-    # ship O(#batches × windows) digest rows. See rollup.full_cascade.
-    if with_digest:
-        raw_to_1m = lambda df: rollup_raw_partial_digest(  # noqa: E731
-            df, "1m", value_col=value_col, keys=keys
-        )
-    else:
-        raw_to_1m = lambda df: rollup_raw(  # noqa: E731
-            df, "1m", value_col=value_col, keys=keys, with_digest=False
-        )
+    # digests come from map-side partials: O(#batches × windows) digest
+    # rows through the raw→1m shuffle, not O(rows) raw values
+    raw_to_1m = partial(
+        rollup_raw_partial_digest if with_digest else rollup_raw,
+        tier="1m", value_col=value_col, keys=keys,
+    )
     t1m_table = PartitionedTable(spark, f"{base_dir}/tier_1m", ["part_key"])
     packed_table = PartitionedTable(spark, f"{base_dir}/tier_1m_gorilla",
                                     ["part_key"])
@@ -104,33 +121,12 @@ def run_engine(
         else None,
     )
 
-    t1h_table = PartitionedTable(spark, f"{base_dir}/tier_1h", ["part_key"])
-    report["1h"] = run_tier(
-        spark, t1m_table,
-        lambda df: rollup_cascade(df, "1m", "1h", keys=keys),
-        t1h_table, ckpt, job_id, "1h", in_ts_col="window_start",
-        verify_resume=verify_resume,
-    )
-
-    t1d_table = PartitionedTable(spark, f"{base_dir}/tier_1d", ["part_key"])
-    report["1d"] = run_tier(
-        spark, t1h_table,
-        lambda df: rollup_cascade(df, "1h", "1d", keys=keys),
-        t1d_table, ckpt, job_id, "1d", in_ts_col="window_start",
-        verify_resume=verify_resume,
-    )
-
-    tier_tables = [("1m", t1m_table), ("1h", t1h_table), ("1d", t1d_table)]
-    if with_weekly:
-        t1w_table = PartitionedTable(spark, f"{base_dir}/tier_1w",
-                                     ["part_key"])
-        report["1w"] = run_tier(
-            spark, t1d_table,
-            lambda df: rollup_cascade(df, "1d", "1w", keys=keys),
-            t1w_table, ckpt, job_id, "1w", in_ts_col="window_start",
-            verify_resume=verify_resume,
-        )
-        tier_tables.append(("1w", t1w_table))
+    tier_tables = [("1m", t1m_table)]
+    for tier, table, rep in _cascade_up(spark, base_dir, ckpt, job_id, keys,
+                                        with_weekly,
+                                        verify_resume=verify_resume):
+        report[tier] = rep
+        tier_tables.append((tier, table))
 
     if compact:
         # maintenance pass: merge per-run small files tier by tier (no-op
@@ -160,13 +156,14 @@ def refresh_engine(
     """Late-data refresh of an existing tier-table tree (the invalidation
     half of the continuous-aggregate lifecycle; `run_engine` is the build
     half): merge the late batch into tier_1m incrementally
-    (rollup.refresh_tier — tier side broadcast-only, digests merged),
-    then re-cascade ONLY the affected day partitions upward through
-    1h / 1d (and the affected epoch-weeks through 1w), overwriting just
-    those partitions and appending fresh lineage records per partition.
+    (rollup.refresh_tier — untouched tier rows broadcast-only, digests
+    merged), repack the affected days, then run the same upward cascade
+    as `run_engine`, restricted to the output partitions the affected
+    days feed: each affected 1h/1d day and (with_weekly) each affected
+    epoch-week is recomputed from all its member days and marked once.
 
     Cost model at 10^12 rows: late-batch aggregate (late-sized shuffle)
-    + per-affected-day partition rewrites — the unaffected history is
+    + per-affected-partition rewrites — the unaffected history is
     never read (partition pruning on part_key) and never rewritten.
 
     Delivery contract: the MERGE is incremental, so each late batch must
@@ -181,12 +178,14 @@ def refresh_engine(
     dates and the partitions already marked done for (job_id, "1m").
     (A subset fence would re-merge — double-counting — after a crash
     mid-mark-loop.) On a fenced re-run, marks missing for some dates are
-    backfilled from a read-back of the written partitions, and the
-    (idempotent) upward cascade is re-derived — so retrying a refresh
-    that crashed at ANY point after the 1m write commit is safe. Re-delivering a batch under
-    a NEW job_id is the caller's bug, the same offset-commit discipline
-    any log-consumer job has. Upstream re-delivery within a stream is
-    already handled by streaming.streaming_dedup.
+    backfilled from a read-back of the written partitions, the days are
+    repacked, and the upward cascade resumes like any run_tier: output
+    partitions already marked done for this job_id are skipped, the rest
+    are derived — so retrying a refresh that crashed at ANY point after
+    the 1m write commit is safe. Re-delivering a batch under a NEW job_id
+    is the caller's bug, the same offset-commit discipline any
+    log-consumer job has. Upstream re-delivery within a stream is already
+    handled by streaming.streaming_dedup.
 
     Returns {tier: {"refreshed": [part_keys], "rows_out": n}} with
     "merged": False on a fenced re-run.
@@ -195,54 +194,32 @@ def refresh_engine(
     from tods_spark.plans.checkpoint import _per_partition_stats
 
     ckpt = CheckpointLog(f"{base_dir}/checkpoint.jsonl")
-    report: dict = {}
     dates = sorted(
         r["d"]
         for r in late_df.select(
             F.date_format("ts", "yyyy-MM-dd").alias("d")
         ).distinct().collect()
     )
+    t1m_table = PartitionedTable(spark, f"{base_dir}/tier_1m", ["part_key"])
 
-    def _mark_from_readback(table: PartitionedTable, tier: str,
-                            parts, **extra) -> int:
+    def _mark_from_readback(parts, **extra) -> int:
         # fingerprint the WRITTEN bytes (pruned read-back), not a plan
         # recompute: double-precision partials can differ in the last ulp
         # between the stats job and the write job's re-execution, which
         # would make a later verify_resume spuriously demote refreshed
         # partitions as drifted (run_tier uses the same discipline)
-        written = table.read().filter(F.col("part_key").isin(parts))
+        written = t1m_table.read().filter(F.col("part_key").isin(parts))
         stats = _per_partition_stats(written, "part_key")
         total = 0
         for p in parts:
             n, fp = stats.get(p, (0, 0))
             total += n
             ckpt.mark(
-                job_id=job_id, tier=tier, partition=p, status="done",
+                job_id=job_id, tier="1m", partition=p, status="done",
                 rows_out=n, fingerprint=fp, refresh=True, **extra,
             )
         return total
 
-    def _overwrite(table: PartitionedTable, tier: str, df, parts,
-                   commit_mark: bool = False):
-        out = df.withColumn(
-            "part_key", F.date_format("window_start", "yyyy-MM-dd")
-        ).filter(F.col("part_key").isin(parts))
-        table.overwrite_partitions(out)
-        if commit_mark:
-            # batch-level write-committed record, appended IMMEDIATELY
-            # after the overwrite returns and BEFORE the stats read-back
-            # (r7, ADVICE): _mark_from_readback runs a full Spark job
-            # first, so a crash inside that window used to leave ZERO
-            # marks — the retry saw no overlap and re-merged the already-
-            # merged batch. The marker lives under its own tier key
-            # ("1m_commit") so done_partitions(job_id, "1m") and the
-            # build-path run_tier bookkeeping never see it.
-            ckpt.mark(job_id=job_id, tier=f"{tier}_commit",
-                      partition="_batch", status="done", refresh=True)
-        total = _mark_from_readback(table, tier, parts)
-        report[tier] = {"refreshed": parts, "rows_out": total}
-
-    t1m_table = PartitionedTable(spark, f"{base_dir}/tier_1m", ["part_key"])
     already = ckpt.done_partitions(job_id, "1m")
     committed = ckpt.done_partitions(job_id, "1m_commit")
     if (set(dates) & already) or committed:
@@ -252,25 +229,37 @@ def refresh_engine(
         # overlapping mark OR the commit record proves the merge is on
         # disk; re-merging would double-count. Backfill marks lost to a
         # crash after the commit point (whether before the first mark or
-        # mid-mark-loop), then only re-derive the idempotent upward
-        # cascade.
+        # mid-mark-loop); the repack and upward cascade below resume.
         missing = sorted(set(dates) - already)
         recovered = (
-            _mark_from_readback(t1m_table, "1m", missing, recovered=True)
-            if missing else 0
+            _mark_from_readback(missing, recovered=True) if missing else 0
         )
-        report["1m"] = {"refreshed": missing, "rows_out": recovered,
-                        "merged": False}
+        report = {"1m": {"refreshed": missing, "rows_out": recovered,
+                         "merged": False}}
     else:
         refreshed = refresh_tier(
             t1m_table.read().drop("part_key"), late_df, "1m",
             value_col=value_col, keys=keys,
-        )
-        _overwrite(t1m_table, "1m", refreshed, dates, commit_mark=True)
-        report["1m"]["merged"] = True
+        ).withColumn(
+            "part_key", F.date_format("window_start", "yyyy-MM-dd")
+        ).filter(F.col("part_key").isin(dates))
+        t1m_table.overwrite_partitions(refreshed)
+        # batch-level write-committed record, appended IMMEDIATELY after
+        # the overwrite returns and BEFORE the stats read-back (r7,
+        # ADVICE): _mark_from_readback runs a full Spark job first, so a
+        # crash inside that window used to leave ZERO marks — the retry
+        # saw no overlap and re-merged the already-merged batch. The
+        # marker lives under its own tier key ("1m_commit") so
+        # done_partitions(job_id, "1m") and the build-path run_tier
+        # bookkeeping never see it.
+        ckpt.mark(job_id=job_id, tier="1m_commit", partition="_batch",
+                  status="done", refresh=True)
+        report = {"1m": {"refreshed": dates,
+                         "rows_out": _mark_from_readback(dates),
+                         "merged": True}}
 
-    # repack the refreshed days from the merged 1m tier; like the upward
-    # cascade below this is idempotent, so a fenced re-run repeats it
+    # repack the refreshed days from the merged 1m tier; this is
+    # idempotent, so a fenced re-run repeats it
     packed_table = PartitionedTable(spark, f"{base_dir}/tier_1m_gorilla",
                                     ["part_key"])
     if packed_table.exists():
@@ -280,47 +269,8 @@ def refresh_engine(
             keys,
         )
 
-    # upward: a 1h/1d window lies within one day, so recomputing the
-    # affected DAYS of tier N+1 from the refreshed DAYS of tier N is
-    # complete — partition-pruned reads on both sides
-    t1h_table = PartitionedTable(spark, f"{base_dir}/tier_1h", ["part_key"])
-    in1m = t1m_table.read().filter(F.col("part_key").isin(dates)).drop(
-        "part_key"
-    )
-    _overwrite(t1h_table, "1h", rollup_cascade(in1m, "1m", "1h", keys=keys),
-               dates)
-
-    t1d_table = PartitionedTable(spark, f"{base_dir}/tier_1d", ["part_key"])
-    in1h = t1h_table.read().filter(F.col("part_key").isin(dates)).drop(
-        "part_key"
-    )
-    _overwrite(t1d_table, "1d", rollup_cascade(in1h, "1h", "1d", keys=keys),
-               dates)
-
-    if with_weekly:
-        # a 1w window spans 7 epoch-aligned days: recompute each affected
-        # week from ALL its member days of the 1d tier (pruned read)
-        from datetime import date, timedelta
-
-        week_days: set[str] = set()
-        week_parts: set[str] = set()
-        for d in dates:
-            dd = date.fromisoformat(d)
-            # epoch (1970-01-01, a Thursday) alignment: days since epoch
-            epoch_off = (dd - date(1970, 1, 1)).days
-            start = dd - timedelta(days=epoch_off % 7)
-            week_parts.add(start.isoformat())
-            week_days.update(
-                (start + timedelta(days=i)).isoformat() for i in range(7)
-            )
-        t1w_table = PartitionedTable(
-            spark, f"{base_dir}/tier_1w", ["part_key"]
-        )
-        in1d = t1d_table.read().filter(
-            F.col("part_key").isin(sorted(week_days))
-        ).drop("part_key")
-        _overwrite(
-            t1w_table, "1w", rollup_cascade(in1d, "1d", "1w", keys=keys),
-            sorted(week_parts),
-        )
+    for tier, _table, rep in _cascade_up(spark, base_dir, ckpt, job_id, keys,
+                                         with_weekly, changed=dates):
+        report[tier] = {"refreshed": rep["computed"],
+                        "rows_out": rep["rows_out"]}
     return report

@@ -8,25 +8,29 @@ on restart; this is net-new engine design (SURVEY.md §4 "incremental /
 resumable execution: must DESIGN").
 
 Design:
-  * work is partitioned by a coarse PARTITION KEY (default: the day of the
-    tier window) — the unit of skip/recompute;
-  * the checkpoint table holds one JSON-lines record per (job_id, tier,
-    partition), each carrying THAT partition's rows_in, rows_out and
-    fingerprint (order-insensitive xxhash64 sum of the partition's written
-    rows — computed from a read-back of the written bytes, so resume-time
-    drift in any single partition is detectable), plus status and wall
-    seconds;
+  * work is partitioned by DAY — the unit of skip/recompute. An input day
+    feeds the output partition that starts its epoch-aligned tier window
+    (`span_start`: the day itself for tiers up to 1d, the week's Thursday
+    for 1w); the input days feeding an output partition are its members,
+    and an output partition is only ever computed from all of them;
+  * the checkpoint table holds one JSON-lines record per computed (job_id,
+    tier, output partition), each carrying THAT partition's member days
+    (`inputs`), rows_in, rows_out and fingerprint (order-insensitive
+    xxhash64 sum of the partition's written rows — computed from a
+    read-back of the written bytes, so resume-time drift in any single
+    partition is detectable), plus status and wall seconds; a done
+    partition whose input gained a member day goes back to todo;
   * `run_tier` plans the partition set without scanning history: a raw
     DataFrame input gives its partition set and every partition's rows_in
     in one groupBy(part_key).count() job; a tier input is the
     PartitionedTable below, whose partition set is its directory listing
-    and whose rows_in are the Parquet footer counts of the todo partitions
-    (no Spark job); the table is opened only when some partition is still
-    to do;
-  * partitions already 'done' for (job_id, tier) are filtered OUT of the
-    input (partition pruning — the filter lands on the parquet scan), the
-    rest are computed and written with dynamic partition overwrite
-    (idempotent), then marked done;
+    and whose rows_in are the Parquet footer counts of the member days
+    read (no Spark job); the table is opened only when some partition is
+    still to do;
+  * the member days of the todo output partitions are the only input read
+    (partition pruning — the filter lands on the parquet scan); the todo
+    partitions are written with dynamic partition overwrite (idempotent),
+    then marked done;
   * a second output of a tier (the 1m tier's Gorilla pack) is written from
     the read-back of exactly the todo partitions, after the tier write and
     before the marks; it keeps no records of its own, so the tier's record
@@ -49,10 +53,14 @@ import json
 import os
 import time
 import uuid
+from datetime import date, timedelta
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from tods_spark.operators.rollup import TIER_SECONDS
 from tods_spark.sources.storage import PartitionedTable
+
+_EPOCH = date(1970, 1, 1)
 
 
 class CheckpointLog:
@@ -106,6 +114,16 @@ def _per_partition_stats(df: DataFrame, partition_col: str) -> dict:
     }
 
 
+def span_start(day: str, tier: str) -> str:
+    """The output partition that input day `day` (yyyy-MM-dd) feeds in
+    `tier`: the epoch-aligned start day of the tier window holding it —
+    the day itself for tiers of one day or less, the Thursday that starts
+    its 1970-01-01-aligned week for 1w."""
+    span = max(1, TIER_SECONDS[tier] // 86400)
+    d = date.fromisoformat(day)
+    return (d - timedelta(days=(d - _EPOCH).days % span)).isoformat()
+
+
 def run_tier(
     spark: SparkSession,
     source: DataFrame | PartitionedTable,
@@ -119,19 +137,25 @@ def run_tier(
     partition_col: str = "part_key",
     verify_resume: bool = False,
     also_write=None,  # (DataFrame) -> None : output committed with the tier
+    changed=None,  # iterable of input days : plan only what they feed
 ) -> dict:
     """Run one rollup tier with per-partition lineage + resume.
 
-    The coarse partition key is the DAY of the event time — derived from
-    `in_ts_col` on the input and `out_ts_col` on the output (a tier never
-    maps an input day to a different output day for tiers ≤ 1d).
+    Partitions are days. Input day d (of `in_ts_col`) feeds the output
+    partition `span_start(d, tier)` (a day of `out_ts_col`); the days that
+    feed an output partition are its members. A todo output partition is
+    recomputed from all its members, written, and marked once with them
+    (`inputs`); a done one goes back to todo when the input holds a member
+    it was not computed from (a resume that adds days to a week rebuilds
+    the week).
 
-    `source` is either a DataFrame (raw rows: one groupBy job gives the
-    partition set and every partition's rows_in) or the PartitionedTable
-    of the tier below, partitioned by the day of `in_ts_col` under
-    `partition_col`. A table's partition set is its directory listing, its
-    rows_in the footer counts of the todo partitions, and the table is
-    opened only when some partition is still to do.
+    `source` is a DataFrame of raw rows (one groupBy job gives the day set
+    and every day's row count) or the PartitionedTable of the tier below,
+    partitioned by day under `partition_col` (its directory listing gives
+    the day set, the footers of the member days read their row counts, and
+    it is opened only when some output partition is to do). `changed`,
+    when given, restricts the plan to the output partitions those input
+    days feed (the late-data refresh passes the days it rewrote).
 
     `also_write`, when given, receives the pruned read-back of the
     partitions just written and writes a second output from it before
@@ -149,44 +173,53 @@ def run_tier(
     Returns {"computed": [...], "skipped": [...], "drifted": [...],
     "rows_out": n}.
     """
-    in_expr = F.date_format(in_ts_col, "yyyy-MM-dd")
-    out_expr = F.date_format(out_ts_col, "yyyy-MM-dd")
-
     if isinstance(source, PartitionedTable):
-        # the partition set is the directory listing: no Spark job, and the
+        # the day set is the directory listing: no Spark job, and the
         # table is opened below only when some partition is still to do
         dirs = {v[partition_col]: path for path, v in source.partition_dirs()}
-        all_parts = sorted(dirs)
+        days = sorted(dirs)
     else:
-        # one job gives the partition set and every partition's rows_in
-        inp = source.withColumn(partition_col, in_expr)
-        rows_in = {
+        # one job gives the day set and every day's row count
+        inp = source.withColumn(
+            partition_col, F.date_format(in_ts_col, "yyyy-MM-dd")
+        )
+        day_rows = {
             r[partition_col]: int(r["count"])
             for r in inp.groupBy(partition_col).count().collect()
         }
-        all_parts = sorted(rows_in)
-    done = ckpt.done_partitions(job_id, tier)
-    todo = [p for p in all_parts if p not in done]
-    skipped = [p for p in all_parts if p in done]
+        days = sorted(day_rows)
+    members: dict[str, list[str]] = {}
+    for d in days:
+        members.setdefault(span_start(d, tier), []).append(d)
+    if changed is not None:
+        fed = {span_start(d, tier) for d in changed}
+        members = {p: m for p, m in members.items() if p in fed}
+
+    # the latest done record of each output partition of (job_id, tier)
+    recorded = {
+        r["partition"]: r for r in ckpt.records()
+        if r["job_id"] == job_id and r["tier"] == tier
+        and r["status"] == "done"
+    }
+    skipped = [
+        p for p in members if p in recorded
+        and set(members[p]) <= set(recorded[p].get("inputs", [p]))
+    ]
+    todo = [p for p in members if p not in skipped]
     drifted: list[str] = []
 
     if verify_resume and skipped and out_table.exists():
-        recorded = {
-            r["partition"]: (r["rows_out"], r["fingerprint"])
-            for r in ckpt.records()
-            if r["job_id"] == job_id and r["tier"] == tier
-            and r["status"] == "done"
-        }
         written = out_table.read().filter(
             F.col(partition_col).isin(skipped)
         )
         actual = _per_partition_stats(written, partition_col)
-        for p in skipped:
-            # a legitimately-empty partition has NO group in the read-back
-            # stats but was recorded as (0, 0) — default the read-back side
-            # so it isn't flagged drifted (and recomputed) on every resume
-            if actual.get(p, (0, 0)) != recorded.get(p):
-                drifted.append(p)
+        # a legitimately-empty partition has NO group in the read-back
+        # stats but was recorded as (0, 0) — default the read-back side
+        # so it isn't flagged drifted (and recomputed) on every resume
+        drifted = [
+            p for p in skipped if actual.get(p, (0, 0))
+            != (recorded[p]["rows_out"], recorded[p]["fingerprint"])
+        ]
         if drifted:
             todo = sorted(todo + drifted)
             skipped = [p for p in skipped if p not in drifted]
@@ -194,19 +227,20 @@ def run_tier(
     rows_out_total = 0
     if todo:
         run_id = uuid.uuid4().hex[:12]
+        feed = [d for p in todo for d in members[p]]
         # partition-pruned input: the IN filter pushes to the scan. Each
         # checkpoint record carries ITS partition's rows_in; a table input's
-        # come from the Parquet footers of the todo partitions
+        # come from the Parquet footers of the member days
         if isinstance(source, PartitionedTable):
-            rows_in = {p: PartitionedTable.partition_rows(dirs[p]) for p in todo}
-            pending = source.read().filter(
-                F.col(partition_col).isin(todo)
-            ).drop(partition_col).withColumn(partition_col, in_expr)
+            day_rows = {d: PartitionedTable.partition_rows(dirs[d])
+                        for d in feed}
+            pending = source.read()
         else:
-            pending = inp.filter(F.col(partition_col).isin(todo))
+            pending = inp
+        pending = pending.filter(F.col(partition_col).isin(feed))
         t0 = time.time()
         result = compute(pending.drop(partition_col)).withColumn(
-            partition_col, out_expr
+            partition_col, F.date_format(out_ts_col, "yyyy-MM-dd")
         )
         snapshot_id = out_table.overwrite_partitions(result)
         wall = time.time() - t0
@@ -226,8 +260,10 @@ def run_tier(
             n_out, fp = stats.get(p, (0, 0))
             ckpt.mark(
                 job_id=job_id, tier=tier, partition=p, run_id=run_id,
-                rows_in=int(rows_in.get(p, 0)), rows_out=n_out,
-                fingerprint=fp, status="done", wall_s=round(wall, 3),
+                inputs=members[p],
+                rows_in=sum(day_rows[d] for d in members[p]),
+                rows_out=n_out, fingerprint=fp, status="done",
+                wall_s=round(wall, 3),
             )
             rows_out_total += n_out
     return {"computed": todo, "skipped": skipped, "drifted": drifted,

@@ -1951,7 +1951,10 @@ def _hw_auto_sql(ts_bound: str = '2024-01-03',
     1m bucket set (n 9-152 per key at the registered SFs — above the
     n ≥ 2m Holt-Winters branch, small enough that the ~140-level
     recursion stays ~45 s in DuckDB). Fitted values come from a second
-    fold that appends each in-sample prediction to the accumulator."""
+    fold that appends each in-sample prediction to the accumulator. A
+    series shorter than 2m = 6 points skips the optimizer and takes
+    smoothing.holt_winters_auto's SES branch: the `_SES_A`/`_SES_B`
+    recurrence, folded into the same accumulator layout."""
     D0 = "CAST(0.0 AS DOUBLE)"
     TOL = "CAST(1e-10 AS DOUBLE)"
     INF = "CAST('infinity' AS DOUBLE)"
@@ -2033,7 +2036,7 @@ init AS MATERIALIZED (
            {vert('st.a0', 'st.b0', '(st.g0 + ' + STEP + ')', 's.yl')}
          ]) AS sx,
          0 AS it, FALSE AS done
-  FROM ser s CROSS JOIN starts st
+  FROM ser s CROSS JOIN starts st WHERE len(s.yl) >= 6
 ),
 nm AS (
   SELECT event_type, sid, sx, it, done FROM init
@@ -2101,8 +2104,16 @@ params AS MATERIALIZED (
   FROM best
 ),
 fit AS (
-  SELECT s.event_type,
-         list_reduce(
+  SELECT ser.event_type,
+         CASE WHEN len(ser.yl) < 6 THEN list_reduce(
+           list_prepend(
+             [ser.yl[1], {D0}, {D0}, {D0}, {D0}, ser.yl[1]],
+             list_transform(list_slice(ser.yl, 2, len(ser.yl)), v -> [v])
+           ),
+           (acc, x) -> [{dd(_SES_A)} * x[1] + {dd(_SES_B)} * acc[1],
+                        {D0}, {D0}, {D0}, {D0}]
+             || list_slice(acc, 6, len(acc)) || [acc[1]]
+         ) ELSE list_reduce(
            list_prepend(
              {init_state('ser.yl', '')},
              list_transform(ser.yl, (v, i) -> [v, CAST(i AS DOUBLE),
@@ -2119,8 +2130,8 @@ fit AS (
                   THEN {fit_snew} ELSE acc[5] END
            ] || list_slice(acc, 6, len(acc))
              || [acc[1] + acc[2] + {SI}]
-         ) AS st
-  FROM params s JOIN ser ON ser.event_type = s.event_type
+         ) END AS st
+  FROM ser LEFT JOIN params s ON ser.event_type = s.event_type
 ),
 ordered AS (
   SELECT event_type, window_start,

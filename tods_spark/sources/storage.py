@@ -41,25 +41,20 @@ class PartitionedTable:
             not f.startswith("_") for f in os.listdir(self.path)
         )
 
-    def overwrite_partitions(self, df: DataFrame,
-                             partitions: dict | None = None) -> str:
+    def overwrite_partitions(self, df: DataFrame) -> str:
         """Replace exactly the partitions present in `df` (idempotent: a
         re-run of the same partition converges to the same state), and
         append a snapshot record to the manifest log — the Iceberg-style
-        commit history. Pass `partitions` ({partition value: row count})
-        when the caller already computed per-partition stats (run_tier
-        does, from its read-back) — the write path itself NEVER recomputes
-        `df` for bookkeeping."""
+        commit history. The write path NEVER recomputes `df` for
+        bookkeeping: a caller that counts the written rows attaches them
+        with `annotate_snapshot` (run_tier does, from its read-back)."""
         (
             df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*self.partition_cols)
             .parquet(self.path)
         )
-        return self._append_snapshot(
-            op="overwrite_partitions",
-            partitions=dict(partitions) if partitions else None,
-        )
+        return self._append_snapshot(op="overwrite_partitions")
 
     def _append_snapshot(self, **record) -> str:
         import json
