@@ -1,6 +1,6 @@
 """Benchmark harness (driver contract): runs the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and prints ONE JSON line:
+(all CPUs when unset) and prints ONE JSON line:
     {"metric": ..., "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": ..., "rollup_points_per_sec": ...}
 
@@ -151,11 +151,11 @@ def run_token_cascade(spark, n_docs: int) -> tuple[float, int]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     n_docs = int(DOCS_PER_SF * sf)
 
-    spark = get_spark(app_name="tods_spark_bench", cores=cpus)
+    spark = get_spark(app_name="tods_spark_bench")
+    cpus = spark.sparkContext.defaultParallelism
     # warm the JVM/Arrow paths so timings measure the engine, not startup:
     # codegen JIT, Arrow python workers, and the malloc arenas all pay a
     # first-use cost that is a property of the sandbox kernel (BENCH/

@@ -125,13 +125,17 @@ WORKLOAD_VERSION = "v6.1"  # bump whenever the timed job changes shape
 PF_KTHREAD = 0x00200000
 HZ = os.sysconf("SC_CLK_TCK")
 
+# the checkout the setup and worker sessions import tods_spark from; it
+# goes on their PYTHONPATH, which their Python workers inherit (a worker
+# that unpickles a tods_spark UDF imports it too)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SETUP = r"""
 import sys
-sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F
 from tods_spark.session import get_spark
 from tods_spark.datagen import token_table
-spark = get_spark(app_name="scaling_setup", cores=8)
+spark = get_spark(app_name="scaling_setup")
 # v5: the R time-shifted replicas are UNIONED AND WRITTEN HERE, once,
 # untimed. v2-v4 built the union inside every timed run, and the Amdahl
 # fit over session C's convoy-free runs showed ~22 s of per-run serial
@@ -155,7 +159,6 @@ raw.write.mode("overwrite").parquet(sys.argv[1])
 
 WORKER = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
 import os, tempfile
 from pyspark.sql import functions as F
 from tods_spark.session import get_spark
@@ -330,8 +333,16 @@ def _gate(tag: str) -> dict:
 
 # ---------------------------------------------------------------- workers
 
-def _spawn(path: str, cores: int, cpu_list: str) -> subprocess.Popen:
+def _env() -> dict:
+    """This process's environment with the checkout first on PYTHONPATH."""
     env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, env.get("PYTHONPATH")) if p)
+    return env
+
+
+def _spawn(path: str, cores: int, cpu_list: str) -> subprocess.Popen:
+    env = _env()
     # two concurrent pinned JVMs must fit the box (-Xms == -Xmx)
     env.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
     cmd = [sys.executable, "-c", WORKER, path, str(cores)]
@@ -413,7 +424,8 @@ def main() -> None:
         if not reuse:
             subprocess.run([sys.executable, "-c", SETUP, path, str(n_docs),
                             str(rep)],
-                           check=True, capture_output=True, text=True)
+                           check=True, capture_output=True, text=True,
+                           env=_env())
         p_lo = _spawn(path, lo, lo_cpus)
         p_hi = _spawn(path, hi, hi_cpus)
         points = _ready(p_lo)

@@ -1,7 +1,8 @@
 """Resume cost and commit unit of the checkpointed cascade: tier partition
 sets come from directory listings, the Gorilla pack commits with its 1m
-partition, a refresh keeps the packed tier in step with tier_1m, and a
-week is always derived from all of its member days."""
+partition, a write committed before a crash is finished rather than
+recomputed, a refresh reads and keeps in step only the days it rewrites,
+and a week is always derived from all of its member days."""
 
 from __future__ import annotations
 
@@ -18,6 +19,7 @@ from tods_spark.datagen import token_table
 from tods_spark.operators.compression import unpack_tier
 from tods_spark.operators.rollup import rollup_cascade
 from tods_spark.pipeline import refresh_engine, run_engine
+from tods_spark.plans import checkpoint
 from tods_spark.plans.checkpoint import CheckpointLog
 from tods_spark.sources.storage import PartitionedTable
 
@@ -117,8 +119,9 @@ def test_refresh_repacks_gorilla_tier(spark, tmp_path):
 def test_pack_crash_recomputes_with_its_1m_partitions(spark, tmp_path,
                                                       monkeypatch):
     """A pack write that fails inside the 1m stage leaves no 1m marks, so
-    the next run recomputes and packs those partitions; the packed tier
-    then equals a clean run's."""
+    the next run packs those partitions again — it finishes them from the
+    committed 1m write (recovered) — and the packed tier then equals a
+    clean run's."""
     raw = token_table(spark, 4000, partitions=3)
     clean = str(tmp_path / "clean")
     run_engine(spark, raw, clean, with_digest=False)
@@ -140,9 +143,108 @@ def test_pack_crash_recomputes_with_its_1m_partitions(spark, tmp_path,
     assert not [r for r in _records(base) if r["tier"] == "1m"]
 
     rep = run_engine(spark, raw, base, with_digest=False)
-    assert rep["1m"]["computed"] and not rep["1m"]["skipped"]
+    assert rep["1m"]["recovered"] and not rep["1m"]["skipped"]
     assert len(calls) == 2
     assert _packed(spark, base) == _packed(spark, clean)
+
+
+def test_build_crash_after_1m_commit_is_finished_on_retry(spark, tmp_path,
+                                                          monkeypatch):
+    """A build that dies right after the 1m partition write returned (in
+    the read-back stats, before any mark) is finished on retry, not
+    recomputed: the retry reports those partitions as recovered, tier_1m
+    holds the one committed write, and the 1m marks and the packed tier
+    equal a clean run's."""
+    raw = token_table(spark, 4000, partitions=3)
+    clean = str(tmp_path / "clean")
+    run_engine(spark, raw, clean, with_digest=False)
+
+    real = checkpoint._per_partition_stats
+    calls = []
+
+    def crash_once(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("planted stats crash")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(checkpoint, "_per_partition_stats", crash_once)
+    base = str(tmp_path / "crash")
+    with pytest.raises(RuntimeError, match="planted stats crash"):
+        run_engine(spark, raw, base, with_digest=False)
+    assert not _records(base)
+
+    rep = run_engine(spark, raw, base, with_digest=False)
+    days = sorted(p["part_key"] for p in PartitionedTable(
+        spark, f"{clean}/tier_1m", ["part_key"]).partitions())
+    assert rep["1m"]["recovered"] == days and not rep["1m"]["computed"]
+    commits = [s for s in PartitionedTable(spark, f"{base}/tier_1m",
+                                           ["part_key"]).snapshots()
+               if s["op"] == "overwrite_partitions"]
+    assert len(commits) == 1
+
+    def marks(b):
+        keep = ("partition", "inputs", "rows_in", "rows_out", "fingerprint")
+        return sorted(tuple(str(r[k]) for k in keep)
+                      for r in _records(b) if r["tier"] == "1m")
+
+    assert marks(base) == marks(clean)
+    assert _packed(spark, base) == _packed(spark, clean)
+
+
+def test_refresh_reads_only_the_days_it_rewrites(spark, tmp_path):
+    """A refresh opens only the tier_1m days its late batch touches: with
+    a file of an unaffected middle day corrupted it still succeeds, and
+    the affected days — one of them a day the tier never held — equal a
+    full rebuild, digests included."""
+    raw = token_table(spark, 1200, cadence_s=1800).cache()  # ~25 days
+    day = F.date_format("ts", "yyyy-MM-dd")
+    days = sorted(r[0] for r in raw.select(day).distinct().collect())
+    doc_n = F.substring("doc_id", 5, 15).cast("long")
+    hit = [days[2], days[-3]]
+    is_late = (doc_n % 3 == 0) & day.isin(hit)
+    # late rows on a day after the table's last day
+    new_day = (raw.filter((doc_n % 3 == 0) & (day == days[2]))
+               .withColumn("ts", F.col("ts") + F.expr("INTERVAL 40 DAYS")))
+    late = raw.filter(is_late).unionByName(new_day)
+    affected = sorted(hit + [r[0] for r in new_day.select(day)
+                             .distinct().collect()])
+    assert len(affected) == 3 and affected[-1] > days[-1]
+
+    base_r = str(tmp_path / "refresh")
+    run_engine(spark, raw.filter(~is_late), base_r)
+    victim = days[len(days) // 2]
+    assert victim not in affected
+    vdir = f"{base_r}/tier_1m/part_key={victim}"
+    name = sorted(f for f in os.listdir(vdir) if f.endswith(".parquet"))[0]
+    with open(os.path.join(vdir, name), "wb") as fh:
+        fh.write(b"not a parquet file")
+
+    rep = refresh_engine(spark, late, base_r)
+    assert rep["1m"]["merged"] is True
+    assert rep["1m"]["refreshed"] == affected
+    assert rep["1d"]["refreshed"] == affected
+
+    base_f = str(tmp_path / "full")
+    run_engine(spark, raw.unionByName(new_day), base_f)
+    for tier in ("1m", "1h", "1d"):
+        got, exp = (
+            spark.read.parquet(f"{b}/tier_{tier}")
+            .filter(F.col("part_key").isin(affected)).drop("part_key")
+            .toPandas().sort_values(["source", "window_start"],
+                                    ignore_index=True)
+            for b in (base_r, base_f))
+        _assert_tiers_equal(got, exp, tier)
+
+    def packed(b):
+        return sorted(
+            (r[0], r[1], r[2], bytes(r[3])) for r in
+            spark.read.parquet(f"{b}/tier_1m_gorilla")
+            .filter(F.col("part_key").isin(affected))
+            .select("source", "chunk_start", "n_points", "blob").collect())
+
+    assert packed(base_r) == packed(base_f)
+    raw.unpersist()
 
 
 def test_full_skip_resume_job_budget(spark, tmp_path):

@@ -11,7 +11,7 @@ from tods_spark.plans.checkpoint import CheckpointLog, run_tier
 from tods_spark.sources.storage import PartitionedTable
 
 
-def _compute(df):
+def _compute(df, _days):
     return rollup_raw(df, "1m")
 
 

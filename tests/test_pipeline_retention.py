@@ -216,11 +216,11 @@ def test_refresh_engine_matches_full_rebuild(spark, tmp_path):
 def test_refresh_fence_survives_crash_mid_mark_loop(spark, tmp_path):
     """The at-most-once fence must hold when the previous refresh crashed
     BETWEEN the (single-job) 1m partition overwrite and completing the
-    per-partition mark loop: some dates are marked, some not. A subset
-    fence would see "not all done" and re-merge the full late batch —
-    double-counting every affected window; the overlap fence skips the
-    merge (any mark proves the write committed), backfills the missing
-    marks from a read-back, and re-derives the idempotent cascade."""
+    per-partition mark loop: some dates are marked, some not. Re-merging
+    the unmarked dates would double-count every affected window; their
+    commit in the tier_1m manifest makes the retry finish them instead
+    (marks backfilled from a read-back) and re-derive the idempotent
+    cascade."""
     import json as J
 
     from tods_spark.pipeline import refresh_engine
@@ -242,7 +242,7 @@ def test_refresh_fence_survives_crash_mid_mark_loop(spark, tmp_path):
     recs = [J.loads(ln) for ln in open(ckpt) if ln.strip()]
     kept = [
         r for r in recs
-        if not (r.get("refresh") and r["tier"] == "1m"
+        if not (r["job_id"] == "refresh" and r["tier"] == "1m"
                 and r["partition"] in dates[1:])
     ]
     assert len(kept) < len(recs)
@@ -269,17 +269,17 @@ def test_refresh_fence_survives_crash_mid_mark_loop(spark, tmp_path):
 
 
 def test_refresh_fence_survives_crash_before_first_mark(spark, tmp_path):
-    """The window ADVICE r6 flagged: a crash BETWEEN the 1m overwrite
-    commit and the FIRST per-partition mark (the read-back stats job runs
-    before any mark is appended) used to leave zero marks, so the retry
-    saw no overlap and re-merged the already-merged batch. The r7
-    batch-level "1m_commit" record — appended the moment the overwrite
-    returns — must fence that retry: no re-merge, all marks backfilled,
-    no double count."""
+    """A crash BETWEEN the 1m overwrite commit and the FIRST
+    per-partition mark (the read-back stats job runs before any mark is
+    appended) leaves zero marks. The write's snapshot in the tier_1m
+    manifest — appended the moment the overwrite returns, naming the job,
+    the tier and the days — must fence that retry: no re-merge, all marks
+    backfilled, no double count."""
     import json as J
 
     from tods_spark.pipeline import refresh_engine
     from tods_spark.plans.checkpoint import CheckpointLog
+    from tods_spark.sources.storage import PartitionedTable
 
     raw = token_table(spark, 8000, partitions=4).cache()
     doc_n = F.substring("doc_id", 5, 15).cast("long")
@@ -298,9 +298,14 @@ def test_refresh_fence_survives_crash_before_first_mark(spark, tmp_path):
     recs = [J.loads(ln) for ln in open(ckpt) if ln.strip()]
     kept = [
         r for r in recs
-        if not (r.get("refresh") and r["tier"] == "1m")
+        if not (r["job_id"] == "refresh" and r["tier"] == "1m")
     ]
-    assert any(r["tier"] == "1m_commit" for r in kept)
+    assert any(
+        s["op"] == "overwrite_partitions" and s.get("job_id") == "refresh"
+        and s.get("tier") == "1m"
+        for s in PartitionedTable(spark, f"{base}/tier_1m",
+                                  ["part_key"]).snapshots()
+    )
     with open(ckpt, "w") as fh:
         fh.write("\n".join(J.dumps(r) for r in kept) + "\n")
 

@@ -183,7 +183,7 @@ def test_streaming_chained_cascade_matches_batch(spark, tmp_path):
     matches the batch cascade exactly."""
     from tods_spark.datagen import SCHEMA, token_table
     from tods_spark.operators.rollup import rollup_cascade, rollup_raw
-    from tods_spark.streaming.rollup_stream import streaming_cascade_1m_1h
+    from tods_spark.streaming.rollup_stream import streaming_cascade
     from pyspark.sql.types import _parse_datatype_string
 
     import pandas as pd
@@ -217,7 +217,7 @@ def test_streaming_chained_cascade_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/batch=*")
     )
-    out = streaming_cascade_1m_1h(stream)
+    out = streaming_cascade(stream, tiers=("1m", "1h"))
     q = (out.writeStream.outputMode("append").format("memory")
          .queryName("cascade_stream").start())
     q.processAllAvailable()

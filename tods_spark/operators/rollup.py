@@ -336,9 +336,8 @@ def refresh_tier(
         cross an exchange, and it is late-sized: at most one tier row per
         late window. Windows the tier has never seen come out of the same
         merge, with the late partial as their only state.
-    In an Iceberg deployment the untouched branch is elided entirely by
-    dynamic partition overwrite (only affected partitions rewrite — the
-    checkpoint/lineage story in plans/checkpoint.py applies per refresh).
+    pipeline.refresh_engine passes the stored rows of the late days only,
+    so the untouched branch is the rest of those days' partitions.
     """
     dig = ["qdigest"] if "qdigest" in tier_df.columns else []
     state = [*keys, "window_start", "cnt", "sum_n_tok", "min_n_tok",

@@ -18,25 +18,26 @@ partition that starts its epoch-aligned tier window (the day itself up to
 recomputed from all its member days. Every stage is resumable: re-running
 `run_engine` after a crash skips completed (tier, partition) pairs via the
 checkpoint log and converges to identical bytes (dynamic partition
-overwrite); a week that gained days since it was written is rebuilt. The
-pack is written inside the 1m stage, before the 1m checkpoint marks, so a
-1m partition and its packed day commit together. A resume pays for the
-partitions still to do: the raw partition set costs one count, each
-cascade tier lists the directory of the tier below, and a tier with
-nothing to do opens no table. `refresh_engine` is the late-data half: it
-merges a late batch into the affected 1m days, repacks them and runs the
-same upward cascade over the output partitions those days feed.
+overwrite); a week that gained days since it was written is rebuilt, and
+a partition whose write committed before the crash is finished, not
+recomputed. The pack is written inside the 1m stage, before the 1m
+checkpoint marks, so a 1m partition and its packed day commit together.
+A resume pays for the partitions still to do: the raw partition set costs
+one count, each cascade tier lists the directory of the tier below, and a
+tier with nothing to do opens no table. `refresh_engine` is the late-data
+half: the same 1m run_tier over the late batch, merging it into the
+stored 1m rows of its days, then the same upward cascade.
 """
 
 from __future__ import annotations
 
 from datetime import datetime
-from functools import partial
 
 from pyspark.sql import SparkSession, functions as F
 
 from tods_spark.operators import compression
 from tods_spark.operators.rollup import (
+    refresh_tier,
     rollup_cascade,
     rollup_raw,
     rollup_raw_partial_digest,
@@ -57,6 +58,11 @@ def pack_days(packed_table: PartitionedTable, t1m, keys) -> None:
     packed_table.overwrite_partitions(packed)
 
 
+def _rows_only(fn, **kwargs):
+    """A run_tier compute from a tier function of the input rows alone."""
+    return lambda rows, _days: fn(rows, **kwargs)
+
+
 def _cascade_up(spark, base_dir, ckpt, job_id, keys, with_weekly,
                 **run_args):
     """The upward cascade 1m → 1h → 1d (→ 1w): one run_tier per tier over
@@ -64,7 +70,8 @@ def _cascade_up(spark, base_dir, ckpt, job_id, keys, with_weekly,
     below = PartitionedTable(spark, f"{base_dir}/tier_1m", ["part_key"])
     for lo, hi in (CASCADE if with_weekly else CASCADE[:2]):
         table = PartitionedTable(spark, f"{base_dir}/tier_{hi}", ["part_key"])
-        compute = partial(rollup_cascade, from_tier=lo, to_tier=hi, keys=keys)
+        compute = _rows_only(rollup_cascade, from_tier=lo, to_tier=hi,
+                             keys=keys)
         yield hi, table, run_tier(spark, below, compute, table, ckpt, job_id,
                                   hi, in_ts_col="window_start", **run_args)
         below = table
@@ -87,7 +94,8 @@ def run_engine(
     with_weekly: bool = False,
 ) -> dict:
     """Run the full cascade with checkpointed writes; returns per-tier
-    stats {tier: {"computed": [...], "skipped": [...], "rows_out": n}}.
+    stats {tier: {"computed": [...], "recovered": [...], "skipped": [...],
+    "drifted": [...], "rows_out": n}} (run_tier's report).
 
     dedup: None | 'first' | 'average' — drop duplicate timestamps per key
     before the rollup (DuplicationValidation semantics, the F0 generator
@@ -107,7 +115,7 @@ def run_engine(
 
     # digests come from map-side partials: O(#batches × windows) digest
     # rows through the raw→1m shuffle, not O(rows) raw values
-    raw_to_1m = partial(
+    raw_to_1m = _rows_only(
         rollup_raw_partial_digest if with_digest else rollup_raw,
         tier="1m", value_col=value_col, keys=keys,
     )
@@ -155,122 +163,56 @@ def refresh_engine(
 ) -> dict:
     """Late-data refresh of an existing tier-table tree (the invalidation
     half of the continuous-aggregate lifecycle; `run_engine` is the build
-    half): merge the late batch into tier_1m incrementally
-    (rollup.refresh_tier — untouched tier rows broadcast-only, digests
-    merged), repack the affected days, then run the same upward cascade
-    as `run_engine`, restricted to the output partitions the affected
-    days feed: each affected 1h/1d day and (with_weekly) each affected
-    epoch-week is recomputed from all its member days and marked once.
+    half). The 1m stage is one run_tier over the late batch: each late day
+    is rewritten as `rollup.refresh_tier` of its stored 1m rows and its
+    late rows (digests merged) and repacked. The same upward cascade as
+    `run_engine` follows, restricted to the output partitions the late
+    days feed: each affected 1h/1d day and (with_weekly) epoch-week is
+    recomputed from all its member days and marked once.
 
     Cost model at 10^12 rows: late-batch aggregate (late-sized shuffle)
-    + per-affected-partition rewrites — the unaffected history is
-    never read (partition pruning on part_key) and never rewritten.
+    + per-affected-partition rewrites — the stored 1m tier is read on the
+    late days only (the part_key filter prunes the scan) and the
+    unaffected history is never rewritten.
 
-    Delivery contract: the MERGE is incremental, so each late batch must
-    be applied AT MOST ONCE (re-merging double-counts — unlike
-    run_engine's recompute-from-raw, which is naturally idempotent).
-    The checkpoint fences this per job_id: the 1m partition overwrite
-    commits as ONE Spark job, a batch-level "1m_commit" record is
-    appended the moment it returns (r7 — BEFORE the stats read-back job
-    that precedes the per-partition marks, closing the window where a
-    crash left zero marks and the retry re-merged), and the fence trips
-    on EITHER that commit record OR any overlap between this batch's
-    dates and the partitions already marked done for (job_id, "1m").
-    (A subset fence would re-merge — double-counting — after a crash
-    mid-mark-loop.) On a fenced re-run, marks missing for some dates are
-    backfilled from a read-back of the written partitions, the days are
-    repacked, and the upward cascade resumes like any run_tier: output
-    partitions already marked done for this job_id are skipped, the rest
-    are derived — so retrying a refresh that crashed at ANY point after
-    the 1m write commit is safe. Re-delivering a batch under a NEW job_id
-    is the caller's bug, the same offset-commit discipline any
-    log-consumer job has. Upstream re-delivery within a stream is already
-    handled by streaming.streaming_dedup.
+    Delivery contract: the merge is incremental, so a batch must be
+    applied AT MOST ONCE per day (re-merging double-counts — unlike
+    run_engine's recompute-from-raw). run_tier's commit rule gives that
+    per job_id: a day marked done is skipped, and a day whose latest
+    tier_1m overwrite is this job's commit (a run that crashed after the
+    write returned) is finished from the written bytes and reported as
+    recovered, never merged again — so retrying a crashed refresh is safe
+    at any point. A batch under a job_id that merged some of its days
+    merges only the others. Re-delivering a batch under a NEW job_id is
+    the caller's bug (the offset-commit discipline of any log consumer);
+    re-delivery within a stream is handled by streaming.streaming_dedup.
 
-    Returns {tier: {"refreshed": [part_keys], "rows_out": n}} with
-    "merged": False on a fenced re-run.
+    Returns {tier: {"refreshed": [part_keys], "rows_out": n}} (refreshed =
+    computed + recovered partitions); the 1m entry adds "merged": whether
+    this run merged any day.
     """
-    from tods_spark.operators.rollup import refresh_tier
-    from tods_spark.plans.checkpoint import _per_partition_stats
-
     ckpt = CheckpointLog(f"{base_dir}/checkpoint.jsonl")
-    dates = sorted(
-        r["d"]
-        for r in late_df.select(
-            F.date_format("ts", "yyyy-MM-dd").alias("d")
-        ).distinct().collect()
-    )
     t1m_table = PartitionedTable(spark, f"{base_dir}/tier_1m", ["part_key"])
-
-    def _mark_from_readback(parts, **extra) -> int:
-        # fingerprint the WRITTEN bytes (pruned read-back), not a plan
-        # recompute: double-precision partials can differ in the last ulp
-        # between the stats job and the write job's re-execution, which
-        # would make a later verify_resume spuriously demote refreshed
-        # partitions as drifted (run_tier uses the same discipline)
-        written = t1m_table.read().filter(F.col("part_key").isin(parts))
-        stats = _per_partition_stats(written, "part_key")
-        total = 0
-        for p in parts:
-            n, fp = stats.get(p, (0, 0))
-            total += n
-            ckpt.mark(
-                job_id=job_id, tier="1m", partition=p, status="done",
-                rows_out=n, fingerprint=fp, refresh=True, **extra,
-            )
-        return total
-
-    already = ckpt.done_partitions(job_id, "1m")
-    committed = ckpt.done_partitions(job_id, "1m_commit")
-    if (set(dates) & already) or committed:
-        # fenced re-run: the 1m overwrite commits as one Spark job, a
-        # batch-level "1m_commit" record is appended the moment it
-        # returns, and per-partition marks follow — so EITHER any
-        # overlapping mark OR the commit record proves the merge is on
-        # disk; re-merging would double-count. Backfill marks lost to a
-        # crash after the commit point (whether before the first mark or
-        # mid-mark-loop); the repack and upward cascade below resume.
-        missing = sorted(set(dates) - already)
-        recovered = (
-            _mark_from_readback(missing, recovered=True) if missing else 0
-        )
-        report = {"1m": {"refreshed": missing, "rows_out": recovered,
-                         "merged": False}}
-    else:
-        refreshed = refresh_tier(
-            t1m_table.read().drop("part_key"), late_df, "1m",
-            value_col=value_col, keys=keys,
-        ).withColumn(
-            "part_key", F.date_format("window_start", "yyyy-MM-dd")
-        ).filter(F.col("part_key").isin(dates))
-        t1m_table.overwrite_partitions(refreshed)
-        # batch-level write-committed record, appended IMMEDIATELY after
-        # the overwrite returns and BEFORE the stats read-back (r7,
-        # ADVICE): _mark_from_readback runs a full Spark job first, so a
-        # crash inside that window used to leave ZERO marks — the retry
-        # saw no overlap and re-merged the already-merged batch. The
-        # marker lives under its own tier key ("1m_commit") so
-        # done_partitions(job_id, "1m") and the build-path run_tier
-        # bookkeeping never see it.
-        ckpt.mark(job_id=job_id, tier="1m_commit", partition="_batch",
-                  status="done", refresh=True)
-        report = {"1m": {"refreshed": dates,
-                         "rows_out": _mark_from_readback(dates),
-                         "merged": True}}
-
-    # repack the refreshed days from the merged 1m tier; this is
-    # idempotent, so a fenced re-run repeats it
     packed_table = PartitionedTable(spark, f"{base_dir}/tier_1m_gorilla",
                                     ["part_key"])
-    if packed_table.exists():
-        pack_days(
-            packed_table,
-            t1m_table.read().filter(F.col("part_key").isin(dates)),
-            keys,
-        )
 
-    for tier, _table, rep in _cascade_up(spark, base_dir, ckpt, job_id, keys,
-                                         with_weekly, changed=dates):
-        report[tier] = {"refreshed": rep["computed"],
-                        "rows_out": rep["rows_out"]}
+    def merge_late(late_rows, days):
+        stored = t1m_table.read().filter(F.col("part_key").isin(days))
+        return refresh_tier(stored.drop("part_key"), late_rows, "1m",
+                            value_col=value_col, keys=keys)
+
+    rep = run_tier(
+        spark, late_df, merge_late, t1m_table, ckpt, job_id, "1m",
+        in_ts_col="ts",
+        also_write=(lambda t1m: pack_days(packed_table, t1m, keys))
+        if packed_table.exists() else None,
+    )
+    report = {"1m": {"refreshed": rep["computed"] + rep["recovered"],
+                     "rows_out": rep["rows_out"],
+                     "merged": bool(rep["computed"])}}
+    late_days = rep["computed"] + rep["recovered"] + rep["skipped"]
+    for tier, _table, up in _cascade_up(spark, base_dir, ckpt, job_id, keys,
+                                        with_weekly, changed=late_days):
+        report[tier] = {"refreshed": up["computed"] + up["recovered"],
+                        "rows_out": up["rows_out"]}
     return report

@@ -31,16 +31,19 @@ Design:
     (partition pruning — the filter lands on the parquet scan); the todo
     partitions are written with dynamic partition overwrite (idempotent),
     then marked done;
+  * the write's manifest snapshot is its commit record (as Iceberg's
+    Flink sink keeps its committed checkpoint id in the snapshot summary):
+    job_id, tier and each written partition with its member days;
+  * a crash between "write" and "mark" is finished on retry from the
+    written bytes (stats, second output, mark), not recomputed: the
+    late-data merge is incremental and must run at most once;
   * a second output of a tier (the 1m tier's Gorilla pack) is written from
     the read-back of exactly the todo partitions, after the tier write and
     before the marks; it keeps no records of its own, so the tier's record
     is its commit and the log keeps one record per tier partition;
-  * a crash between "write" and "mark" re-runs that partition and its
-    second output; the partition overwrite converges to the same bytes, so
-    resume is exactly-once in effect (at-least-once execution, idempotent
-    apply);
   * a resume with every partition done costs the raw count alone: two
-    Spark jobs, none of them proportional to the tier tables.
+    Spark jobs, none of them proportional to the tier tables, and no
+    manifest read.
 
 The checkpoint table itself is tiny (one row per partition per tier) and is
 stored as JSON lines appended atomically per run — on a cluster this becomes
@@ -124,10 +127,27 @@ def span_start(day: str, tier: str) -> str:
     return (d - timedelta(days=(d - _EPOCH).days % span)).isoformat()
 
 
+def _committed(table: PartitionedTable, job_id: str, tier: str,
+               members: dict[str, list[str]]) -> dict[str, str]:
+    """{partition: snapshot_id} of the `members` partitions whose latest
+    overwrite in `table`'s manifest is a commit of (job_id, tier) from all
+    their member days. An overwrite that names no partitions may have
+    replaced any, so it supersedes every commit before it."""
+    latest: dict[str, dict] = {}
+    for snap in table.snapshots():
+        if snap["op"] == "overwrite_partitions":
+            parts = snap.get("partitions")
+            latest = {**latest, **dict.fromkeys(parts, snap)} if parts else {}
+    return {p: latest[p]["snapshot_id"] for p, days in members.items()
+            if p in latest and latest[p].get("job_id") == job_id
+            and latest[p].get("tier") == tier
+            and set(days) <= set(latest[p]["partitions"][p])}
+
+
 def run_tier(
     spark: SparkSession,
     source: DataFrame | PartitionedTable,
-    compute,  # (DataFrame) -> DataFrame : the tier transformation
+    compute,  # (rows, days) -> DataFrame : the tier of those input days
     out_table: PartitionedTable,
     ckpt: CheckpointLog,
     job_id: str,
@@ -143,11 +163,12 @@ def run_tier(
 
     Partitions are days. Input day d (of `in_ts_col`) feeds the output
     partition `span_start(d, tier)` (a day of `out_ts_col`); the days that
-    feed an output partition are its members. A todo output partition is
-    recomputed from all its members, written, and marked once with them
-    (`inputs`); a done one goes back to todo when the input holds a member
-    it was not computed from (a resume that adds days to a week rebuilds
-    the week).
+    feed an output partition are its members. A partition is skipped when
+    its done record covers its members, finished from the written bytes
+    (`recovered`) when its latest overwrite is this (job_id, tier)'s
+    commit of all its members, and computed otherwise: `compute(rows,
+    days)` gets the rows of its member days and the days, the result is
+    written, and the partition is marked once with its members (`inputs`).
 
     `source` is a DataFrame of raw rows (one groupBy job gives the day set
     and every day's row count) or the PartitionedTable of the tier below,
@@ -155,23 +176,19 @@ def run_tier(
     the day set, the footers of the member days read their row counts, and
     it is opened only when some output partition is to do). `changed`,
     when given, restricts the plan to the output partitions those input
-    days feed (the late-data refresh passes the days it rewrote).
+    days feed (the late-data refresh passes its late days). `also_write`,
+    when given, receives the pruned read-back of the partitions just
+    finished and writes a second output from it before their marks, so
+    the two commit together.
 
-    `also_write`, when given, receives the pruned read-back of the
-    partitions just written and writes a second output from it before
-    their checkpoint marks: that output commits with the tier partition,
-    so a crash before the marks recomputes both, and a resume that skips
-    the partition writes neither.
+    verify_resume=True re-fingerprints the WRITTEN bytes of every 'done'
+    partition before trusting it (one groupBy over the pruned read-back):
+    a partition that drifted from its record, or went missing, is
+    recomputed — never finished from a commit — so a resume detects
+    silent table corruption instead of skipping over it.
 
-    verify_resume=True audits every 'done' partition before trusting it:
-    the WRITTEN bytes are re-fingerprinted (one groupBy over the pruned
-    read-back) and compared to the checkpoint record; any drifted or
-    missing partition is demoted back to todo and recomputed. This is what
-    per-partition fingerprints are FOR — a resume that detects silent
-    table corruption instead of skipping over it.
-
-    Returns {"computed": [...], "skipped": [...], "drifted": [...],
-    "rows_out": n}.
+    Returns {"computed": [...], "recovered": [...], "skipped": [...],
+    "drifted": [...], "rows_out": n}.
     """
     if isinstance(source, PartitionedTable):
         # the day set is the directory listing: no Spark job, and the
@@ -220,40 +237,52 @@ def run_tier(
             p for p in skipped if actual.get(p, (0, 0))
             != (recorded[p]["rows_out"], recorded[p]["fingerprint"])
         ]
-        if drifted:
-            todo = sorted(todo + drifted)
-            skipped = [p for p in skipped if p not in drifted]
+        skipped = [p for p in skipped if p not in drifted]
 
-    rows_out_total = 0
+    commits = _committed(
+        out_table, job_id, tier, {p: members[p] for p in todo}
+    ) if todo else {}
+    todo = sorted(todo + drifted)
+    computed = [p for p in todo if p not in commits]
+    recovered = [p for p in todo if p in commits]
+
+    stats: dict = {}
     if todo:
         run_id = uuid.uuid4().hex[:12]
-        feed = [d for p in todo for d in members[p]]
-        # partition-pruned input: the IN filter pushes to the scan. Each
-        # checkpoint record carries ITS partition's rows_in; a table input's
-        # come from the Parquet footers of the member days
         if isinstance(source, PartitionedTable):
+            # each checkpoint record carries ITS partition's rows_in; a
+            # table input's come from the Parquet footers of the member days
             day_rows = {d: PartitionedTable.partition_rows(dirs[d])
-                        for d in feed}
-            pending = source.read()
-        else:
-            pending = inp
-        pending = pending.filter(F.col(partition_col).isin(feed))
-        t0 = time.time()
-        result = compute(pending.drop(partition_col)).withColumn(
-            partition_col, F.date_format(out_ts_col, "yyyy-MM-dd")
-        )
-        snapshot_id = out_table.overwrite_partitions(result)
-        wall = time.time() - t0
+                        for p in todo for d in members[p]}
+        schema, wall = None, 0.0
+        if computed:
+            feed = [d for p in computed for d in members[p]]
+            # partition-pruned input: the IN filter pushes to the scan
+            pending = (source.read() if isinstance(source, PartitionedTable)
+                       else inp).filter(F.col(partition_col).isin(feed))
+            t0 = time.time()
+            result = compute(pending.drop(partition_col), feed).withColumn(
+                partition_col, F.date_format(out_ts_col, "yyyy-MM-dd")
+            )
+            snapshot_id = out_table.overwrite_partitions(
+                result, job_id=job_id, tier=tier,
+                partitions={p: members[p] for p in computed},
+            )
+            commits.update(dict.fromkeys(computed, snapshot_id))
+            wall = time.time() - t0
+            schema = result.schema
         # stats from the WRITTEN bytes (read-back), not a recompute or a
         # .cache(): what's fingerprinted is exactly what resume would see
         # (and MemoryStore persists anti-scale on fault-convoy kernels)
-        written = out_table.read(result.schema).filter(
+        written = out_table.read(schema).filter(
             F.col(partition_col).isin(todo)
         )
         stats = _per_partition_stats(written, partition_col)
-        out_table.annotate_snapshot(
-            snapshot_id, {p: stats.get(p, (0, 0))[0] for p in todo}
-        )
+        for snapshot_id in sorted(set(commits.values())):
+            out_table.annotate_snapshot(snapshot_id, {
+                p: stats.get(p, (0, 0))[0] for p in todo
+                if commits[p] == snapshot_id
+            })
         if also_write is not None:
             also_write(written)
         for p in todo:
@@ -265,6 +294,6 @@ def run_tier(
                 rows_out=n_out, fingerprint=fp, status="done",
                 wall_s=round(wall, 3),
             )
-            rows_out_total += n_out
-    return {"computed": todo, "skipped": skipped, "drifted": drifted,
-            "rows_out": rows_out_total}
+    return {"computed": computed, "recovered": recovered,
+            "skipped": skipped, "drifted": drifted,
+            "rows_out": sum(n for n, _fp in stats.values())}

@@ -41,20 +41,22 @@ class PartitionedTable:
             not f.startswith("_") for f in os.listdir(self.path)
         )
 
-    def overwrite_partitions(self, df: DataFrame) -> str:
+    def overwrite_partitions(self, df: DataFrame, **summary) -> str:
         """Replace exactly the partitions present in `df` (idempotent: a
         re-run of the same partition converges to the same state), and
-        append a snapshot record to the manifest log — the Iceberg-style
-        commit history. The write path NEVER recomputes `df` for
-        bookkeeping: a caller that counts the written rows attaches them
-        with `annotate_snapshot` (run_tier does, from its read-back)."""
+        append a snapshot record with `summary` to the manifest log — the
+        Iceberg-style commit history (run_tier's summary, its commit
+        record, names its job_id, tier and partitions → member days).
+        The write path NEVER recomputes `df` for bookkeeping: a caller that
+        counts the written rows attaches them with `annotate_snapshot`
+        (run_tier does, from its read-back)."""
         (
             df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*self.partition_cols)
             .parquet(self.path)
         )
-        return self._append_snapshot(op="overwrite_partitions")
+        return self._append_snapshot(op="overwrite_partitions", **summary)
 
     def _append_snapshot(self, **record) -> str:
         import json
@@ -66,6 +68,8 @@ class PartitionedTable:
         os.makedirs(self.path, exist_ok=True)
         with open(os.path.join(self.path, "_manifest.jsonl"), "a") as f:
             f.write(json.dumps(record) + "\n")
+            f.flush()
+            os.fsync(f.fileno())
         return record["snapshot_id"]
 
     def annotate_snapshot(self, snapshot_id: str, partitions: dict) -> None:

@@ -21,42 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-
-def streaming_rollup_1m(
-    stream_df: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "n_tok",
-    keys: tuple[str, ...] = ("source",),
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """Streaming twin of rollup_raw('1m') — same output schema, same
-    algebraic state, so 1m→1h cascade code is shared with batch."""
-    v = F.col(value_col).cast("double")
-    return (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(*keys, F.window(ts_col, "1 minute").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(v).alias("sum_n_tok"),
-            F.min(v).alias("min_n_tok"),
-            F.max(v).alias("max_n_tok"),
-            F.sum(v * v).alias("sum_sq_n_tok"),
-        )
-        .select(
-            *keys,
-            F.col("w.start").alias("window_start"),
-            F.lit("1m").alias("tier"),
-            "cnt",
-            "sum_n_tok",
-            "min_n_tok",
-            "max_n_tok",
-            (F.col("sum_n_tok") / F.col("cnt")).alias("avg_n_tok"),
-            "sum_sq_n_tok",
-        )
-    )
-
-
-_TIER_INTERVAL = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
+from tods_spark.operators.rollup import AGG_COLS, TIER_INTERVAL
 
 
 def streaming_cascade(
@@ -68,9 +33,11 @@ def streaming_cascade(
     watermark: str = "2 minutes",
 ) -> DataFrame:
     """CHAINED streaming tier cascade — raw → 1m → 1h → 1d inside ONE
-    streaming query (Spark ≥3.4 multiple-stateful-operator support): the
-    first windowed aggregation builds the algebraic 1m state from raw
-    events, and every later tier re-aggregates the PREVIOUS tier's
+    streaming query (Spark ≥3.4 multiple-stateful-operator support), the
+    streaming twin of rollup_raw + rollup_cascade with the same output
+    schema (`tiers=("1m",)` is the streaming 1m rollup): the first
+    windowed aggregation builds the algebraic 1m state from raw events,
+    and every later tier re-aggregates the PREVIOUS tier's
     ALGEBRAIC state on `window(window_time(w), <interval>)` — exactly the
     batch rollup_cascade composition (sum of cnt/sums, min of mins, max of
     maxes), so tier N+1 state is O(windows), never O(rows). The single
@@ -79,56 +46,29 @@ def streaming_cascade(
     end-to-end; each finalized window of the LAST tier is emitted once in
     append mode."""
     v = F.col(value_col).cast("double")
-    cur = (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(*keys, F.window(ts_col, _TIER_INTERVAL[tiers[0]]).alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(v).alias("sum_n_tok"),
-            F.min(v).alias("min_n_tok"),
-            F.max(v).alias("max_n_tok"),
-            F.sum(v * v).alias("sum_sq_n_tok"),
+    # each raw row enters as the tier state of its own instant, so every
+    # tier, the first included, is the same state aggregation
+    cur = stream_df.withWatermark(ts_col, watermark).select(
+        *keys, ts_col, F.lit(1).alias("cnt"), v.alias("sum_n_tok"),
+        v.alias("min_n_tok"), v.alias("max_n_tok"),
+        (v * v).alias("sum_sq_n_tok"),
+    )
+    event_time = F.col(ts_col)
+    for tier in tiers:
+        cur = cur.groupBy(
+            *keys, F.window(event_time, TIER_INTERVAL[tier]).alias("w"),
+        ).agg(
+            F.sum("cnt").alias("cnt"),
+            F.sum("sum_n_tok").alias("sum_n_tok"),
+            F.min("min_n_tok").alias("min_n_tok"),
+            F.max("max_n_tok").alias("max_n_tok"),
+            F.sum("sum_sq_n_tok").alias("sum_sq_n_tok"),
         )
-    )
-    for tier in tiers[1:]:
-        cur = (
-            cur.groupBy(
-                *keys,
-                F.window(F.window_time("w"), _TIER_INTERVAL[tier]).alias("w"),
-            )
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                F.sum("sum_n_tok").alias("sum_n_tok"),
-                F.min("min_n_tok").alias("min_n_tok"),
-                F.max("max_n_tok").alias("max_n_tok"),
-                F.sum("sum_sq_n_tok").alias("sum_sq_n_tok"),
-            )
-        )
-    return cur.select(
-        *keys,
-        F.col("w.start").alias("window_start"),
-        F.lit(tiers[-1]).alias("tier"),
-        "cnt",
-        "sum_n_tok",
-        "min_n_tok",
-        "max_n_tok",
-        (F.col("sum_n_tok") / F.col("cnt")).alias("avg_n_tok"),
-        "sum_sq_n_tok",
-    )
-
-
-def streaming_cascade_1m_1h(
-    stream_df: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "n_tok",
-    keys: tuple[str, ...] = ("source",),
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """raw → 1m → 1h chained cascade (see streaming_cascade)."""
-    return streaming_cascade(
-        stream_df, tiers=("1m", "1h"), ts_col=ts_col, value_col=value_col,
-        keys=keys, watermark=watermark,
-    )
+        event_time = F.window_time("w")
+    return cur.withColumn(
+        "avg_n_tok", F.col("sum_n_tok") / F.col("cnt")
+    ).select(*keys, F.col("w.start").alias("window_start"),
+             F.lit(tiers[-1]).alias("tier"), *AGG_COLS)
 
 
 def run_stream_from_parquet(
@@ -147,8 +87,8 @@ def run_stream_from_parquet(
         .option("maxFilesPerTrigger", 4)
         .parquet(src_dir)
     )
-    agg = streaming_rollup_1m(stream, value_col=value_col, keys=keys,
-                              watermark=watermark)
+    agg = streaming_cascade(stream, tiers=("1m",), value_col=value_col,
+                            keys=keys, watermark=watermark)
     q = (
         agg.writeStream.outputMode("append")
         .format("memory")
