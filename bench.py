@@ -26,7 +26,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from tods_spark.datagen import token_table  # noqa: E402
 from tods_spark.operators import compression, gapfill  # noqa: E402
-from tods_spark.operators.rollup import AGG_COLS, full_cascade  # noqa: E402
+from tods_spark.operators.rollup import AGG_COLS, rollup_raw  # noqa: E402
 from tods_spark.queries import QUERIES  # noqa: E402
 from tods_spark.session import get_spark  # noqa: E402
 
@@ -130,9 +130,9 @@ def run_token_cascade(spark, n_docs: int) -> tuple[float, int]:
         token_table(spark, n_docs).write.mode("overwrite").parquet(raw_path)
         raw = spark.read.parquet(raw_path)
         t0 = time.time()
-        tiers = full_cascade(raw, with_digest=True)
         t1m_path = os.path.join(td, "tier_1m.parquet")
-        tiers["1m"].write.mode("overwrite").parquet(t1m_path)
+        (rollup_raw(raw, "1m", with_digest=True)
+         .write.mode("overwrite").parquet(t1m_path))
         t1m = spark.read.parquet(t1m_path)
         rows = {"1m": t1m.count()}
         t1h = rollup_cascade(t1m, "1m", "1h")

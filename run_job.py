@@ -24,7 +24,9 @@ def main() -> None:
     ap.add_argument("--n-docs", type=int, default=0,
                     help="synthesize this many docs instead of --input")
     ap.add_argument("--output", required=True, help="tier table base dir")
-    ap.add_argument("--job-id", default="rollup")
+    ap.add_argument("--job-id",
+                    help="checkpoint job id (default: the engine's own, "
+                         "rollup for a build and refresh for --late-input)")
     ap.add_argument("--no-digest", action="store_true")
     ap.add_argument("--retention", action="store_true",
                     help="apply default per-tier retention horizons")
@@ -46,14 +48,17 @@ def main() -> None:
     from tods_spark.pipeline import refresh_engine, run_engine
     from tods_spark.session import get_spark
 
-    spark = get_spark(app_name=f"tods_spark_{args.job_id}")
+    # no --job-id leaves each engine its own default: a refresh under the
+    # build's job id would find every late day done and merge nothing
+    job = {"job_id": args.job_id} if args.job_id else {}
+    spark = get_spark(app_name=f"tods_spark_{args.job_id or 'job'}")
     if args.late_input:
         report = refresh_engine(
             spark,
             spark.read.parquet(args.late_input),
             args.output,
-            job_id=args.job_id,
             with_weekly=args.weekly,
+            **job,
         )
         print(json.dumps(report, default=str))
         return
@@ -68,7 +73,6 @@ def main() -> None:
         spark,
         raw,
         args.output,
-        job_id=args.job_id,
         with_digest=not args.no_digest,
         verify_resume=args.verify_resume,
         compact=args.compact,
@@ -76,6 +80,7 @@ def main() -> None:
         now=datetime.now(timezone.utc).replace(tzinfo=None)
         if args.retention
         else None,
+        **job,
     )
     print(json.dumps(report, default=str))
 

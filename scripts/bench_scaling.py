@@ -162,8 +162,7 @@ import json, sys, time
 import os, tempfile
 from pyspark.sql import functions as F
 from tods_spark.session import get_spark
-from tods_spark.operators.rollup import (AGG_COLS, rollup_cascade,
-                                         rollup_raw_partial_digest)
+from tods_spark.operators.rollup import AGG_COLS, rollup_cascade, rollup_raw
 from tods_spark.operators import compression, gapfill
 
 path, cores = sys.argv[1], int(sys.argv[2])
@@ -197,7 +196,7 @@ def job():
 
     with tempfile.TemporaryDirectory() as td:
         t1m_path = os.path.join(td, "tier_1m.parquet")
-        timed("w1m", lambda: rollup_raw_partial_digest(raw, "1m")
+        timed("w1m", lambda: rollup_raw(raw, "1m", with_digest=True)
               .write.mode("overwrite").parquet(t1m_path))
         t1m = spark.read.parquet(t1m_path)
         rows = {}

@@ -25,7 +25,7 @@ def _window_partition_keys(spec_args: str) -> list[str]:
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from tods_spark.operators.rollup import rollup_raw  # noqa: E402
+from tods_spark.operators.rollup import refresh_tier, rollup_raw  # noqa: E402
 from tods_spark.queries import QUERIES  # noqa: E402
 from tods_spark.session import get_spark  # noqa: E402
 
@@ -113,20 +113,18 @@ def main() -> None:
     plan = QUERIES["timeseries_split_5fold"](spark, SF)._jdf.queryExecution().executedPlan().toString()
     check("timeseries split has no Window operator", "Window" not in plan)
 
-    # 10. the default digest cascade never ships raw values through the
-    #     shuffle: no collect_list over the raw scan (partials only)
-    from tods_spark.operators.rollup import full_cascade
-
+    # 10. the digest rollup never ships raw values through the shuffle:
+    #     no collect_list over the raw scan (map-side partials only)
     with tempfile.TemporaryDirectory() as td:
         token_table(spark, 2000).write.parquet(f"{td}/tok")
-        t1m = full_cascade(spark.read.parquet(f"{td}/tok"),
-                           with_digest=True)["1m"]
+        t1m = rollup_raw(spark.read.parquet(f"{td}/tok"), "1m",
+                         with_digest=True)
         plan = t1m._jdf.queryExecution().executedPlan().toString()
         # the collect-path signature is sort_array(collect_list(<raw value>));
         # the partial path shows a MapInPandas stage before the shuffle (its
         # reduce still collect_lists the per-batch digest STRUCTS — that is
         # O(batches), not O(rows), and is fine)
-        check("digest cascade default is map-side partial (no raw collect_list)",
+        check("digest rollup is map-side partial (no raw collect_list)",
               "sort_array(collect_list" not in plan and "MapInPandas" in plan)
 
     # 11. quadratic detector kernels shuffle on the TIME-BOUNDED key: the
@@ -295,6 +293,22 @@ def main() -> None:
             and "HashAggregate" in sub
     check("asof_enrich_user windows only the aggregated tier keyed by "
           "user_id (raw side never windowed)", au_ok and au_n >= 1)
+
+    # 21. the late-data refresh merges late digests from the same map-side
+    #     partials: every collect_list in its executed plan collects
+    #     (digest, cnt) state structs, none a raw value column
+    with tempfile.TemporaryDirectory() as td:
+        token_table(spark, 2000).write.parquet(f"{td}/tok")
+        raw = spark.read.parquet(f"{td}/tok")
+        doc_n = F.substring("doc_id", 5, 15).cast("long")
+        tier = rollup_raw(raw.filter(doc_n % 7 != 0), "1m", with_digest=True)
+        out = refresh_tier(tier, raw.filter(doc_n % 7 == 0), "1m")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        args = _re.findall(r"collect_list\(([^,]*)", plan)
+        check("refresh collects no raw value column",
+              bool(args) and all(a.startswith(("struct(", "named_struct("))
+                                 for a in args),
+              "; ".join(sorted(set(args)))[:120])
 
     bad = [n for n, ok in checks if not ok]
     print(f"\n{len(checks) - len(bad)}/{len(checks)} plan checks pass")

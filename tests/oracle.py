@@ -143,6 +143,57 @@ def gap_fill(timestamps, value_cols: dict, labels, interval=1.0):
     return out
 
 
+def gap_fill_tier(pdf: pd.DataFrame, interval_s: int, key: str = "source",
+                  value: str = "avg_n_tok", count: str = "cnt",
+                  window_col: str = "window_start") -> pd.DataFrame:
+    """Per-key tumbling-window gap-fill (operators/gapfill.gap_fill_tier):
+    each key's grid from its first to its last observed window; a missing
+    window gets is_gap, count 0 and value interpolated linearly between
+    the nearest observed windows before and after, in the engine's
+    operation order (prev + (next - prev) * frac), so results match to the
+    bit."""
+    out = []
+    for k, g in pdf.groupby(key, sort=True):
+        ts = g[window_col].to_numpy("datetime64[s]").astype(np.int64)
+        full = g.set_index(ts).reindex(
+            np.arange(ts.min(), ts.max() + 1, interval_s))
+        t = full.index.to_numpy(np.float64)
+        v = full[value].to_numpy(np.float64)
+        seen = ~np.isnan(v)
+        idx = np.arange(len(v))
+        prev = np.maximum.accumulate(np.where(seen, idx, 0))
+        nxt = np.minimum.accumulate(np.where(seen, idx, len(v) - 1)[::-1])[::-1]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            frac = (t - t[prev]) / (t[nxt] - t[prev])
+            fill = v[prev] + (v[nxt] - v[prev]) * frac
+        out.append(pd.DataFrame({
+            key: k,
+            window_col: pd.to_datetime(full.index, unit="s"),
+            count: full[count].fillna(0).astype(np.int64).to_numpy(),
+            value: np.where(seen, v, fill),
+            "is_gap": ~seen,
+        }))
+    return pd.concat(out, ignore_index=True)
+
+
+def rank_error(values, q: float, p: float) -> float:
+    """Distance from p to the rank of estimate q among ``values``, in
+    numpy's linear quantile convention (the i-th smallest of n has rank
+    i/(n-1)); 0 when q is the exact p-quantile."""
+    s = np.sort(np.asarray(values, float))
+    n = len(s)
+    if n < 2:
+        return 0.0
+    lo, hi = np.searchsorted(s, q, "left"), np.searchsorted(s, q, "right")
+    if hi > lo:  # q is a sample: any rank of its copies
+        r_lo, r_hi = lo / (n - 1), (hi - 1) / (n - 1)
+    elif lo in (0, n):
+        r_lo = r_hi = 0.0 if lo == 0 else 1.0
+    else:  # between two samples: interpolated rank
+        r_lo = r_hi = (lo - 1 + (q - s[lo - 1]) / (s[lo] - s[lo - 1])) / (n - 1)
+    return max(0.0, r_lo - p, p - r_hi)
+
+
 def segment(X: np.ndarray, window_size: int, step: int):
     """SubsequenceSegmentation.py:359-446: valid_len = ceil(n/step), pad
     window_size zero rows at tail, row i = X[i*step : i*step+w] flattened

@@ -12,7 +12,7 @@ import numpy as np
 from tods_spark.datagen import token_table
 from tods_spark.functions import gorilla
 from tods_spark.operators import compression, tokens as TK
-from tods_spark.operators.rollup import full_cascade
+from tods_spark.operators.rollup import rollup_cascade, rollup_raw
 from tods_spark.operators.windows import moving_average, stat_window
 
 from . import oracle
@@ -20,8 +20,9 @@ from . import oracle
 
 def test_f9_tier_series_through_reference_kernels(spark):
     raw = token_table(spark, 8000, partitions=7).cache()
-    tiers = full_cascade(raw)
-    tiers["1m"] = tiers["1m"].cache()
+    t1m = rollup_raw(raw, "1m").cache()
+    t1h = rollup_cascade(t1m, "1m", "1h")
+    tiers = {"1m": t1m, "1h": t1h, "1d": rollup_cascade(t1h, "1h", "1d")}
 
     for tier in ("1m", "1h", "1d"):
         df = tiers[tier]

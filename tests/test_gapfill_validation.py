@@ -76,9 +76,10 @@ def test_gap_fill_tier_interpolates(spark):
 def test_gap_fill_tier_chunked_matches_perkey(spark):
     """Differential: the chunked interpolation windows (optimization r7 —
     parallelism |keys|×|chunks| instead of |keys|) are bit-identical to
-    the per-key form, including cross-chunk gaps (a gap spanning a chunk
-    boundary must read its prev/next observed point from OTHER chunks),
-    leading/trailing gaps within a chunk, and multi-key inputs."""
+    the per-key fill (tests/oracle.gap_fill_tier), including cross-chunk
+    gaps (a gap spanning a chunk boundary must read its prev/next
+    observed point from OTHER chunks), leading/trailing gaps within a
+    chunk, one-slot chunks, one chunk per key, and multi-key inputs."""
     rng = np.random.default_rng(7)
     rows = []
     for src in ("web", "chat", "code"):
@@ -92,17 +93,18 @@ def test_gap_fill_tier_chunked_matches_perkey(spark):
                                       "avg_n_tok"])
     df = spark.createDataFrame(pdf)
     cols = ["source", "window_start", "cnt", "avg_n_tok", "is_gap"]
-    old = (gapfill.gap_fill_tier(df, 60, chunk_intervals=0)
-           .select(cols).orderBy("source", "window_start").toPandas())
-    new = (gapfill.gap_fill_tier(df, 60, chunk_intervals=4)
-           .select(cols).orderBy("source", "window_start").toPandas())
-    pd.testing.assert_frame_equal(old, new, check_exact=True)
-    assert new["is_gap"].any() and (~new["is_gap"]).any()
+    want = oracle.gap_fill_tier(pdf, 60)[cols]
+    for kw in ({"chunk_intervals": 1}, {"chunk_intervals": 4}, {}):
+        got = (gapfill.gap_fill_tier(df, 60, **kw)
+               .select(cols).orderBy("source", "window_start").toPandas())
+        pd.testing.assert_frame_equal(got, want, check_exact=True, obj=str(kw))
+    assert want["is_gap"].any() and (~want["is_gap"]).any()
 
 
 def test_gap_fill_tier_rejects_negative_chunk_intervals(spark):
-    """A negative chunk width would order chunks in reverse time and let
-    interpolation read future points as preceding ones; 0 (per-key windows)
+    """A chunk width below 1 is rejected: 0 divides by zero, and a
+    negative width would order chunks in reverse time and let
+    interpolation read future points as preceding ones; one-slot chunks
     and the default keep their results."""
     pdf = pd.DataFrame(
         {
@@ -113,9 +115,10 @@ def test_gap_fill_tier_rejects_negative_chunk_intervals(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    with pytest.raises(ValueError, match="chunk_intervals"):
-        gapfill.gap_fill_tier(df, 60, chunk_intervals=-1)
-    for kw in ({}, {"chunk_intervals": 0}):
+    for bad in (-1, 0):
+        with pytest.raises(ValueError, match="chunk_intervals"):
+            gapfill.gap_fill_tier(df, 60, chunk_intervals=bad)
+    for kw in ({}, {"chunk_intervals": 1}):
         out = (gapfill.gap_fill_tier(df, 60, **kw)
                .orderBy("source", "window_start").toPandas())
         assert list(out["source"]) == ["chat"] * 4 + ["web"] * 5

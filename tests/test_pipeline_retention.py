@@ -321,3 +321,64 @@ def test_refresh_fence_survives_crash_before_first_mark(spark, tmp_path):
     done = CheckpointLog(ckpt).done_partitions("refresh", "1m")
     assert set(dates) <= done
     raw.unpersist()
+
+
+def test_digest_build_keeps_null_keys(spark, tmp_path):
+    """A null key is its own group in every tier of a digest build, as in
+    Spark's groupBy: each tier's sum(cnt) and the 1m checkpoint records'
+    rows_in equal the raw row count, and the algebraic columns equal the
+    build without digests."""
+    from tods_spark.plans.checkpoint import CheckpointLog
+
+    doc_n = F.substring("doc_id", 5, 15).cast("long")
+    raw = token_table(spark, 3000, partitions=4).withColumn(
+        "source",
+        F.when(doc_n % 4 == 0, F.lit(None)).otherwise(F.col("source")),
+    ).cache()
+    n = raw.count()
+    base_d, base_a = str(tmp_path / "digest"), str(tmp_path / "plain")
+    run_engine(spark, raw, base_d, with_digest=True)
+    run_engine(spark, raw, base_a, with_digest=False, pack=False)
+
+    recs = CheckpointLog(f"{base_d}/checkpoint.jsonl").records()
+    assert sum(r["rows_in"] for r in recs
+               if r["tier"] == "1m" and r["status"] == "done") == n
+    order = ["source", "window_start"]
+    for tier in ("1m", "1h", "1d"):
+        got, want = (
+            spark.read.parquet(f"{b}/tier_{tier}").drop("part_key")
+            .toPandas().sort_values(order, na_position="first",
+                                    ignore_index=True)
+            for b in (base_d, base_a)
+        )
+        assert int(got["cnt"].sum()) == n, tier
+        assert got["source"].isna().any(), tier
+        assert len(got) == len(want), tier
+        pd.testing.assert_frame_equal(
+            got[want.columns], want, check_exact=False, rtol=1e-12,
+            obj=tier)
+    raw.unpersist()
+
+
+def test_run_job_late_input_merges_under_default_job_ids(
+        spark, tmp_path, monkeypatch):
+    """`run_job.py --late-input` with no --job-id refreshes under its own
+    job id, so a build and a refresh run with defaults keep every row."""
+    import sys
+
+    import run_job
+
+    doc_n = F.substring("doc_id", 5, 15).cast("long")
+    raw = token_table(spark, 2000, partitions=4)
+    src, late = str(tmp_path / "raw"), str(tmp_path / "late")
+    raw.filter(doc_n % 7 != 0).write.parquet(src)
+    raw.filter(doc_n % 7 == 0).write.parquet(late)
+    out = str(tmp_path / "tiers")
+    for args in (["--input", src], ["--late-input", late]):
+        monkeypatch.setattr(sys, "argv",
+                            ["run_job.py", "--output", out, *args])
+        run_job.main()
+    for tier in ("1m", "1h", "1d"):
+        total = spark.read.parquet(f"{out}/tier_{tier}").agg(
+            F.sum("cnt")).collect()[0][0]
+        assert total == 2000, tier

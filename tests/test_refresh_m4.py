@@ -10,8 +10,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from tods_spark.functions import sketches
 from tods_spark.operators import downsample as DS
 from tods_spark.operators import rollup
+
+from . import oracle
 
 
 def _events(n=3000, seed=3):
@@ -110,6 +113,66 @@ def test_refresh_tier_side_never_shuffles(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan
+
+
+def test_refresh_merges_null_keys(spark):
+    """A null key is one group on both sides of the refresh: late rows
+    with a null key merge into the stored null-key window (null-safe
+    joins), with and without digests, and equal a full recompute."""
+    pdf = _events(1500)
+    pdf.loc[::5, "event_type"] = None
+    df = spark.createDataFrame(pdf)
+    on_time = df.filter(F.col("event_id") % 3 != 0)
+    late = df.filter(F.col("event_id") % 3 == 0)
+    kw = dict(value_col="value", keys=("event_type",))
+    for dig in (False, True):
+        tier = rollup.rollup_raw(on_time, "1h", with_digest=dig, **kw)
+        got = _canon(rollup.refresh_tier(tier, late, "1h", **kw).toPandas())
+        full = _canon(rollup.rollup_raw(df, "1h", with_digest=dig,
+                                        **kw).toPandas())
+        assert got["event_type"].isna().any()
+        algebraic = [c for c in full.columns if c != "qdigest"]
+        pd.testing.assert_frame_equal(got[algebraic], full[algebraic])
+        if dig:
+            for a, b in zip(got["qdigest"], full["qdigest"]):
+                np.testing.assert_array_equal(np.asarray(a), np.asarray(b))
+
+
+def test_refresh_digest_rank_error_bound(spark):
+    """The sketch bound survives a refresh of windows too big for exact
+    digests: 1m windows of 70-600 values, ~30% of them late, spread over
+    the input partitions (so stored and late digests are themselves
+    merges of per-batch partials). After refresh_tier every window's
+    digest estimates the 0.1/0.5/0.9/0.99 quantiles within rank error
+    1/K of the exact values (functions/sketches)."""
+    rng = np.random.default_rng(5)
+    sizes = rng.integers(70, 601, 60)
+    base = pd.Timestamp("2024-02-01")
+    pdf = pd.DataFrame({
+        "event_type": np.repeat(np.where(np.arange(60) % 2, "a", "b"), sizes),
+        "ts": base + pd.to_timedelta(
+            np.repeat(np.arange(60) // 2 * 60, sizes)
+            + rng.integers(0, 60, sizes.sum()), "s"),
+        "value": rng.lognormal(3, 1, sizes.sum()),
+        "late": rng.random(sizes.sum()) < 0.3,
+    }).sample(frac=1.0, random_state=1, ignore_index=True)
+    df = spark.createDataFrame(pdf)
+    kw = dict(value_col="value", keys=("event_type",))
+    tier = rollup.rollup_raw(df.filter(~F.col("late")), "1m",
+                             with_digest=True, **kw)
+    got = rollup.refresh_tier(tier, df.filter(F.col("late")), "1m",
+                              **kw).toPandas()
+    assert len(got) == 60 and got["cnt"].sum() == len(pdf)
+    pdf["w"] = pdf["ts"].dt.floor("1min")
+    values = {k: g["value"].to_numpy()
+              for k, g in pdf.groupby(["event_type", "w"])}
+    bound = 1.0 / sketches.K_DEFAULT
+    worst = max(
+        oracle.rank_error(values[(r.event_type, r.window_start)],
+                          sketches.digest_quantile(r.qdigest, p), p)
+        for r in got.itertuples() for p in (0.1, 0.5, 0.9, 0.99)
+    )
+    assert worst <= bound, (worst, bound)
 
 
 def test_m4_matches_pandas(spark):

@@ -4,10 +4,17 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import functions as F
 
 from tods_spark.datagen import gen_pandas, token_table
 from tods_spark.functions import sketches
-from tods_spark.operators.rollup import full_cascade, resample_mean, variance_from_state
+from tods_spark.operators.rollup import (
+    TIER_INTERVAL,
+    resample_mean,
+    rollup_cascade,
+    rollup_raw,
+    variance_from_state,
+)
 
 from . import oracle
 
@@ -29,6 +36,44 @@ def test_resample_golden_f3(spark):
     np.testing.assert_array_equal(out["ground_truth"], exp["g"])
 
 
+def _tiers(raw, with_digest=False) -> dict:
+    """raw → 1m → 1h → 1d."""
+    t1m = rollup_raw(raw, "1m", with_digest=with_digest)
+    t1h = rollup_cascade(t1m, "1m", "1h")
+    return {"1m": t1m, "1h": t1h, "1d": rollup_cascade(t1h, "1h", "1d")}
+
+
+def _collect_list_digest_rollup(raw, tier: str = "1m"):
+    """Oracle of the digest kernel: every raw value of a window collected
+    to the reduce side, the digest built from the whole sorted list."""
+    v = F.col("n_tok").cast("double")
+    out = (
+        raw.groupBy("source", F.window("ts", TIER_INTERVAL[tier]).alias("w"))
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.sum(v).alias("sum_n_tok"),
+            F.min(v).alias("min_n_tok"),
+            F.max(v).alias("max_n_tok"),
+            F.sum(v * v).alias("sum_sq_n_tok"),
+            F.sort_array(F.collect_list(v)).alias("_vals"),
+        )
+        .select(
+            "source", F.col("w.start").alias("window_start"), "cnt",
+            "sum_n_tok", "min_n_tok", "max_n_tok",
+            (F.col("sum_n_tok") / F.col("cnt")).alias("avg_n_tok"),
+            "sum_sq_n_tok", "_vals",
+        )
+    )
+
+    @F.pandas_udf("array<double>")
+    def build_digest(vals: pd.Series) -> pd.Series:
+        return vals.map(
+            lambda a: sketches.digest_from_values(np.asarray(a, float))
+        )
+
+    return out.withColumn("qdigest", build_digest("_vals")).drop("_vals")
+
+
 def _pandas_cascade(pdf: pd.DataFrame, tier_s: int) -> pd.DataFrame:
     b = (pdf["ts"].astype("int64") // 10**9 // tier_s) * tier_s
     g = pdf.assign(b=b).groupby(["source", "b"])["n_tok"]
@@ -46,7 +91,7 @@ def _pandas_cascade(pdf: pd.DataFrame, tier_s: int) -> pd.DataFrame:
 def test_cascade_matches_pandas(spark):
     n = 4000
     raw = token_table(spark, n, partitions=7)
-    tiers = full_cascade(raw)
+    tiers = _tiers(raw)
     pdf = gen_pandas(np.arange(n))
     for tier, secs in [("1m", 60), ("1h", 3600), ("1d", 86400)]:
         got = (
@@ -67,7 +112,7 @@ def test_cascade_matches_pandas(spark):
 
 def test_variance_from_state(spark):
     raw = token_table(spark, 2000, partitions=4)
-    t1m = full_cascade(raw)["1m"]
+    t1m = rollup_raw(raw, "1m")
     got = variance_from_state(t1m).orderBy("source", "window_start").toPandas()
     pdf = gen_pandas(np.arange(2000))
     b = (pdf["ts"].astype("int64") // 10**9 // 60) * 60
@@ -85,7 +130,7 @@ def test_digest_quantiles_cascade(spark):
     """Merged 1h digests approximate true 1h quantiles within the grid bound."""
     n = 6000
     raw = token_table(spark, n, partitions=5)
-    tiers = full_cascade(raw, with_digest=True)
+    tiers = _tiers(raw, with_digest=True)
     got = tiers["1h"].orderBy("source", "window_start").toPandas()
     pdf = gen_pandas(np.arange(n))
     b = (pdf["ts"].astype("int64") // 10**9 // 3600) * 3600
@@ -155,18 +200,16 @@ def test_merge_digest_series_matches_per_row_kernel():
 
 def test_partial_digest_rollup_equivalent(spark):
     """Map-side partial digest path: identical algebraic state to the
-    collect_list path, digests rank-equivalent (exact at small windows)."""
-    from tods_spark.operators.rollup import rollup_raw, rollup_raw_partial_digest
-
+    collect_list oracle, digests rank-equivalent (exact at small windows)."""
     n = 3000
     raw = token_table(spark, n, partitions=6)
     a = (
-        rollup_raw(raw, "1m", with_digest=True)
+        _collect_list_digest_rollup(raw, "1m")
         .orderBy("source", "window_start")
         .toPandas()
     )
     b = (
-        rollup_raw_partial_digest(raw, "1m")
+        rollup_raw(raw, "1m", with_digest=True)
         .orderBy("source", "window_start")
         .toPandas()
     )
@@ -185,8 +228,6 @@ def test_partial_digest_rollup_equivalent(spark):
 def test_weekly_tier_cascade_equals_direct(spark):
     """raw->1m->1h->1d->1w algebraic cascade equals the direct raw->1w
     rollup (both epoch-aligned 7-day windows)."""
-    from tods_spark.operators.rollup import rollup_cascade, rollup_raw
-
     raw = token_table(spark, 4000, cadence_s=3600)  # spans multiple weeks
     direct = (
         rollup_raw(raw, "1w")

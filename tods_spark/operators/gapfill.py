@@ -143,13 +143,14 @@ def gap_fill_tier(
     with one window over that table and an equi-join back on the window's
     own (keys, chunk) partitioning. Results are identical (same global
     prev/next observed points, same formula); parallelism becomes
-    |keys| × |chunks|. ``chunk_intervals=0`` restores the per-key windows;
-    a negative value raises ``ValueError`` (it would order chunks in
-    reverse time and interpolate from future points).
+    |keys| × |chunks|; the per-key windows are the one-chunk case.
+    ``chunk_intervals`` below 1 raises ``ValueError`` (0 divides by zero,
+    a negative width orders chunks in reverse time and interpolates from
+    future points).
     """
-    if chunk_intervals < 0:
+    if chunk_intervals < 1:
         raise ValueError(
-            f"chunk_intervals must be >= 0, got {chunk_intervals}")
+            f"chunk_intervals must be >= 1, got {chunk_intervals}")
     span = tier_df.groupBy(*keys).agg(
         F.min(window_col).alias("__lo__"), F.max(window_col).alias("__hi__")
     )
@@ -167,35 +168,6 @@ def gap_fill_tier(
         "is_gap", F.col(zero_cols[0]).isNull() if zero_cols else F.lit(False)
     )
     ts = F.col(window_col).cast("double")
-    if not chunk_intervals:
-        w = Window.partitionBy(*keys).orderBy(window_col)
-        for c in interp_cols:
-            prev_v = F.last(c, ignorenulls=True).over(
-                w.rowsBetween(Window.unboundedPreceding, 0)
-            )
-            prev_t = F.last(
-                F.when(F.col(c).isNotNull(), ts), ignorenulls=True
-            ).over(w.rowsBetween(Window.unboundedPreceding, 0))
-            next_v = F.first(c, ignorenulls=True).over(
-                w.rowsBetween(0, Window.unboundedFollowing)
-            )
-            next_t = F.first(
-                F.when(F.col(c).isNotNull(), ts), ignorenulls=True
-            ).over(w.rowsBetween(0, Window.unboundedFollowing))
-            frac = (ts - prev_t) / (next_t - prev_t)
-            interp = F.when(
-                F.col(c).isNotNull(), F.col(c)
-            ).otherwise(
-                F.when(next_t == prev_t, prev_v).otherwise(
-                    F.coalesce(prev_v + (next_v - prev_v) * frac,
-                               prev_v, next_v)
-                )
-            )
-            joined = joined.withColumn(c, interp)
-        for c in zero_cols:
-            joined = joined.withColumn(c, F.coalesce(F.col(c), F.lit(0)))
-        return joined
-
     chunk = (
         F.floor(F.col(window_col).cast("long")
                 / F.lit(int(interval_sec) * int(chunk_intervals)))

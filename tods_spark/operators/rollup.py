@@ -12,11 +12,18 @@ tier-to-tier (never recomputed from raw):
     var via (count, sum, sum_sq) composition
     quantiles                  — mergeable inverse-CDF grid (functions/sketches)
 
+Two functions carry all tier state: `raw_states` turns raw rows into
+unmerged state (a projection, or with digests a per-Arrow-batch partial
+kernel) and `merge_states` composes states that share a window. The raw →
+first tier rollup, the tier cascade and the late-data refresh are each
+`merge_states` over their inputs' states, so the tiers agree by
+construction.
+
 Scale notes (10^12 sequences, 1000 executors):
   * raw→1m is ONE shuffle on (source, minute) with map-side partial
-    aggregation; the digest is built per-group in an `applyInPandas` stage
-    AFTER the cheap algebraic agg only when requested, so the common path is
-    pure Tungsten whole-stage codegen.
+    aggregation: Tungsten whole-stage codegen for the algebraic columns,
+    and with digests one partial state per (batch, window) from the
+    vectorized kernel — raw values never cross the shuffle.
   * the heavy `source` key ("web" ≈ 70% of rows) makes (source) alone a skew
     bomb; the group key always includes the window, which spreads hot sources
     across time — plus AQE skew handling and optional salting (operators/skew)
@@ -26,6 +33,9 @@ Scale notes (10^12 sequences, 1000 executors):
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -54,7 +64,7 @@ AGG_COLS = [
 ]
 
 
-def rollup_raw(
+def raw_states(
     df: DataFrame,
     tier: str = "1m",
     ts_col: str = "ts",
@@ -62,85 +72,41 @@ def rollup_raw(
     keys: tuple[str, ...] = ("source",),
     with_digest: bool = False,
 ) -> DataFrame:
-    """raw → first tier. One shuffle, algebraic aggs, codegen'd end to end."""
-    interval = TIER_INTERVAL[tier]
-    v = F.col(value_col).cast("double")
-    out = (
-        df.groupBy(*keys, F.window(ts_col, interval).alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(v).alias("sum_n_tok"),
-            F.min(v).alias("min_n_tok"),
-            F.max(v).alias("max_n_tok"),
-            F.sum(v * v).alias("sum_sq_n_tok"),
-            *(
-                [F.sort_array(F.collect_list(v)).alias("_vals")]
-                if with_digest
-                else []
-            ),
-        )
-        .select(
-            *keys,
-            F.col("w.start").alias("window_start"),
-            F.lit(tier).alias("tier"),
-            "cnt",
-            "sum_n_tok",
-            "min_n_tok",
-            "max_n_tok",
-            (F.col("sum_n_tok") / F.col("cnt")).alias("avg_n_tok"),
-            "sum_sq_n_tok",
-            *(["_vals"] if with_digest else []),
-        )
-    )
-    if with_digest:
-        k = sketches.K_DEFAULT
+    """Raw rows → unmerged tier state: keys, window_start (the start of
+    the row's tier window) and the five algebraic columns, plus qdigest
+    `with_digest` — exactly `merge_states`' input. A null key is its own
+    group, as in Spark's groupBy.
 
-        @F.pandas_udf("array<double>")
-        def build_digest(vals: pd.Series) -> pd.Series:
-            return vals.map(
-                lambda a: sketches.digest_from_values(np.asarray(a, float), k)
-            )
-
-        out = out.withColumn("qdigest", build_digest("_vals")).drop("_vals")
-    return out
-
-
-def rollup_raw_partial_digest(
-    df: DataFrame,
-    tier: str = "1m",
-    ts_col: str = "ts",
-    value_col: str = "n_tok",
-    keys: tuple[str, ...] = ("source",),
-) -> DataFrame:
-    """raw → first tier with MAP-SIDE digest combine: each Arrow batch emits
-    one partial row (algebraic state + digest) per (keys, window) it
-    contains; the reduce merges partials. Shuffle volume is
-    O(#batches × #windows-per-batch × digest) instead of O(#rows) — the
-    map-side-combine pattern `collect_list` can't give you (it ships every
-    raw value). Same output schema as rollup_raw(with_digest=True); exact
-    while per-window counts stay ≤ K, grid-merged above (functions/sketches).
-    """
-    interval_s = TIER_SECONDS[tier]
+    Without a digest this is a projection, one state per raw row
+    (cnt 1, sum = min = max = v, sum_sq = v²); the aggregate above it
+    combines them map-side. With a digest each Arrow batch emits one
+    partial state per (keys, window) it holds — a numpy lexsort keyed
+    (group, value) plus reduceat for the algebraic columns, and the
+    window's digest is a slice of the sorted values (exact while
+    cnt <= K+1, an inverse-CDF grid above; functions/sketches). The
+    shuffle into `merge_states` then carries O(#batches × windows)
+    digests, never raw values — the map-side combine `collect_list`
+    cannot give."""
     key_list = list(keys)
-    partial_schema = (
-        ", ".join(f"{k} string" for k in key_list)
-        + ", window_start timestamp, cnt long, sum_n_tok double, "
-        + "min_n_tok double, max_n_tok double, sum_sq_n_tok double, "
-        + "qdigest array<double>"
+    if not with_digest:
+        v = F.col(value_col).cast("double")
+        return df.select(
+            *key_list,
+            F.window(ts_col, TIER_INTERVAL[tier])["start"].alias("window_start"),
+            F.lit(1).cast("long").alias("cnt"), v.alias("sum_n_tok"),
+            v.alias("min_n_tok"), v.alias("max_n_tok"),
+            (v * v).alias("sum_sq_n_tok"),
+        )
+    interval_s = TIER_SECONDS[tier]
+    schema = "".join(f"{k} string, " for k in key_list) + (
+        "window_start timestamp, cnt long, sum_n_tok double, "
+        "min_n_tok double, max_n_tok double, sum_sq_n_tok double, "
+        "qdigest array<double>"
     )
-
     k_sk = sketches.K_DEFAULT
     grid = np.linspace(0.0, 1.0, k_sk + 1)
 
     def partials(batches):
-        # vectorized per-batch partial aggregation (optimization round 7,
-        # guide §4.2): one lexsort keyed (group, value) + reduceat for the
-        # algebraic state; the per-window digest is a SLICE of the sorted
-        # value vector while cnt <= K (the exact-digest regime — the
-        # common case), np.quantile only for oversize windows. Replaces a
-        # per-group pandas loop (~4k Python iterations per task at sf0.1)
-        # with O(batch) numpy. Group identity via factorize (C speed);
-        # rows with a null key are dropped, matching pandas groupby.
         for pdf in batches:
             m = len(pdf)
             if m == 0:
@@ -148,20 +114,12 @@ def rollup_raw_partial_digest(
             ts = pdf[ts_col].to_numpy("datetime64[s]").astype("int64")
             w = (ts // interval_s) * interval_s
             v = pdf[value_col].to_numpy(np.float64)
-            g, _ = pd.factorize(pdf[key_list[0]])
-            g = g.astype(np.int64)
-            keep = g >= 0
-            for kcol in key_list[1:]:
+            g = None
+            for kcol in key_list:
                 c, u = pd.factorize(pdf[kcol])
-                keep &= c >= 0
-                g, _ = pd.factorize(g * (len(u) + 1) + c)
-                g = g.astype(np.int64)
-            if not keep.all():
-                g, w, v = g[keep], w[keep], v[keep]
-                pdf = pdf[keep]
-                m = len(pdf)
-                if m == 0:
-                    continue
+                c = np.where(c < 0, len(u), c)  # a null key is its own group
+                g = c if g is None else pd.factorize(g * (len(u) + 1) + c)[0]
+            g = g.astype(np.int64)
             wc, _ = pd.factorize(w)
             g = g * (int(wc.max()) + 1) + wc
             order = np.lexsort((v, g))
@@ -183,18 +141,31 @@ def rollup_raw_partial_digest(
             data["qdigest"] = digs
             yield pd.DataFrame(data)
 
-    part = df.select(*key_list, ts_col, value_col).mapInPandas(
-        partials, schema=partial_schema
-    )
-    # pin the merge width (same rationale as pack_tier, guide §2.5): the
-    # digest-merge stage's cost is per ROW through the Arrow boundary, and
-    # AQE's byte-based coalescing shrinks this small-bytes exchange to a
-    # handful of tasks; an explicit keyed repartition keeps the reduce
-    # wide and is satisfied by the following groupBy (same keys — no
-    # second exchange)
-    width = df.sparkSession.sparkContext.defaultParallelism
-    part = part.repartition(width, *key_list, "window_start")
-    return merge_states(part, key_list, tier)
+    return df.select(*key_list, ts_col, value_col).mapInPandas(
+        partials, schema=schema)
+
+
+def rollup_raw(
+    df: DataFrame,
+    tier: str = "1m",
+    ts_col: str = "ts",
+    value_col: str = "n_tok",
+    keys: tuple[str, ...] = ("source",),
+    with_digest: bool = False,
+) -> DataFrame:
+    """raw → first tier: `merge_states` over `raw_states`, one shuffle on
+    (keys, window) with map-side combine."""
+    states = raw_states(df, tier, ts_col, value_col, keys, with_digest)
+    if with_digest:
+        # pin the merge width (same rationale as pack_tier, guide §2.5):
+        # the digest merge's cost is per ROW through the Arrow boundary,
+        # and AQE's byte-based coalescing shrinks this small-bytes
+        # exchange to a handful of tasks; the keyed repartition keeps the
+        # reduce wide and satisfies the groupBy after it (no second
+        # exchange)
+        width = df.sparkSession.sparkContext.defaultParallelism
+        states = states.repartition(width, *keys, "window_start")
+    return merge_states(states, keys, tier)
 
 
 def merge_states(df: DataFrame, keys, tier: str) -> DataFrame:
@@ -202,9 +173,10 @@ def merge_states(df: DataFrame, keys, tier: str) -> DataFrame:
     row per window: cnt/sum/sum_sq add, min/max fold, avg is re-derived
     and digests merge through `sketches.merge_digest_series`, weighted by
     each state's cnt. Every batch path that combines tier state (the
-    raw→1m partial reduce, the cascade, the late-data refresh) goes
+    raw → first tier rollup, the cascade, the late-data refresh) goes
     through here, so the tiers agree by construction. `df` needs keys,
-    window_start and the five algebraic columns; qdigest is optional."""
+    window_start and the five algebraic columns (`raw_states`' output);
+    qdigest is optional."""
     has_digest = "qdigest" in df.columns
     aggs = [
         F.sum("cnt").alias("cnt"),
@@ -258,25 +230,6 @@ def variance_from_state(df: DataFrame) -> DataFrame:
     )
 
 
-def full_cascade(
-    raw: DataFrame,
-    keys: tuple[str, ...] = ("source",),
-    value_col: str = "n_tok",
-    with_digest: bool = False,
-) -> dict[str, DataFrame]:
-    """Run raw → 1m → 1h → 1d; returns {tier: DataFrame}. Digests, when
-    asked for, come from map-side partials (rollup_raw_partial_digest):
-    the raw→1m shuffle ships O(#batches × windows) digest rows, not
-    O(rows) raw values. rollup_raw(with_digest=True) is its test oracle."""
-    if with_digest:
-        t1m = rollup_raw_partial_digest(raw, "1m", value_col=value_col, keys=keys)
-    else:
-        t1m = rollup_raw(raw, "1m", value_col=value_col, keys=keys)
-    t1h = rollup_cascade(t1m, "1m", "1h", keys=keys)
-    t1d = rollup_cascade(t1h, "1h", "1d", keys=keys)
-    return {"1m": t1m, "1h": t1h, "1d": t1d}
-
-
 def resample_mean(
     df: DataFrame,
     interval: str = "5 minutes",
@@ -319,40 +272,44 @@ def refresh_tier(
     keys: tuple[str, ...] = ("source",),
 ) -> DataFrame:
     """Incremental continuous-aggregate refresh on late-arriving raw rows
-    (the TimescaleDB invalidation-log pattern): aggregate ONLY the late
-    batch to tier partials, then merge them into the stored tier with
-    `merge_states`, the composition every other tier path uses.
-    Equivalent to recomputing the tier from raw ∪ late — proven by the
-    oracle twin — at the cost of the late batch, never a raw rescan.
+    (the TimescaleDB invalidation-log pattern): turn ONLY the late batch
+    into tier state with `raw_states`, the kernel of the build, and merge
+    it into the stored tier with `merge_states`, the composition every
+    other tier path uses. Equivalent to recomputing the tier from
+    raw ∪ late — proven by the oracle twin — at the cost of the late
+    batch, never a raw rescan.
 
     Scale shape (10^12-row raw, tier orders of magnitude smaller but
-    still too big to shuffle casually): the late batch is one shuffle on
-    (keys, window) with map-side combine; the tier is split by broadcast
-    hash joins against the late partials' window set —
-      * untouched rows: LEFT ANTI broadcast(affected windows), never
+    still too big to shuffle casually): the tier is split by broadcast
+    hash joins against the late batch's window set, the distinct
+    (keys, window) of the late rows — a JVM aggregate, so the digest
+    kernel runs once —
+      * untouched rows: LEFT ANTI broadcast(late windows), never
         exchanged;
-      * affected rows: LEFT SEMI broadcast(affected windows), unioned with
-        the late partials and merged by `merge_states`. Only these rows
-        cross an exchange, and it is late-sized: at most one tier row per
-        late window. Windows the tier has never seen come out of the same
-        merge, with the late partial as their only state.
-    pipeline.refresh_engine passes the stored rows of the late days only,
-    so the untouched branch is the rest of those days' partitions.
+      * affected rows: LEFT SEMI broadcast(late windows), unioned with
+        the late states in one `merge_states`. That exchange is
+        late-sized (at most one tier row per late window, late states
+        combined map-side) and carries no raw value. Windows the tier has
+        never seen come out of the same merge, with late state only.
+    Joins match null keys (null-safe equality), as the merge's groupBy
+    groups them. pipeline.refresh_engine passes the stored rows of the
+    late days only, so the untouched branch is the rest of those days'
+    partitions.
     """
     dig = ["qdigest"] if "qdigest" in tier_df.columns else []
-    state = [*keys, "window_start", "cnt", "sum_n_tok", "min_n_tok",
-             "max_n_tok", "sum_sq_n_tok", *dig]
-    late = rollup_raw(
-        late_raw, tier, ts_col=ts_col, value_col=value_col, keys=keys,
-        with_digest=bool(dig),
-    ).select(*state)
-    windows = F.broadcast(late.select(*keys, "window_start"))
     on = [*keys, "window_start"]
-    affected = tier_df.join(windows, on, "left_semi").select(*state)
+    late = raw_states(late_raw, tier, ts_col, value_col, keys, bool(dig))
+    windows = F.broadcast(
+        raw_states(late_raw, tier, ts_col, value_col, keys)
+        .select(*[F.col(c).alias(f"_late_{c}") for c in on]).distinct()
+    )
+    hit = reduce(operator.and_,
+                 [F.col(c).eqNullSafe(F.col(f"_late_{c}")) for c in on])
+    affected = tier_df.join(windows, hit, "left_semi").select(*late.columns)
     # rebuilt from state so the input tier needs only keys + window + the
     # five algebraic columns (derived tier/avg columns are optional)
     untouched = (
-        tier_df.join(windows, on, "left_anti")
+        tier_df.join(windows, hit, "left_anti")
         .withColumn("avg_n_tok", F.col("sum_n_tok") / F.col("cnt"))
         .select(*on, F.lit(tier).alias("tier"), *AGG_COLS, *dig)
     )

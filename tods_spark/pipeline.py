@@ -36,12 +36,7 @@ from datetime import datetime
 from pyspark.sql import SparkSession, functions as F
 
 from tods_spark.operators import compression
-from tods_spark.operators.rollup import (
-    refresh_tier,
-    rollup_cascade,
-    rollup_raw,
-    rollup_raw_partial_digest,
-)
+from tods_spark.operators.rollup import refresh_tier, rollup_cascade, rollup_raw
 from tods_spark.plans.checkpoint import CheckpointLog, run_tier
 from tods_spark.plans.retention import DEFAULT_HORIZON_DAYS, expire_partitions
 from tods_spark.sources.storage import PartitionedTable
@@ -113,12 +108,8 @@ def run_engine(
             keys=keys, order_col="doc_id",
         )
 
-    # digests come from map-side partials: O(#batches × windows) digest
-    # rows through the raw→1m shuffle, not O(rows) raw values
-    raw_to_1m = _rows_only(
-        rollup_raw_partial_digest if with_digest else rollup_raw,
-        tier="1m", value_col=value_col, keys=keys,
-    )
+    raw_to_1m = _rows_only(rollup_raw, tier="1m", value_col=value_col,
+                           keys=keys, with_digest=with_digest)
     t1m_table = PartitionedTable(spark, f"{base_dir}/tier_1m", ["part_key"])
     packed_table = PartitionedTable(spark, f"{base_dir}/tier_1m_gorilla",
                                     ["part_key"])
