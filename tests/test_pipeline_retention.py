@@ -52,12 +52,21 @@ def test_run_engine_end_to_end_and_resume(spark, tmp_path):
     )
     assert r3["expired"]["1m"], "old 1m partitions must be dropped"
     t1m_after = spark.read.parquet(f"{base}/tier_1m")
-    assert t1m_after.count() < n1m
+    n1m_after = t1m_after.count()
+    assert n1m_after < n1m
     # 1d tier still holds the full history (rollup-based retention)
     assert (
         spark.read.parquet(f"{base}/tier_1d").agg(F.sum("cnt")).collect()[0][0]
         == 12000
     )
+
+    # a verifying resume after retention leaves the expired days expired:
+    # they are neither re-fingerprinted (flagged drifted) nor rebuilt
+    r4 = run_engine(spark, raw, base, with_digest=False, pack=False,
+                    verify_resume=True)
+    assert not r4["1m"]["computed"] and not r4["1m"]["drifted"]
+    assert set(r3["expired"]["1m"]) <= set(r4["1m"]["skipped"])
+    assert spark.read.parquet(f"{base}/tier_1m").count() == n1m_after
     raw.unpersist()
 
 

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from tods_spark.datagen import gen_pandas, token_table
@@ -155,6 +156,62 @@ def test_digest_quantiles_cascade(spark):
             assert lo - 1e-9 <= est <= hi + 1e-9, (
                 got["source"][i], got["window_start"][i], p, est, lo, hi, n,
             )
+
+
+@pytest.mark.parametrize("seed", [
+    11,
+    pytest.param(12, marks=pytest.mark.xfail(strict=True, reason=(
+        "the weighted-grid merge of partial 1m digests reaches rank error "
+        "0.0191 > 1/K on this input (ROADMAP item 9)"))),
+    13,
+    14,
+])
+def test_digest_rank_error_bound_every_tier(spark, seed):
+    """The sketch bound at every tier of a digest build, not only at 1m:
+    two days of 1m windows, a third of them with 70-600 values (grid
+    digests) and the rest with 1-10 (exact ones), rolled up raw → 1m → 1h
+    → 1d by rollup_raw(with_digest=True) and rollup_cascade. Every
+    window's digest must estimate the 0.1/0.5/0.9/0.99 quantiles within
+    rank error 1/K of the window's exact values (functions/sketches). The
+    raw rows reach the partial kernel as one partition, so its Arrow
+    batches, and the partial digests they split each window into, do not
+    depend on the core count."""
+    rng = np.random.default_rng(seed)
+    base = pd.Timestamp("2024-02-01")
+    frames = []
+    for key in ("a", "b"):
+        minute = np.concatenate(
+            [60 * h + rng.choice(60, 9, replace=False) for h in range(48)])
+        sizes = np.where(rng.random(len(minute)) < 1 / 3,
+                         rng.integers(70, 601, len(minute)),
+                         rng.integers(1, 11, len(minute)))
+        frames.append(pd.DataFrame({
+            "event_type": key,
+            "ts": base + pd.to_timedelta(
+                np.repeat(minute * 60, sizes)
+                + rng.integers(0, 60, sizes.sum()), "s"),
+            "value": rng.lognormal(3, 1, sizes.sum()),
+        }))
+    pdf = pd.concat(frames).sample(frac=1.0, random_state=1,
+                                   ignore_index=True)
+    keys = ("event_type",)
+    t1m = rollup_raw(spark.createDataFrame(pdf).coalesce(1), "1m",
+                     value_col="value", keys=keys, with_digest=True)
+    t1h = rollup_cascade(t1m, "1m", "1h", keys=keys)
+    t1d = rollup_cascade(t1h, "1h", "1d", keys=keys)
+    worst = {}
+    for tier, df, freq in (("1m", t1m, "1min"), ("1h", t1h, "1h"),
+                           ("1d", t1d, "1D")):
+        got = df.toPandas()
+        values = {k: g.to_numpy() for k, g in pdf.groupby(
+            ["event_type", pdf["ts"].dt.floor(freq)])["value"]}
+        assert len(got) == len(values) and got["cnt"].sum() == len(pdf), tier
+        worst[tier] = max(
+            oracle.rank_error(values[(r.event_type, r.window_start)],
+                              sketches.digest_quantile(r.qdigest, p), p)
+            for r in got.itertuples() for p in (0.1, 0.5, 0.9, 0.99))
+    bound = 1.0 / sketches.K_DEFAULT
+    assert all(w <= bound for w in worst.values()), (worst, bound)
 
 
 def test_datagen_partition_independent(spark):

@@ -164,7 +164,8 @@ def run_tier(
     Partitions are days. Input day d (of `in_ts_col`) feeds the output
     partition `span_start(d, tier)` (a day of `out_ts_col`); the days that
     feed an output partition are its members. A partition is skipped when
-    its done record covers its members, finished from the written bytes
+    its done record covers its members or its latest record is an expiry
+    (`retention.expire_partitions`), finished from the written bytes
     (`recovered`) when its latest overwrite is this (job_id, tier)'s
     commit of all its members, and computed otherwise: `compute(rows,
     days)` gets the rows of its member days and the days, the result is
@@ -181,9 +182,9 @@ def run_tier(
     finished and writes a second output from it before their marks, so
     the two commit together.
 
-    verify_resume=True re-fingerprints the WRITTEN bytes of every 'done'
-    partition before trusting it (one groupBy over the pruned read-back):
-    a partition that drifted from its record, or went missing, is
+    verify_resume=True re-fingerprints the WRITTEN bytes of every skipped
+    'done' partition before trusting it (one groupBy over the pruned
+    read-back): a partition that drifted from its record, or went missing, is
     recomputed — never finished from a commit — so a resume detects
     silent table corruption instead of skipping over it.
 
@@ -212,29 +213,34 @@ def run_tier(
         fed = {span_start(d, tier) for d in changed}
         members = {p: m for p, m in members.items() if p in fed}
 
-    # the latest done record of each output partition of (job_id, tier)
+    # the latest done or expired record of each output partition of
+    # (job_id, tier); a partition retention dropped stays dropped
     recorded = {
         r["partition"]: r for r in ckpt.records()
         if r["job_id"] == job_id and r["tier"] == tier
-        and r["status"] == "done"
+        and r["status"] in ("done", "expired")
     }
+    expired = {p for p in members
+               if p in recorded and recorded[p]["status"] == "expired"}
     skipped = [
-        p for p in members if p in recorded
-        and set(members[p]) <= set(recorded[p].get("inputs", [p]))
+        p for p in members if p in expired or (
+            p in recorded
+            and set(members[p]) <= set(recorded[p].get("inputs", [p])))
     ]
     todo = [p for p in members if p not in skipped]
     drifted: list[str] = []
 
-    if verify_resume and skipped and out_table.exists():
+    verify = [p for p in skipped if p not in expired]
+    if verify_resume and verify and out_table.exists():
         written = out_table.read().filter(
-            F.col(partition_col).isin(skipped)
+            F.col(partition_col).isin(verify)
         )
         actual = _per_partition_stats(written, partition_col)
         # a legitimately-empty partition has NO group in the read-back
         # stats but was recorded as (0, 0) — default the read-back side
         # so it isn't flagged drifted (and recomputed) on every resume
         drifted = [
-            p for p in skipped if actual.get(p, (0, 0))
+            p for p in verify if actual.get(p, (0, 0))
             != (recorded[p]["rows_out"], recorded[p]["fingerprint"])
         ]
         skipped = [p for p in skipped if p not in drifted]
