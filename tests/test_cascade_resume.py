@@ -19,8 +19,7 @@ from tods_spark.datagen import token_table
 from tods_spark.operators.compression import unpack_tier
 from tods_spark.operators.rollup import rollup_cascade
 from tods_spark.pipeline import refresh_engine, run_engine
-from tods_spark.plans import checkpoint
-from tods_spark.plans.checkpoint import CheckpointLog
+from tods_spark.plans.checkpoint import CheckpointLog, run_tier
 from tods_spark.sources.storage import PartitionedTable
 
 
@@ -150,27 +149,27 @@ def test_pack_crash_recomputes_with_its_1m_partitions(spark, tmp_path,
 
 def test_build_crash_after_1m_commit_is_finished_on_retry(spark, tmp_path,
                                                           monkeypatch):
-    """A build that dies right after the 1m partition write returned (in
-    the read-back stats, before any mark) is finished on retry, not
-    recomputed: the retry reports those partitions as recovered, tier_1m
-    holds the one committed write, and the 1m marks and the packed tier
-    equal a clean run's."""
+    """A build that dies right after the 1m partition write returned (at
+    its first mark, after the commit and the pack) is finished on retry,
+    not recomputed: the retry reports those partitions as recovered,
+    tier_1m holds the one committed write, and the 1m marks and the
+    packed tier equal a clean run's."""
     raw = token_table(spark, 4000, partitions=3)
     clean = str(tmp_path / "clean")
     run_engine(spark, raw, clean, with_digest=False)
 
-    real = checkpoint._per_partition_stats
+    real = CheckpointLog.mark
     calls = []
 
-    def crash_once(*args, **kwargs):
+    def crash_once(self, **record):
         calls.append(1)
         if len(calls) == 1:
-            raise RuntimeError("planted stats crash")
-        return real(*args, **kwargs)
+            raise RuntimeError("planted mark crash")
+        return real(self, **record)
 
-    monkeypatch.setattr(checkpoint, "_per_partition_stats", crash_once)
+    monkeypatch.setattr(CheckpointLog, "mark", crash_once)
     base = str(tmp_path / "crash")
-    with pytest.raises(RuntimeError, match="planted stats crash"):
+    with pytest.raises(RuntimeError, match="planted mark crash"):
         run_engine(spark, raw, base, with_digest=False)
     assert not _records(base)
 
@@ -247,6 +246,93 @@ def test_refresh_reads_only_the_days_it_rewrites(spark, tmp_path):
     raw.unpersist()
 
 
+def _job_group(spark, group: str, fn):
+    """fn() run under Spark job group `group`; returns (its result, the
+    ids of the jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_build_job_budget(spark, tmp_path):
+    """A fresh digest build with the pack runs at most ten Spark jobs: the
+    raw day count, each tier's write and the pack. Tier stats come from
+    the write itself and tier reads run no listing or schema-inference
+    job."""
+    raw = token_table(spark, 3000, partitions=3)
+    rep, jobs = _job_group(spark, "build-budget", lambda: run_engine(
+        spark, raw, str(tmp_path / "eng"), with_digest=True))
+    assert all(rep[t]["computed"] for t in ("1m", "1h", "1d"))
+    assert 0 < len(jobs) <= 10, jobs
+
+
+def test_stored_fingerprints_equal_written_bytes(spark, tmp_path):
+    """The (rows, fingerprint) a write observes and its marks record equal
+    the read-back of the written bytes: a verifying resume after a build
+    (digest, pack, weekly) and a verifying pass over a refresh's
+    partitions find no drift and recompute nothing."""
+    raw = token_table(spark, 1500, cadence_s=3600).cache()  # ~9 weeks
+    doc_n = F.substring("doc_id", 5, 15).cast("long")
+    first = raw.agg(F.min("ts")).collect()[0][0].date()
+    is_late = (doc_n % 5 == 0) & (F.col("ts") < str(first + timedelta(days=9)))
+    late = raw.filter(is_late)
+    base = str(tmp_path / "eng")
+    run_engine(spark, raw.filter(~is_late), base, with_weekly=True)
+    rep = run_engine(spark, raw.filter(~is_late), base, with_weekly=True,
+                     verify_resume=True)
+    for t in ("1m", "1h", "1d", "1w"):
+        assert rep[t]["skipped"], t
+        assert not rep[t]["drifted"] and not rep[t]["computed"], t
+
+    assert refresh_engine(spark, late, base, with_weekly=True)["1m"]["merged"]
+    # the refresh's own run_tier passes, with verify_resume: every
+    # partition it wrote is skipped after its fingerprint is checked
+    ckpt = CheckpointLog(f"{base}/checkpoint.jsonl")
+    t1m = PartitionedTable(spark, f"{base}/tier_1m", ["part_key"])
+    rep = {"1m": run_tier(spark, late, None, t1m, ckpt, "refresh", "1m",
+                          verify_resume=True)}
+    for tier, _table, up in pipeline._cascade_up(
+            spark, base, ckpt, "refresh", ("source",), True,
+            changed=rep["1m"]["skipped"], verify_resume=True):
+        rep[tier] = up
+    for t in ("1m", "1h", "1d", "1w"):
+        assert rep[t]["skipped"], t
+        assert not rep[t]["drifted"] and not rep[t]["computed"], t
+    raw.unpersist()
+
+
+def test_refresh_lists_only_its_days(spark, tmp_path):
+    """A refresh of 2 days on a tree of more than 32 day directories (the
+    count above which Spark lists a directory's children in a Spark job,
+    one task each) lists only the directories it reads: no stage of the
+    refresh has one task per day directory."""
+    raw = token_table(spark, 1000, cadence_s=3600).cache()  # ~42 days
+    day = F.date_format("ts", "yyyy-MM-dd")
+    days = sorted(r[0] for r in raw.select(day).distinct().collect())
+    assert len(days) > 32
+    doc_n = F.substring("doc_id", 5, 15).cast("long")
+    is_late = (doc_n % 3 == 0) & day.isin(days[5], days[20])
+    base = str(tmp_path / "eng")
+    run_engine(spark, raw.filter(~is_late), base)
+    assert len(PartitionedTable(spark, f"{base}/tier_1m",
+                                ["part_key"]).partitions()) == len(days)
+
+    rep, jobs = _job_group(spark, "refresh-listing", lambda: refresh_engine(
+        spark, raw.filter(is_late), base))
+    assert rep["1d"]["refreshed"] == [days[5], days[20]]
+    tracker = spark.sparkContext.statusTracker()
+    stages = [tracker.getStageInfo(s) for j in jobs
+              for s in tracker.getJobInfo(j).stageIds]
+    tasks = [st.numTasks for st in stages if st is not None]
+    assert tasks and len(days) not in tasks, tasks
+    raw.unpersist()
+
+
 def test_full_skip_resume_job_budget(spark, tmp_path):
     """A resume with every tier done runs at most two Spark jobs (the raw
     partition count) and rewrites nothing, the packed tier included."""
@@ -256,14 +342,8 @@ def test_full_skip_resume_job_budget(spark, tmp_path):
     before = _files(base + "/tier_1m_gorilla")
     assert before
 
-    sc = spark.sparkContext
-    sc.setJobGroup("resume-budget", "full-skip resume")
-    try:
-        rep = run_engine(spark, raw, base, with_digest=True)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("resume-budget")
+    rep, jobs = _job_group(spark, "resume-budget", lambda: run_engine(
+        spark, raw, base, with_digest=True))
     assert all(not rep[t]["computed"] and rep[t]["skipped"]
                for t in ("1m", "1h", "1d"))
     assert 0 < len(jobs) <= 2, jobs

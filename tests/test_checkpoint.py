@@ -113,19 +113,18 @@ def test_verify_resume_detects_and_heals_drift(spark, tmp_path):
 
 def test_manifest_snapshots(spark, tmp_path):
     """Every partition overwrite appends a commit record (Iceberg-style
-    snapshot history); run_tier additionally attaches per-partition row
-    counts as an append-only stats record; the underscore-prefixed manifest
-    never pollutes parquet reads."""
+    snapshot history); run_tier's commit record carries each written
+    partition's (rows, fingerprint), observed in the write; the
+    underscore-prefixed manifest never pollutes parquet reads."""
     raw = token_table(spark, 1500, partitions=2)
     out = PartitionedTable(spark, str(tmp_path / "tbl"), ["part_key"])
     ckpt = CheckpointLog(str(tmp_path / "ck.jsonl"))
     run_tier(spark, raw, _compute, out, ckpt, job_id="m", tier="1m")
     snaps = tbl_snaps = out.snapshots()
     commits = [s for s in snaps if s["op"] == "overwrite_partitions"]
-    stats = [s for s in snaps if s["op"] == "stats"]
-    assert len(commits) == 1 and len(stats) == 1
-    assert stats[0]["for_snapshot"] == commits[0]["snapshot_id"]
-    assert sum(stats[0]["partitions"].values()) == out.read().count()
+    assert len(commits) == len(snaps) == 1
+    assert sum(n for n, _fp in commits[0]["stats"].values()) \
+        == out.read().count()
     # second run: resume skips everything → no new commit
     run_tier(spark, raw, _compute, out, ckpt, job_id="m", tier="1m")
     assert len(out.snapshots()) == len(tbl_snaps)

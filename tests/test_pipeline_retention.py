@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from tods_spark.datagen import token_table
 from tods_spark.operators import preprocessing as PP
 from tods_spark.pipeline import run_engine
+from tods_spark.sources.storage import PartitionedTable
 
 
 def test_run_engine_end_to_end_and_resume(spark, tmp_path):
@@ -54,6 +55,13 @@ def test_run_engine_end_to_end_and_resume(spark, tmp_path):
     t1m_after = spark.read.parquet(f"{base}/tier_1m")
     n1m_after = t1m_after.count()
     assert n1m_after < n1m
+    # the pack expires with the 1m tier, whatever `pack` the run was given
+
+    def days(tier):
+        return {p["part_key"] for p in PartitionedTable(
+            spark, f"{base}/tier_{tier}", ["part_key"]).partitions()}
+
+    assert days("1m_gorilla") and days("1m_gorilla") <= days("1m")
     # 1d tier still holds the full history (rollup-based retention)
     assert (
         spark.read.parquet(f"{base}/tier_1d").agg(F.sum("cnt")).collect()[0][0]
@@ -228,8 +236,8 @@ def test_refresh_fence_survives_crash_mid_mark_loop(spark, tmp_path):
     per-partition mark loop: some dates are marked, some not. Re-merging
     the unmarked dates would double-count every affected window; their
     commit in the tier_1m manifest makes the retry finish them instead
-    (marks backfilled from a read-back) and re-derive the idempotent
-    cascade."""
+    (marks backfilled from the stats that commit record observed in the
+    write) and re-derive the idempotent cascade."""
     import json as J
 
     from tods_spark.pipeline import refresh_engine
@@ -268,8 +276,8 @@ def test_refresh_fence_survives_crash_mid_mark_loop(spark, tmp_path):
             .agg(F.sum("cnt")).collect()[0][0]
             == 8000
         ), tier
-    # the backfilled marks carry read-back fingerprints: a third run is
-    # fully fenced and a verify_resume-style audit sees no drift
+    # the backfilled marks carry the fingerprints the write observed, so
+    # every refreshed date is done
     from tods_spark.plans.checkpoint import CheckpointLog
 
     done = CheckpointLog(ckpt).done_partitions("refresh", "1m")
@@ -279,11 +287,12 @@ def test_refresh_fence_survives_crash_mid_mark_loop(spark, tmp_path):
 
 def test_refresh_fence_survives_crash_before_first_mark(spark, tmp_path):
     """A crash BETWEEN the 1m overwrite commit and the FIRST
-    per-partition mark (the read-back stats job runs before any mark is
-    appended) leaves zero marks. The write's snapshot in the tier_1m
-    manifest — appended the moment the overwrite returns, naming the job,
-    the tier and the days — must fence that retry: no re-merge, all marks
-    backfilled, no double count."""
+    per-partition mark (the pack write runs before any mark is appended)
+    leaves zero marks. The write's snapshot in the tier_1m manifest —
+    appended the moment the overwrite returns, naming the job, the tier,
+    the days and each day's (rows, fingerprint) observed in the write —
+    must fence that retry: no re-merge, all marks backfilled from it, no
+    double count."""
     import json as J
 
     from tods_spark.pipeline import refresh_engine
@@ -302,7 +311,7 @@ def test_refresh_fence_survives_crash_before_first_mark(spark, tmp_path):
 
     # simulate the crash: drop EVERY per-partition 1m refresh mark but
     # keep the batch-level commit record (the overwrite committed, then
-    # the process died inside the read-back, before the first mark)
+    # the process died before the first mark)
     ckpt = f"{base}/checkpoint.jsonl"
     recs = [J.loads(ln) for ln in open(ckpt) if ln.strip()]
     kept = [

@@ -168,6 +168,16 @@ def rollup_raw(
     return merge_states(states, keys, tier)
 
 
+def state_aggs() -> list:
+    """The five algebraic tier-state aggregates, each named as its column:
+    cnt/sum/sum_sq add, min/max fold. Batch (`merge_states`) and streaming
+    (`streaming_cascade`) tiers compose state with this one list."""
+    return [F.sum("cnt").alias("cnt"), F.sum("sum_n_tok").alias("sum_n_tok"),
+            F.min("min_n_tok").alias("min_n_tok"),
+            F.max("max_n_tok").alias("max_n_tok"),
+            F.sum("sum_sq_n_tok").alias("sum_sq_n_tok")]
+
+
 def merge_states(df: DataFrame, keys, tier: str) -> DataFrame:
     """Compose the tier states that share (keys, window_start) into one
     row per window: cnt/sum/sum_sq add, min/max fold, avg is re-derived
@@ -178,13 +188,7 @@ def merge_states(df: DataFrame, keys, tier: str) -> DataFrame:
     window_start and the five algebraic columns (`raw_states`' output);
     qdigest is optional."""
     has_digest = "qdigest" in df.columns
-    aggs = [
-        F.sum("cnt").alias("cnt"),
-        F.sum("sum_n_tok").alias("sum_n_tok"),
-        F.min("min_n_tok").alias("min_n_tok"),
-        F.max("max_n_tok").alias("max_n_tok"),
-        F.sum("sum_sq_n_tok").alias("sum_sq_n_tok"),
-    ]
+    aggs = state_aggs()
     if has_digest:
         # one collect_list of structs: guarantees (digest, cnt) stay paired
         aggs.append(

@@ -10,6 +10,7 @@ on a cluster).
       each tier: checkpointed partition write    plans/checkpoint, sources/storage
       → (optional) small-file compaction         sources/storage
       → (optional) retention expiry per tier     plans/retention
+        (the pack expires with the 1m tier)
 
 Every tier is written by `plans.checkpoint.run_tier`, the one place that
 maps input partitions to output partitions: an input day feeds the output
@@ -140,6 +141,9 @@ def run_engine(
                 table, tier, now, horizons.get(tier), ckpt, job_id=job_id
             )
             report.setdefault("expired", {})[tier] = dropped
+        # the pack is a copy of the 1m tier: same horizon, and no records
+        # (it keeps none of its own)
+        expire_partitions(packed_table, "1m", now, horizons.get("1m"))
     return report
 
 
@@ -188,7 +192,7 @@ def refresh_engine(
                                     ["part_key"])
 
     def merge_late(late_rows, days):
-        stored = t1m_table.read().filter(F.col("part_key").isin(days))
+        stored = t1m_table.read(days=days)
         return refresh_tier(stored.drop("part_key"), late_rows, "1m",
                             value_col=value_col, keys=keys)
 

@@ -16,10 +16,14 @@ Design:
   * the checkpoint table holds one JSON-lines record per computed (job_id,
     tier, output partition), each carrying THAT partition's member days
     (`inputs`), rows_in, rows_out and fingerprint (order-insensitive
-    xxhash64 sum of the partition's written rows — computed from a
-    read-back of the written bytes, so resume-time drift in any single
-    partition is detectable), plus status and wall seconds; a done
-    partition whose input gained a member day goes back to todo;
+    xxhash64 sum of the partition's written rows, so resume-time drift in
+    any single partition is detectable), plus status and wall seconds; a
+    done partition whose input gained a member day goes back to todo;
+  * rows_out and the fingerprint are observed in the write that produced
+    the bytes, on the rows the writer consumed, and come from its commit
+    record: no tier is read back or executed twice for them (a float
+    partial computed twice can differ by an ulp). Only `verify_resume`
+    reads the bytes back, to audit them;
   * `run_tier` plans the partition set without scanning history: a raw
     DataFrame input gives its partition set and every partition's rows_in
     in one groupBy(part_key).count() job; a tier input is the
@@ -28,15 +32,18 @@ Design:
     read (no Spark job); the table is opened only when some partition is
     still to do;
   * the member days of the todo output partitions are the only input read
-    (partition pruning — the filter lands on the parquet scan); the todo
+    (a tier input lists and opens only their directories, read with the
+    schema of its latest commit, so no schema-inference job runs); the todo
     partitions are written with dynamic partition overwrite (idempotent),
     then marked done;
   * the write's manifest snapshot is its commit record (as Iceberg's
     Flink sink keeps its committed checkpoint id in the snapshot summary):
-    job_id, tier and each written partition with its member days;
+    job_id, tier, the written schema and each written partition with its
+    member days and (rows, fingerprint);
   * a crash between "write" and "mark" is finished on retry from the
-    written bytes (stats, second output, mark), not recomputed: the
-    late-data merge is incremental and must run at most once;
+    commit record and the written bytes (second output, mark), not
+    recomputed: the late-data merge is incremental and must run at most
+    once;
   * a second output of a tier (the 1m tier's Gorilla pack) is written from
     the read-back of exactly the todo partitions, after the tier write and
     before the marks; it keeps no records of its own, so the tier's record
@@ -52,8 +59,6 @@ an Iceberg table with MERGE; the interface is the same.
 
 from __future__ import annotations
 
-import json
-import os
 import time
 import uuid
 from datetime import date, timedelta
@@ -61,22 +66,13 @@ from datetime import date, timedelta
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from tods_spark.operators.rollup import TIER_SECONDS
-from tods_spark.sources.storage import PartitionedTable
+from tods_spark.sources.storage import (JsonLines, PartitionedTable,
+                                         fingerprint, partition_stats)
 
 _EPOCH = date(1970, 1, 1)
 
 
-class CheckpointLog:
-    def __init__(self, path: str):
-        self.path = path
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-
-    def records(self) -> list[dict]:
-        if not os.path.exists(self.path):
-            return []
-        with open(self.path) as f:
-            return [json.loads(line) for line in f if line.strip()]
-
+class CheckpointLog(JsonLines):
     def done_partitions(self, job_id: str, tier: str) -> set[str]:
         return {
             r["partition"]
@@ -86,35 +82,25 @@ class CheckpointLog:
 
     def mark(self, **record) -> None:
         record.setdefault("ts", time.time())
-        with open(self.path, "a") as f:
-            f.write(json.dumps(record) + "\n")
-            f.flush()
-            os.fsync(f.fileno())
+        self.append(record)
 
 
-def _per_partition_stats(df: DataFrame, partition_col: str) -> dict:
-    """Per-partition (rows, fingerprint): fingerprint is the order-
-    insensitive sum (mod 2^63) of per-row xxhash64 over the data columns —
-    ONE groupBy job, no collect of data rows, one tiny row per partition.
-    Per-partition (not whole-result) lineage is what lets resume detect
-    drift in a single recomputed partition."""
-    data_cols = [c for c in df.columns if c != partition_col]
-    rows = (
-        df.groupBy(partition_col)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.xxhash64(*[F.col(c) for c in data_cols]).cast("decimal(38,0)")
-            ).alias("fp"),
-        )
-        .collect()
-    )
-    # str() the key: partition values read back from directory paths are
-    # type-inferred (yyyy-MM-dd → DATE) while todo keys are strings
-    return {
-        str(r[partition_col]): (int(r["n"]), int(int(r["fp"] or 0) & ((1 << 63) - 1)))
-        for r in rows
-    }
+def read_back_stats(table: PartitionedTable, parts: list[str],
+                    partition_col: str = "part_key") -> dict:
+    """{partition: (rows, fingerprint)} of the bytes on disk of `parts`:
+    one groupBy over their read-back. This is `verify_resume`'s audit, the
+    one place that fingerprints written bytes; a write records the stats
+    of what it wrote in its commit record. A partition with no rows on
+    disk has no entry."""
+    df = table.read(days=parts)
+    rows = df.groupBy(partition_col).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(fingerprint(df, partition_col)).alias("fp"),
+    ).collect()
+    # str() the key: a table no commit describes infers yyyy-MM-dd
+    # directory values as DATE, while partitions are strings
+    return {str(r[partition_col]): partition_stats(r["n"], r["fp"])
+            for r in rows}
 
 
 def span_start(day: str, tier: str) -> str:
@@ -128,8 +114,8 @@ def span_start(day: str, tier: str) -> str:
 
 
 def _committed(table: PartitionedTable, job_id: str, tier: str,
-               members: dict[str, list[str]]) -> dict[str, str]:
-    """{partition: snapshot_id} of the `members` partitions whose latest
+               members: dict[str, list[str]]) -> dict[str, dict]:
+    """{partition: commit record} of the `members` partitions whose latest
     overwrite in `table`'s manifest is a commit of (job_id, tier) from all
     their member days. An overwrite that names no partitions may have
     replaced any, so it supersedes every commit before it."""
@@ -138,7 +124,7 @@ def _committed(table: PartitionedTable, job_id: str, tier: str,
         if snap["op"] == "overwrite_partitions":
             parts = snap.get("partitions")
             latest = {**latest, **dict.fromkeys(parts, snap)} if parts else {}
-    return {p: latest[p]["snapshot_id"] for p, days in members.items()
+    return {p: latest[p] for p, days in members.items()
             if p in latest and latest[p].get("job_id") == job_id
             and latest[p].get("tier") == tier
             and set(days) <= set(latest[p]["partitions"][p])}
@@ -169,24 +155,27 @@ def run_tier(
     (`recovered`) when its latest overwrite is this (job_id, tier)'s
     commit of all its members, and computed otherwise: `compute(rows,
     days)` gets the rows of its member days and the days, the result is
-    written, and the partition is marked once with its members (`inputs`).
+    written, and the partition is marked once with its members (`inputs`)
+    and the rows_out and fingerprint its commit record holds — observed
+    in the write that produced the bytes, for computed and recovered
+    partitions alike.
 
     `source` is a DataFrame of raw rows (one groupBy job gives the day set
     and every day's row count) or the PartitionedTable of the tier below,
     partitioned by day under `partition_col` (its directory listing gives
     the day set, the footers of the member days read their row counts, and
-    it is opened only when some output partition is to do). `changed`,
-    when given, restricts the plan to the output partitions those input
-    days feed (the late-data refresh passes its late days). `also_write`,
-    when given, receives the pruned read-back of the partitions just
-    finished and writes a second output from it before their marks, so
-    the two commit together.
+    only the member days' directories are opened, only when some output
+    partition is to do). `changed`, when given, restricts the plan to the
+    output partitions those input days feed (the late-data refresh passes
+    its late days). `also_write`, when given, receives the read-back of
+    the partitions just finished and writes a second output from it
+    before their marks, so the two commit together.
 
     verify_resume=True re-fingerprints the WRITTEN bytes of every skipped
-    'done' partition before trusting it (one groupBy over the pruned
-    read-back): a partition that drifted from its record, or went missing, is
-    recomputed — never finished from a commit — so a resume detects
-    silent table corruption instead of skipping over it.
+    'done' partition before trusting it (`read_back_stats`, the only
+    read-back for stats): a partition that drifted from its record, or
+    went missing, is recomputed — never finished from a commit — so a
+    resume detects silent table corruption instead of skipping over it.
 
     Returns {"computed": [...], "recovered": [...], "skipped": [...],
     "drifted": [...], "rows_out": n}.
@@ -232,10 +221,7 @@ def run_tier(
 
     verify = [p for p in skipped if p not in expired]
     if verify_resume and verify and out_table.exists():
-        written = out_table.read().filter(
-            F.col(partition_col).isin(verify)
-        )
-        actual = _per_partition_stats(written, partition_col)
+        actual = read_back_stats(out_table, verify, partition_col)
         # a legitimately-empty partition has NO group in the read-back
         # stats but was recorded as (0, 0) — default the read-back side
         # so it isn't flagged drifted (and recomputed) on every resume
@@ -252,7 +238,6 @@ def run_tier(
     computed = [p for p in todo if p not in commits]
     recovered = [p for p in todo if p in commits]
 
-    stats: dict = {}
     if todo:
         run_id = uuid.uuid4().hex[:12]
         if isinstance(source, PartitionedTable):
@@ -260,39 +245,28 @@ def run_tier(
             # table input's come from the Parquet footers of the member days
             day_rows = {d: PartitionedTable.partition_rows(dirs[d])
                         for p in todo for d in members[p]}
-        schema, wall = None, 0.0
+        wall = 0.0
         if computed:
             feed = [d for p in computed for d in members[p]]
-            # partition-pruned input: the IN filter pushes to the scan
-            pending = (source.read() if isinstance(source, PartitionedTable)
-                       else inp).filter(F.col(partition_col).isin(feed))
+            # partition-pruned input: a table opens only the feed days, raw
+            # rows take the IN filter
+            pending = (source.read(days=feed)
+                       if isinstance(source, PartitionedTable)
+                       else inp.filter(F.col(partition_col).isin(feed)))
             t0 = time.time()
             result = compute(pending.drop(partition_col), feed).withColumn(
                 partition_col, F.date_format(out_ts_col, "yyyy-MM-dd")
             )
-            snapshot_id = out_table.overwrite_partitions(
-                result, job_id=job_id, tier=tier,
-                partitions={p: members[p] for p in computed},
+            commit = out_table.overwrite_partitions(
+                result, partitions={p: members[p] for p in computed},
+                job_id=job_id, tier=tier,
             )
-            commits.update(dict.fromkeys(computed, snapshot_id))
+            commits.update(dict.fromkeys(computed, commit))
             wall = time.time() - t0
-            schema = result.schema
-        # stats from the WRITTEN bytes (read-back), not a recompute or a
-        # .cache(): what's fingerprinted is exactly what resume would see
-        # (and MemoryStore persists anti-scale on fault-convoy kernels)
-        written = out_table.read(schema).filter(
-            F.col(partition_col).isin(todo)
-        )
-        stats = _per_partition_stats(written, partition_col)
-        for snapshot_id in sorted(set(commits.values())):
-            out_table.annotate_snapshot(snapshot_id, {
-                p: stats.get(p, (0, 0))[0] for p in todo
-                if commits[p] == snapshot_id
-            })
         if also_write is not None:
-            also_write(written)
+            also_write(out_table.read(days=todo))
         for p in todo:
-            n_out, fp = stats.get(p, (0, 0))
+            n_out, fp = commits[p]["stats"][p]
             ckpt.mark(
                 job_id=job_id, tier=tier, partition=p, run_id=run_id,
                 inputs=members[p],
@@ -302,4 +276,4 @@ def run_tier(
             )
     return {"computed": computed, "recovered": recovered,
             "skipped": skipped, "drifted": drifted,
-            "rows_out": sum(n for n, _fp in stats.values())}
+            "rows_out": sum(commits[p]["stats"][p][0] for p in todo)}

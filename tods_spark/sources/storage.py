@@ -15,17 +15,59 @@ partition by the output committer).
 
 from __future__ import annotations
 
+import json
 import os
+import time
+import uuid
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import StructType
+
+
+def fingerprint(df: DataFrame, partition_col: str) -> Column:
+    """The per-row hash behind a partition's fingerprint: xxhash64 over the
+    data columns of `df` (all but `partition_col`, in order). A partition's
+    fingerprint is the sum of its rows' hashes mod 2^63 (`partition_stats`),
+    so it does not depend on row order."""
+    data = [F.col(c) for c in df.columns if c != partition_col]
+    return F.xxhash64(*data).cast("decimal(38,0)")
+
+
+def partition_stats(n, fp) -> tuple[int, int]:
+    """(rows, fingerprint) of one partition from the count and the hash sum
+    of its rows (None, as Spark sums no rows, is 0)."""
+    return int(n or 0), int(fp or 0) & ((1 << 63) - 1)
 
 
 def _unescape(value: str) -> str | None:
     """A partition directory value as a column value: Hive escapes special
     characters as %XX and spells SQL NULL as __HIVE_DEFAULT_PARTITION__."""
     return None if value == "__HIVE_DEFAULT_PARTITION__" else unquote(value)
+
+
+class JsonLines:
+    """An append-only JSON-lines log (a table's manifest, the checkpoint
+    log): each record is one line, flushed and fsynced before `append`
+    returns, so a record once appended survives a crash."""
+
+    def __init__(self, path: str):
+        self.path = path
+
+    def records(self) -> list[dict]:
+        """Every record, oldest first (none when nothing was appended)."""
+        if not os.path.exists(self.path):
+            return []
+        with open(self.path) as f:
+            return [json.loads(line) for line in f if line.strip()]
+
+    def append(self, record: dict) -> dict:
+        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
+        with open(self.path, "a") as f:
+            f.write(json.dumps(record) + "\n")
+            f.flush()
+            os.fsync(f.fileno())
+        return record
 
 
 class PartitionedTable:
@@ -35,69 +77,87 @@ class PartitionedTable:
         self.spark = spark
         self.path = path
         self.partition_cols = partition_cols
+        self.manifest = JsonLines(os.path.join(path, "_manifest.jsonl"))
 
     def exists(self) -> bool:
         return os.path.exists(self.path) and any(
             not f.startswith("_") for f in os.listdir(self.path)
         )
 
-    def overwrite_partitions(self, df: DataFrame, **summary) -> str:
+    def overwrite_partitions(self, df: DataFrame,
+                             partitions: dict | None = None,
+                             **summary) -> dict:
         """Replace exactly the partitions present in `df` (idempotent: a
         re-run of the same partition converges to the same state), and
-        append a snapshot record with `summary` to the manifest log — the
-        Iceberg-style commit history (run_tier's summary, its commit
-        record, names its job_id, tier and partitions → member days).
-        The write path NEVER recomputes `df` for bookkeeping: a caller that
-        counts the written rows attaches them with `annotate_snapshot`
-        (run_tier does, from its read-back)."""
+        append its commit record to the manifest log — the Iceberg-style
+        commit history — and return it. The record holds `summary`
+        (run_tier's names its job_id and tier), the written schema, and
+        `partitions` (partition value → the caller's lineage; run_tier's
+        member days) with each named partition's (rows, fingerprint) under
+        `stats`, as an Iceberg snapshot summary holds its write's metrics.
+        The stats are observed on the rows the writer consumes, in the
+        write's own tasks: `df` is not executed twice and nothing is read
+        back."""
+        record = {"op": "overwrite_partitions",
+                  "schema": df.schema.jsonValue(), **summary}
+        if partitions:
+            (col,) = self.partition_cols
+            # the row hash is a column, so it is computed once per row and
+            # not once per partition
+            obs, key, h = Observation(), F.col(col), "__fingerprint__"
+            df = df.withColumn(h, fingerprint(df, col)).observe(obs, *[
+                agg for i, p in enumerate(partitions) for agg in (
+                    F.sum(F.when(key == p, 1)).alias(f"n{i}"),
+                    F.sum(F.when(key == p, F.col(h))).alias(f"fp{i}"))
+            ]).drop(h)
         (
             df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*self.partition_cols)
             .parquet(self.path)
         )
-        return self._append_snapshot(op="overwrite_partitions", **summary)
+        if partitions:
+            m = obs.get
+            record["partitions"] = partitions
+            record["stats"] = {p: partition_stats(m[f"n{i}"], m[f"fp{i}"])
+                               for i, p in enumerate(partitions)}
+        return self._append_snapshot(**record)
 
-    def _append_snapshot(self, **record) -> str:
-        import json
-        import time
-        import uuid
-
-        record.setdefault("snapshot_id", uuid.uuid4().hex[:16])
-        record.setdefault("ts", time.time())
-        os.makedirs(self.path, exist_ok=True)
-        with open(os.path.join(self.path, "_manifest.jsonl"), "a") as f:
-            f.write(json.dumps(record) + "\n")
-            f.flush()
-            os.fsync(f.fileno())
-        return record["snapshot_id"]
-
-    def annotate_snapshot(self, snapshot_id: str, partitions: dict) -> None:
-        """Append-only stats record for a committed snapshot (callers that
-        compute per-partition counts AFTER the commit — run_tier does, from
-        its read-back — attach them here instead of recomputing the input
-        inside the write path)."""
-        self._append_snapshot(op="stats", for_snapshot=snapshot_id,
-                              partitions=dict(partitions))
+    def _append_snapshot(self, **record) -> dict:
+        return self.manifest.append({"snapshot_id": uuid.uuid4().hex[:16],
+                                     "ts": time.time(), **record})
 
     def snapshots(self) -> list[dict]:
         """Commit history, oldest first (empty for never-written tables)."""
-        import json
-
-        mf = os.path.join(self.path, "_manifest.jsonl")
-        if not os.path.exists(mf):
-            return []
-        with open(mf) as f:
-            return [json.loads(line) for line in f if line.strip()]
+        return self.manifest.records()
 
     def append(self, df: DataFrame) -> None:
         df.write.mode("append").partitionBy(*self.partition_cols).parquet(self.path)
 
-    def read(self, schema: StructType | None = None) -> DataFrame:
-        """The table. A caller that knows the schema (it just wrote the
-        table) passes it, and Spark runs no schema-inference job."""
+    def schema(self) -> StructType | None:
+        """The schema of the latest commit that records one (None when no
+        commit does: the table was never overwritten through here)."""
+        for snap in reversed(self.snapshots()):
+            if "schema" in snap:
+                return StructType.fromJson(snap["schema"])
+        return None
+
+    def read(self, days=None) -> DataFrame:
+        """The table, read with the schema of its latest commit, so Spark
+        runs no schema-inference job (a table no commit describes is
+        inferred). `days`, when given, are values of the one partition
+        column: only those of their directories that exist are read
+        (`basePath` keeps the partition column), so Spark lists nothing
+        else; when none exists the frame is empty, of the commit schema."""
+        schema = self.schema()
         reader = self.spark.read if schema is None else self.spark.read.schema(schema)
-        return reader.parquet(self.path)
+        if days is None:
+            return reader.parquet(self.path)
+        (col,) = self.partition_cols
+        paths = [path for path, v in self.partition_dirs() if v[col] in days]
+        if not paths:
+            return self.spark.createDataFrame([], schema)
+        return reader.option("basePath", self.path).parquet(*paths)
 
     def partition_dirs(self) -> list[tuple[str, dict]]:
         """(directory, {column: value}) of every partition that holds a data
@@ -170,8 +230,6 @@ class PartitionedTable:
         partitions from accumulating one file per micro-run: scan cost is
         bounded by the SELECTED partitions, not the table."""
         from functools import reduce
-
-        from pyspark.sql import functions as F
 
         def n_target(r: dict) -> int:
             return max(1, -(-r["bytes"] // target_bytes))

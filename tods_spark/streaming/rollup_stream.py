@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from tods_spark.operators.rollup import AGG_COLS, TIER_INTERVAL
+from tods_spark.operators.rollup import AGG_COLS, TIER_INTERVAL, state_aggs
 
 
 def streaming_cascade(
@@ -57,13 +57,7 @@ def streaming_cascade(
     for tier in tiers:
         cur = cur.groupBy(
             *keys, F.window(event_time, TIER_INTERVAL[tier]).alias("w"),
-        ).agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum_n_tok").alias("sum_n_tok"),
-            F.min("min_n_tok").alias("min_n_tok"),
-            F.max("max_n_tok").alias("max_n_tok"),
-            F.sum("sum_sq_n_tok").alias("sum_sq_n_tok"),
-        )
+        ).agg(*state_aggs())
         event_time = F.window_time("w")
     return cur.withColumn(
         "avg_n_tok", F.col("sum_n_tok") / F.col("cnt")
