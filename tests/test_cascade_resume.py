@@ -20,7 +20,7 @@ from tods_spark.operators.compression import unpack_tier
 from tods_spark.operators.rollup import rollup_cascade
 from tods_spark.pipeline import refresh_engine, run_engine
 from tods_spark.plans.checkpoint import CheckpointLog, run_tier
-from tods_spark.sources.storage import PartitionedTable
+from tods_spark.sources.storage import OBSERVED_PARTITIONS, PartitionedTable
 
 
 def _files(path: str) -> dict:
@@ -40,6 +40,12 @@ def _packed(spark, base: str) -> list[tuple]:
 
 def _records(base: str) -> list[dict]:
     return CheckpointLog(f"{base}/checkpoint.jsonl").records()
+
+
+def _marks(base: str, tier: str) -> list[tuple]:
+    keep = ("partition", "inputs", "rows_in", "rows_out", "fingerprint")
+    return sorted(tuple(str(r[k]) for k in keep)
+                  for r in _records(base) if r["tier"] == tier)
 
 
 def _week_start(day) -> str:
@@ -182,13 +188,60 @@ def test_build_crash_after_1m_commit_is_finished_on_retry(spark, tmp_path,
                if s["op"] == "overwrite_partitions"]
     assert len(commits) == 1
 
-    def marks(b):
-        keep = ("partition", "inputs", "rows_in", "rows_out", "fingerprint")
-        return sorted(tuple(str(r[k]) for k in keep)
-                      for r in _records(b) if r["tier"] == "1m")
-
-    assert marks(base) == marks(clean)
+    assert _marks(base, "1m") == _marks(clean, "1m")
     assert _packed(spark, base) == _packed(spark, clean)
+
+
+def test_commits_without_stats_or_schema_still_work(spark, tmp_path,
+                                                    monkeypatch):
+    """A tree whose commit records carry no stats and no schema (written
+    before commit records held them): a build that crashed between its 1m
+    commit and its marks is finished on retry from the written bytes, with
+    the marks of a clean run, and a refresh whose late days are all new to
+    the tree reads tier_1m with an inferred schema and equals a full
+    rebuild."""
+    raw = token_table(spark, 4000, partitions=3)
+    clean = str(tmp_path / "clean")
+    run_engine(spark, raw, clean, with_digest=True)
+
+    real = CheckpointLog.mark
+    calls = []
+
+    def crash_once(self, **record):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("planted mark crash")
+        return real(self, **record)
+
+    monkeypatch.setattr(CheckpointLog, "mark", crash_once)
+    base = str(tmp_path / "crash")
+    with pytest.raises(RuntimeError, match="planted mark crash"):
+        run_engine(spark, raw, base, with_digest=True)
+    t1m = PartitionedTable(spark, f"{base}/tier_1m", ["part_key"])
+    snaps = t1m.snapshots()
+    assert snaps and all("stats" in s and "schema" in s for s in snaps)
+    os.remove(t1m.manifest.path)
+    for s in snaps:
+        t1m.manifest.append({k: v for k, v in s.items()
+                             if k not in ("stats", "schema")})
+
+    rep = run_engine(spark, raw, base, with_digest=True)
+    days = sorted(p["part_key"] for p in t1m.partitions())
+    assert rep["1m"]["recovered"] == days and not rep["1m"]["computed"]
+    assert _marks(base, "1m") == _marks(clean, "1m")
+    # the retry wrote no 1m commit
+    assert not any("schema" in s for s in t1m.snapshots())
+
+    # late rows only on days after the tree's last day
+    late = raw.filter(F.substring("doc_id", 5, 15).cast("long") % 7 == 0) \
+        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 30 DAYS"))
+    rep = refresh_engine(spark, late, base)
+    assert rep["1m"]["merged"] and min(rep["1m"]["refreshed"]) > days[-1]
+    full = str(tmp_path / "full")
+    run_engine(spark, raw.unionByName(late), full, with_digest=True)
+    for tier in ("1m", "1h", "1d"):
+        _assert_tiers_equal(_tier(spark, base, tier), _tier(spark, full, tier),
+                            tier)
 
 
 def test_refresh_reads_only_the_days_it_rewrites(spark, tmp_path):
@@ -275,14 +328,21 @@ def test_stored_fingerprints_equal_written_bytes(spark, tmp_path):
     """The (rows, fingerprint) a write observes and its marks record equal
     the read-back of the written bytes: a verifying resume after a build
     (digest, pack, weekly) and a verifying pass over a refresh's
-    partitions find no drift and recompute nothing."""
-    raw = token_table(spark, 1500, cadence_s=3600).cache()  # ~9 weeks
+    partitions find no drift and recompute nothing. Every write names at
+    most storage.OBSERVED_PARTITIONS days, so every stat was observed."""
+    raw = token_table(spark, 180, cadence_s=3600).cache()  # 8 days, 2 weeks
+    day = F.date_format("ts", "yyyy-MM-dd")
+    assert raw.select(day).distinct().count() <= OBSERVED_PARTITIONS
     doc_n = F.substring("doc_id", 5, 15).cast("long")
     first = raw.agg(F.min("ts")).collect()[0][0].date()
     is_late = (doc_n % 5 == 0) & (F.col("ts") < str(first + timedelta(days=9)))
     late = raw.filter(is_late)
     base = str(tmp_path / "eng")
     run_engine(spark, raw.filter(~is_late), base, with_weekly=True)
+    for t in ("1m", "1h", "1d", "1w"):
+        snaps = PartitionedTable(spark, f"{base}/tier_{t}",
+                                 ["part_key"]).snapshots()
+        assert all("stats" in s for s in snaps), t
     rep = run_engine(spark, raw.filter(~is_late), base, with_weekly=True,
                      verify_resume=True)
     for t in ("1m", "1h", "1d", "1w"):
@@ -310,7 +370,9 @@ def test_refresh_lists_only_its_days(spark, tmp_path):
     """A refresh of 2 days on a tree of more than 32 day directories (the
     count above which Spark lists a directory's children in a Spark job,
     one task each) lists only the directories it reads: no stage of the
-    refresh has one task per day directory."""
+    refresh has one task per day directory. The build's writes name more
+    days than a write observes, so their commits hold no stats and the
+    marks fingerprint the written bytes."""
     raw = token_table(spark, 1000, cadence_s=3600).cache()  # ~42 days
     day = F.date_format("ts", "yyyy-MM-dd")
     days = sorted(r[0] for r in raw.select(day).distinct().collect())
@@ -319,8 +381,12 @@ def test_refresh_lists_only_its_days(spark, tmp_path):
     is_late = (doc_n % 3 == 0) & day.isin(days[5], days[20])
     base = str(tmp_path / "eng")
     run_engine(spark, raw.filter(~is_late), base)
-    assert len(PartitionedTable(spark, f"{base}/tier_1m",
-                                ["part_key"]).partitions()) == len(days)
+    t1m = PartitionedTable(spark, f"{base}/tier_1m", ["part_key"])
+    assert len(t1m.partitions()) == len(days) > OBSERVED_PARTITIONS
+    assert ["stats" in s for s in t1m.snapshots()] == [False]
+    on_disk = t1m.read_stats(days)
+    assert {r["partition"]: (r["rows_out"], r["fingerprint"])
+            for r in _records(base) if r["tier"] == "1m"} == on_disk
 
     rep, jobs = _job_group(spark, "refresh-listing", lambda: refresh_engine(
         spark, raw.filter(is_late), base))

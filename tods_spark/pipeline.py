@@ -166,9 +166,9 @@ def refresh_engine(
     recomputed from all its member days and marked once.
 
     Cost model at 10^12 rows: late-batch aggregate (late-sized shuffle)
-    + per-affected-partition rewrites — the stored 1m tier is read on the
-    late days only (the part_key filter prunes the scan) and the
-    unaffected history is never rewritten.
+    + per-affected-partition rewrites — the stored 1m tier is read
+    through `read(days=late days)`, which lists and opens only those
+    directories, and the unaffected history is never rewritten.
 
     Delivery contract: the merge is incremental, so a batch must be
     applied AT MOST ONCE per day (re-merging double-counts — unlike

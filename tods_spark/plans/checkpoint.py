@@ -21,9 +21,11 @@ Design:
     done partition whose input gained a member day goes back to todo;
   * rows_out and the fingerprint are observed in the write that produced
     the bytes, on the rows the writer consumed, and come from its commit
-    record: no tier is read back or executed twice for them (a float
-    partial computed twice can differ by an ulp). Only `verify_resume`
-    reads the bytes back, to audit them;
+    record: no tier is executed twice for them (a float partial computed
+    twice can differ by an ulp). The bytes are read back only where the
+    write could not observe them, a commit with no stats (a write wider
+    than `storage.OBSERVED_PARTITIONS`, or one made before commit records
+    carried stats), and by `verify_resume`, to audit them;
   * `run_tier` plans the partition set without scanning history: a raw
     DataFrame input gives its partition set and every partition's rows_in
     in one groupBy(part_key).count() job; a tier input is the
@@ -66,8 +68,7 @@ from datetime import date, timedelta
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from tods_spark.operators.rollup import TIER_SECONDS
-from tods_spark.sources.storage import (JsonLines, PartitionedTable,
-                                         fingerprint, partition_stats)
+from tods_spark.sources.storage import JsonLines, PartitionedTable
 
 _EPOCH = date(1970, 1, 1)
 
@@ -83,24 +84,6 @@ class CheckpointLog(JsonLines):
     def mark(self, **record) -> None:
         record.setdefault("ts", time.time())
         self.append(record)
-
-
-def read_back_stats(table: PartitionedTable, parts: list[str],
-                    partition_col: str = "part_key") -> dict:
-    """{partition: (rows, fingerprint)} of the bytes on disk of `parts`:
-    one groupBy over their read-back. This is `verify_resume`'s audit, the
-    one place that fingerprints written bytes; a write records the stats
-    of what it wrote in its commit record. A partition with no rows on
-    disk has no entry."""
-    df = table.read(days=parts)
-    rows = df.groupBy(partition_col).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(fingerprint(df, partition_col)).alias("fp"),
-    ).collect()
-    # str() the key: a table no commit describes infers yyyy-MM-dd
-    # directory values as DATE, while partitions are strings
-    return {str(r[partition_col]): partition_stats(r["n"], r["fp"])
-            for r in rows}
 
 
 def span_start(day: str, tier: str) -> str:
@@ -158,7 +141,8 @@ def run_tier(
     written, and the partition is marked once with its members (`inputs`)
     and the rows_out and fingerprint its commit record holds — observed
     in the write that produced the bytes, for computed and recovered
-    partitions alike.
+    partitions alike (a commit that holds none has its partitions'
+    written bytes fingerprinted, `PartitionedTable.read_stats`).
 
     `source` is a DataFrame of raw rows (one groupBy job gives the day set
     and every day's row count) or the PartitionedTable of the tier below,
@@ -172,10 +156,10 @@ def run_tier(
     before their marks, so the two commit together.
 
     verify_resume=True re-fingerprints the WRITTEN bytes of every skipped
-    'done' partition before trusting it (`read_back_stats`, the only
-    read-back for stats): a partition that drifted from its record, or
-    went missing, is recomputed — never finished from a commit — so a
-    resume detects silent table corruption instead of skipping over it.
+    'done' partition before trusting it (`PartitionedTable.read_stats`):
+    a partition that drifted from its record, or went missing, is
+    recomputed — never finished from a commit — so a resume detects
+    silent table corruption instead of skipping over it.
 
     Returns {"computed": [...], "recovered": [...], "skipped": [...],
     "drifted": [...], "rows_out": n}.
@@ -221,12 +205,9 @@ def run_tier(
 
     verify = [p for p in skipped if p not in expired]
     if verify_resume and verify and out_table.exists():
-        actual = read_back_stats(out_table, verify, partition_col)
-        # a legitimately-empty partition has NO group in the read-back
-        # stats but was recorded as (0, 0) — default the read-back side
-        # so it isn't flagged drifted (and recomputed) on every resume
+        actual = out_table.read_stats(verify)
         drifted = [
-            p for p in verify if actual.get(p, (0, 0))
+            p for p in verify if actual[p]
             != (recorded[p]["rows_out"], recorded[p]["fingerprint"])
         ]
         skipped = [p for p in skipped if p not in drifted]
@@ -238,6 +219,7 @@ def run_tier(
     computed = [p for p in todo if p not in commits]
     recovered = [p for p in todo if p in commits]
 
+    stats: dict = {}
     if todo:
         run_id = uuid.uuid4().hex[:12]
         if isinstance(source, PartitionedTable):
@@ -265,8 +247,16 @@ def run_tier(
             wall = time.time() - t0
         if also_write is not None:
             also_write(out_table.read(days=todo))
+        stats = {p: commits[p]["stats"][p] for p in todo
+                 if "stats" in commits[p]}
+        unobserved = [p for p in todo if p not in stats]
+        if unobserved:
+            # a commit that records no stats (a write wider than the
+            # storage.OBSERVED_PARTITIONS it observes, or one made before
+            # commit records carried stats): fingerprint its bytes
+            stats.update(out_table.read_stats(unobserved))
         for p in todo:
-            n_out, fp = commits[p]["stats"][p]
+            n_out, fp = stats[p]
             ckpt.mark(
                 job_id=job_id, tier=tier, partition=p, run_id=run_id,
                 inputs=members[p],
@@ -276,4 +266,4 @@ def run_tier(
             )
     return {"computed": computed, "recovered": recovered,
             "skipped": skipped, "drifted": drifted,
-            "rows_out": sum(commits[p]["stats"][p][0] for p in todo)}
+            "rows_out": sum(n for n, _fp in stats.values())}
