@@ -25,6 +25,7 @@ def _window_partition_keys(spec_args: str) -> list[str]:
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from tods_spark.operators.compression import pack_tier  # noqa: E402
 from tods_spark.operators.rollup import refresh_tier, rollup_raw  # noqa: E402
 from tods_spark.queries import QUERIES  # noqa: E402
 from tods_spark.session import get_spark  # noqa: E402
@@ -309,6 +310,27 @@ def main() -> None:
               bool(args) and all(a.startswith(("struct(", "named_struct("))
                                  for a in args),
               "; ".join(sorted(set(args)))[:120])
+
+    # 22. the cascade leaves width to AQE: the digest rollup and the
+    #     Gorilla pack hold no fixed-width (REPARTITION_BY_NUM) exchange,
+    #     and the digest rollup's partial aggregate is printed below its
+    #     exchange (combined map-side)
+    raw = token_table(spark, 2000, partitions=3)
+    final = {}
+    digest = rollup_raw(raw, "1m", with_digest=True)
+    for name, df in (("digest rollup", digest),
+                     ("pack", pack_tier(rollup_raw(raw, "1m")))):
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        final[name] = plan.split("== Initial Plan ==")[0]
+        check(f"{name} has no REPARTITION_BY_NUM exchange",
+              "REPARTITION_BY_NUM" not in final[name])
+    lines = final["digest rollup"].splitlines()
+    exchange = next((i for i, ln in enumerate(lines) if "Exchange " in ln), -1)
+    partial = next((i for i, ln in enumerate(lines) if "partial_" in ln), -1)
+    check("digest rollup partial aggregate is below its exchange",
+          0 <= exchange < partial, f"exchange line {exchange}, "
+          f"partial line {partial}")
 
     bad = [n for n, ok in checks if not ok]
     print(f"\n{len(checks) - len(bad)}/{len(checks)} plan checks pass")

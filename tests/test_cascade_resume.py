@@ -7,6 +7,7 @@ and a week is always derived from all of its member days."""
 from __future__ import annotations
 
 import os
+import shutil
 from collections import Counter
 from datetime import date, timedelta
 
@@ -242,6 +243,33 @@ def test_commits_without_stats_or_schema_still_work(spark, tmp_path,
     for tier in ("1m", "1h", "1d"):
         _assert_tiers_equal(_tier(spark, base, tier), _tier(spark, full, tier),
                             tier)
+
+
+def test_verify_resume_recomputes_a_deleted_tier(spark, tmp_path):
+    """A verifying resume audits a tier whose whole directory is gone:
+    after tier_1h is deleted, every 1h day is reported drifted and
+    recomputed, the tiers still on disk are skipped, and tier_1h and its
+    new marks equal a clean build's."""
+    raw = token_table(spark, 3000, partitions=3)
+    clean = str(tmp_path / "clean")
+    run_engine(spark, raw, clean, with_digest=False)
+    base = str(tmp_path / "eng")
+    run_engine(spark, raw, base, with_digest=False)
+    days = sorted(p["part_key"] for p in PartitionedTable(
+        spark, f"{base}/tier_1h", ["part_key"]).partitions())
+    shutil.rmtree(f"{base}/tier_1h")
+
+    rep = run_engine(spark, raw, base, with_digest=False,
+                     verify_resume=True)
+    assert rep["1h"]["drifted"] == days and rep["1h"]["computed"] == days
+    assert not rep["1h"]["skipped"]
+    for t in ("1m", "1d"):
+        assert rep[t]["skipped"] and not rep[t]["drifted"], t
+        assert not rep[t]["computed"], t
+    _assert_tiers_equal(_tier(spark, base, "1h"), _tier(spark, clean, "1h"),
+                        "1h")
+    # the build's marks and the recomputation's, each a clean build's
+    assert _marks(base, "1h") == sorted(_marks(clean, "1h") * 2)
 
 
 def test_refresh_reads_only_the_days_it_rewrites(spark, tmp_path):

@@ -509,9 +509,9 @@ def test_connected_components_star_matches_minprop(spark):
 
 
 def test_connected_components_driver_matches_star(spark):
-    """The size-guarded driver union-find path (edge count <= driver_cap
-    collects and solves on the driver) and the forced distributed star
-    alternation (driver_cap=0) produce identical (id, cluster_id) labels
+    """The size-guarded driver union-find path (edge count <=
+    DRIVER_CC_EDGES collects and solves on the driver) and the distributed
+    star alternation (`_cc_star`) produce identical (id, cluster_id) labels
     on the same mixed-shape random graph — for numeric AND string ids —
     and self-loop-only vertices are excluded by both (the documented
     contract)."""
@@ -521,14 +521,14 @@ def test_connected_components_driver_matches_star(spark):
     edges += [(555, 555)]                                  # self loop only
     e = spark.createDataFrame(edges, "src long, dst long")
     drv = sorted(map(tuple, DD.connected_components(e).collect()))
-    star = sorted(map(tuple, DD.connected_components(e, driver_cap=0).collect()))
+    star = sorted(map(tuple, DD._cc_star(e)[0].collect()))
     assert drv == star
     assert 555 not in {i for i, _ in drv}
     es = spark.createDataFrame(
         [(f"d{a:04d}", f"d{b:04d}") for a, b in edges], "src string, dst string"
     )
     drv_s = sorted(map(tuple, DD.connected_components(es).collect()))
-    star_s = sorted(map(tuple, DD.connected_components(es, driver_cap=0).collect()))
+    star_s = sorted(map(tuple, DD._cc_star(es)[0].collect()))
     assert drv_s == star_s
 
 

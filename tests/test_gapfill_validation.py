@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
 
 from tods_spark.operators import gapfill, segmentation, validation
 
@@ -74,58 +73,34 @@ def test_gap_fill_tier_interpolates(spark):
 
 
 def test_gap_fill_tier_chunked_matches_perkey(spark):
-    """Differential: the chunked interpolation windows (optimization r7 —
-    parallelism |keys|×|chunks| instead of |keys|) are bit-identical to
-    the per-key fill (tests/oracle.gap_fill_tier), including cross-chunk
-    gaps (a gap spanning a chunk boundary must read its prev/next
-    observed point from OTHER chunks), leading/trailing gaps within a
-    chunk, one-slot chunks, one chunk per key, and multi-key inputs."""
+    """Differential: the chunked interpolation windows (one day of grid
+    slots per chunk — parallelism |keys|×|chunks| instead of |keys|) are
+    bit-identical to the per-key fill (tests/oracle.gap_fill_tier),
+    including cross-chunk gaps (a gap spanning a chunk boundary must read
+    its prev/next observed point from OTHER chunks), leading/trailing
+    gaps within a chunk and multi-key inputs. The same 3-key slots run
+    at 60 s across a midnight (two chunks), at 21600 s (4 slots per
+    chunk) and at 86400 s (one-slot chunks)."""
     rng = np.random.default_rng(7)
-    rows = []
-    for src in ("web", "chat", "code"):
-        # observed minutes with long gaps; chunk_intervals=4 below forces
-        # many chunk boundaries inside the gaps
-        ts = np.unique(rng.choice(np.arange(0, 90), size=25)) * 60
-        for t in ts:
-            rows.append((src, pd.Timestamp(t, unit="s"),
-                         int(rng.integers(1, 9)), float(rng.normal(30, 8))))
-    pdf = pd.DataFrame(rows, columns=["source", "window_start", "cnt",
-                                      "avg_n_tok"])
-    df = spark.createDataFrame(pdf)
+    slots = {src: np.unique(rng.choice(np.arange(0, 90), size=25))
+             for src in ("web", "chat", "code")}
+    vals = {src: [(int(rng.integers(1, 9)), float(rng.normal(30, 8)))
+                  for _ in s] for src, s in slots.items()}
+    midnight = pd.Timestamp("2020-09-14").value // 10**9
     cols = ["source", "window_start", "cnt", "avg_n_tok", "is_gap"]
-    want = oracle.gap_fill_tier(pdf, 60)[cols]
-    for kw in ({"chunk_intervals": 1}, {"chunk_intervals": 4}, {}):
-        got = (gapfill.gap_fill_tier(df, 60, **kw)
+    for interval in (60, 21600, 86400):
+        # slot 45 is the first of a day: the 90 slots straddle a midnight
+        rows = [(src, pd.Timestamp(midnight + (t - 45) * interval, unit="s"),
+                 c, v)
+                for src in slots for t, (c, v) in zip(slots[src], vals[src])]
+        pdf = pd.DataFrame(rows, columns=["source", "window_start", "cnt",
+                                          "avg_n_tok"])
+        want = oracle.gap_fill_tier(pdf, interval)[cols]
+        got = (gapfill.gap_fill_tier(spark.createDataFrame(pdf), interval)
                .select(cols).orderBy("source", "window_start").toPandas())
-        pd.testing.assert_frame_equal(got, want, check_exact=True, obj=str(kw))
-    assert want["is_gap"].any() and (~want["is_gap"]).any()
-
-
-def test_gap_fill_tier_rejects_negative_chunk_intervals(spark):
-    """A chunk width below 1 is rejected: 0 divides by zero, and a
-    negative width would order chunks in reverse time and let
-    interpolation read future points as preceding ones; one-slot chunks
-    and the default keep their results."""
-    pdf = pd.DataFrame(
-        {
-            "source": ["web"] * 3 + ["chat"] * 2,
-            "window_start": pd.to_datetime([0, 60, 240, 0, 180], unit="s"),
-            "cnt": [4, 2, 6, 1, 3],
-            "avg_n_tok": [10.0, 20.0, 50.0, 5.0, 35.0],
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    for bad in (-1, 0):
-        with pytest.raises(ValueError, match="chunk_intervals"):
-            gapfill.gap_fill_tier(df, 60, chunk_intervals=bad)
-    for kw in ({}, {"chunk_intervals": 1}):
-        out = (gapfill.gap_fill_tier(df, 60, **kw)
-               .orderBy("source", "window_start").toPandas())
-        assert list(out["source"]) == ["chat"] * 4 + ["web"] * 5
-        np.testing.assert_array_equal(out["cnt"], [1, 0, 0, 3, 4, 2, 0, 0, 6])
-        np.testing.assert_allclose(
-            out["avg_n_tok"],
-            [5.0, 15.0, 25.0, 35.0, 10.0, 20.0, 30.0, 40.0, 50.0])
+        pd.testing.assert_frame_equal(got, want, check_exact=True,
+                                      obj=f"interval {interval}")
+        assert want["is_gap"].any() and (~want["is_gap"]).any()
 
 
 def test_dedup_first_and_average(spark):

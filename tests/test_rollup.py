@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from tods_spark.datagen import gen_pandas, token_table
 from tods_spark.functions import sketches
+from tods_spark.operators.compression import pack_tier
 from tods_spark.operators.rollup import (
     TIER_INTERVAL,
     resample_mean,
@@ -280,6 +281,32 @@ def test_partial_digest_rollup_equivalent(spark):
         qa = sketches.digest_quantile(np.asarray(da, float), 0.5)
         qb = sketches.digest_quantile(np.asarray(db, float), 0.5)
         np.testing.assert_allclose(qa, qb, rtol=1e-9)
+
+
+def _final_plan(df) -> str:
+    """The executed physical plan after AQE's last re-plan: `df` is run,
+    and only the plan's Final Plan section is returned."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_cascade_plans_leave_width_to_aqe(spark):
+    """The digest rollup and the Gorilla pack hold no fixed-width
+    (REPARTITION_BY_NUM) exchange — each stage keeps the exchange its
+    aggregate requires and AQE picks the reduce width — and the digest
+    rollup's partial aggregate sits below its exchange, so digest states
+    are combined map-side before the shuffle."""
+    raw = token_table(spark, 2000, partitions=3)
+    digest = _final_plan(rollup_raw(raw, "1m", with_digest=True))
+    packed = _final_plan(pack_tier(rollup_raw(raw, "1m")))
+    for name, plan in (("digest rollup", digest), ("pack", packed)):
+        assert "REPARTITION_BY_NUM" not in plan, f"{name}\n{plan}"
+        assert "ENSURE_REQUIREMENTS" in plan, f"{name}\n{plan}"
+    lines = digest.splitlines()
+    exchange = next(i for i, ln in enumerate(lines) if "Exchange " in ln)
+    partial = next(i for i, ln in enumerate(lines) if "partial_" in ln)
+    assert partial > exchange, digest
 
 
 def test_weekly_tier_cascade_equals_direct(spark):

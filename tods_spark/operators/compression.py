@@ -9,8 +9,8 @@ Round-trip is bitwise (tests/test_gorilla.py property test), so packed
 tiers remain queryable: unpack → DataFrame → any engine operator.
 
 Scale: group size is bounded by chunk choice (1440 points per source-day at
-1m); the shuffle key (keys, chunk) is the same partitioning the tier was
-written with, so packing typically pipelines without an extra exchange.
+1m). Packing is one hash exchange on (keys, chunk) carrying only the four
+columns ``pack`` reads; AQE picks its reduce width.
 """
 
 from __future__ import annotations
@@ -54,13 +54,6 @@ def pack_tier(
     prepared = tier_df.select(*key_list, window_col, value_col).withColumn(
         "__ts__", F.col(window_col).cast("timestamp_ltz").cast("long")
     ).withColumn("__chunk__", F.window(window_col, chunk)["start"])
-    # pin the encode width to the cluster's parallelism: the Gorilla bit
-    # kernel's cost is per ROW, and AQE's byte-based coalescing (guide
-    # §2.5) squeezes this KB-sized-but-Python-heavy exchange onto 1-2
-    # tasks. An explicit hash repartition on the group key keeps every
-    # core packing; the exchange carries exactly the four packed columns.
-    width = tier_df.sparkSession.sparkContext.defaultParallelism
-    prepared = prepared.repartition(width, *key_list, "__chunk__")
     return prepared.groupBy(*key_list, "__chunk__").applyInPandas(pack, schema)
 
 

@@ -610,9 +610,10 @@ def _edge_signature(e: DataFrame) -> tuple:
 def _cc_driver(e: DataFrame) -> DataFrame:
     """Union-find over a SMALL edge list, collected to the driver — the
     strategy `connected_components` picks when the measured edge count is
-    under its `driver_cap` (the same runtime small-side decision AQE makes
-    for broadcast joins: ≤ cap edges is a few MB, the same order as the
-    broadcast relations and codebook collects the engine already allows).
+    at most `DRIVER_CC_EDGES` (the same runtime small-side decision AQE
+    makes for broadcast joins: that many edges is a few MB, the same
+    order as the broadcast relations and codebook collects the engine
+    already allows).
     Labels are identical to the distributed kernels: cluster label = min
     vertex id of the component, one row per vertex that appears in a
     (non-self-loop) edge. Input must already be filtered to src != dst."""
@@ -651,8 +652,15 @@ def _cc_driver(e: DataFrame) -> DataFrame:
     return spark.createDataFrame(lab[["id", "lbl"]], schema=schema)
 
 
-def connected_components(edges: DataFrame, max_iter: int = 50,
-                         driver_cap: int = 200_000) -> DataFrame:
+# Edge lists at or below this many edges are solved on the driver. The
+# star alternation's convergence loop over a KB-sized edge set is all
+# scheduling overhead (measured 5-11 s for 1,186 edges at sf0.1 against
+# ~0.3 s collected); 200k edges is about 3 MB, the same order as a
+# broadcast-join small side.
+DRIVER_CC_EDGES = 200_000
+
+
+def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """Connected components over an undirected edge list (`src`, `dst`) by
     LARGE-STAR / SMALL-STAR alternation (Kiveris et al. 2014, "Connected
     Components in MapReduce and Beyond" — re-derived from the published
@@ -661,18 +669,13 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
     appears in an edge (the same contract the previous min-label
     propagation satisfied).
 
-    Strategy choice (optimization round 7, guide §1.2 "the distributed
-    algorithm" + §5 "the driver should do almost no data work" — but a
-    convergence loop over a KB-sized edge set is all scheduling overhead,
-    measured 5-11 s for 1,186 edges at sf0.1 vs ~0.3 s collected): the
-    edge set is first counted (one map-side-combine job over the dedup'd
-    list); at or below ``driver_cap`` edges (default 200k ≈ 3 MB — the
-    same order as a broadcast-join small side) it is collected and solved
-    with path-compressed union-find (`_cc_driver`, label-identical by
-    construction and by differential pytest); above the cap the
-    distributed star alternation below runs unchanged — at 100 TB the dup
-    graph takes that path, and nothing about it changed this round. Pass
-    ``driver_cap=0`` to force the distributed kernel.
+    Strategy choice: the edge set is first counted (one map-side-combine
+    job over the dedup'd list); at or below ``DRIVER_CC_EDGES`` edges it
+    is collected and solved with path-compressed union-find
+    (`_cc_driver`, label-identical by construction and by differential
+    pytest); above it the distributed star alternation below runs — at
+    100 TB the dup graph takes that path. `_cc_star` runs the distributed
+    kernel on any edge list.
 
     Per round (one large-star then one small-star), each a bounded
     pipeline of: symmetrize/orient (projection), per-node min
@@ -700,7 +703,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if driver_cap and e0.count() <= driver_cap:
+    if e0.count() <= DRIVER_CC_EDGES:
         return _cc_driver(e0)
     labels, _ = _cc_star(e0, max_iter, prepared=True)
     return labels
@@ -711,7 +714,7 @@ def _cc_star(edges: DataFrame, max_iter: int = 50, prepared: bool = False):
     tests can assert the O(log d) convergence bound. ``prepared=True``
     means the caller already filtered self-loops, dedup'd and
     checkpointed the edge list (connected_components does, to share the
-    materialization with its driver_cap count)."""
+    materialization with its edge count)."""
     if prepared:
         e = edges
     else:

@@ -120,7 +120,6 @@ def gap_fill_tier(
     interp_cols: tuple[str, ...] = ("avg_n_tok",),
     zero_cols: tuple[str, ...] = ("cnt",),
     window_col: str = "window_start",
-    chunk_intervals: int = 1024,
 ) -> DataFrame:
     """Fill missing tumbling windows per key with interpolated aggregates.
 
@@ -136,21 +135,16 @@ def gap_fill_tier(
     on at most |keys| tasks — one key's calendar span (years of minutes at
     production retention) landed on ONE task, and the 2→8 scaling sessions
     measured the stage as quasi-serial time. The windows now partition by
-    (keys, chunk) where chunk groups ``chunk_intervals`` consecutive grid
-    slots, and the cross-chunk carry (the last/next observed value beyond
-    the chunk edge) is reconstructed from a per-(key, chunk) boundary table
-    — |keys|×|chunks| rows, orders of magnitude smaller than the grid —
+    (keys, chunk) where a chunk is one day of grid slots (one slot for
+    intervals of a day or more) — the tier's partition unit — and the
+    cross-chunk carry (the last/next observed value beyond the chunk
+    edge) is reconstructed from a per-(key, chunk) boundary table —
+    |keys|×|chunks| rows, orders of magnitude smaller than the grid —
     with one window over that table and an equi-join back on the window's
     own (keys, chunk) partitioning. Results are identical (same global
     prev/next observed points, same formula); parallelism becomes
     |keys| × |chunks|; the per-key windows are the one-chunk case.
-    ``chunk_intervals`` below 1 raises ``ValueError`` (0 divides by zero,
-    a negative width orders chunks in reverse time and interpolates from
-    future points).
     """
-    if chunk_intervals < 1:
-        raise ValueError(
-            f"chunk_intervals must be >= 1, got {chunk_intervals}")
     span = tier_df.groupBy(*keys).agg(
         F.min(window_col).alias("__lo__"), F.max(window_col).alias("__hi__")
     )
@@ -168,12 +162,9 @@ def gap_fill_tier(
         "is_gap", F.col(zero_cols[0]).isNull() if zero_cols else F.lit(False)
     )
     ts = F.col(window_col).cast("double")
-    chunk = (
-        F.floor(F.col(window_col).cast("long")
-                / F.lit(int(interval_sec) * int(chunk_intervals)))
-        .alias("__chk__")
-    )
-    joined = joined.withColumn("__chk__", chunk)
+    chunk_s = int(interval_sec) * max(1, 86400 // int(interval_sec))
+    joined = joined.withColumn(
+        "__chk__", F.floor(F.col(window_col).cast("long") / F.lit(chunk_s)))
     # per-(key, chunk) boundary summary, computed from the PRE-window rows
     # (the observed tier points themselves), so this branch is a plain
     # hash aggregate over the window's reused exchange — it never re-runs

@@ -1,6 +1,6 @@
 """Multimodal column plumbing (driver mandate): image/audio/video as opaque
-``binary`` columns with typed metadata; decode / feature-extract / resize /
-frame-sample as Arrow UDFs over ``mapInPandas``.
+``binary`` columns with typed metadata; decode and feature extraction as
+Arrow UDFs over ``mapInPandas``.
 
 The sandbox has no image/audio libraries, so the DECODE step is stubbed
 (NotImplementedError behind `strict=True`, deterministic fake otherwise) —
@@ -87,18 +87,3 @@ def extract_features(
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "features": feats})
 
     return df.mapInPandas(extract, schema)
-
-
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame-sampling plumbing for video payloads: emit (doc_id, frame_idx)
-    rows from metadata only — the decode of each sampled frame is the
-    stubbed step. sequence+explode keeps it linear and distributed."""
-    n_frames = F.coalesce(
-        (F.col("meta.duration_ms") / every_ms).cast("int"), F.lit(1)
-    )
-    return df.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)))).alias(
-            "frame_idx"
-        ),
-    )

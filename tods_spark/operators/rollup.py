@@ -154,18 +154,9 @@ def rollup_raw(
     with_digest: bool = False,
 ) -> DataFrame:
     """raw → first tier: `merge_states` over `raw_states`, one shuffle on
-    (keys, window) with map-side combine."""
-    states = raw_states(df, tier, ts_col, value_col, keys, with_digest)
-    if with_digest:
-        # pin the merge width (same rationale as pack_tier, guide §2.5):
-        # the digest merge's cost is per ROW through the Arrow boundary,
-        # and AQE's byte-based coalescing shrinks this small-bytes
-        # exchange to a handful of tasks; the keyed repartition keeps the
-        # reduce wide and satisfies the groupBy after it (no second
-        # exchange)
-        width = df.sparkSession.sparkContext.defaultParallelism
-        states = states.repartition(width, *keys, "window_start")
-    return merge_states(states, keys, tier)
+    (keys, window) with map-side combine; AQE picks the reduce width."""
+    return merge_states(
+        raw_states(df, tier, ts_col, value_col, keys, with_digest), keys, tier)
 
 
 def state_aggs() -> list:

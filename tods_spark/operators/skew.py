@@ -68,19 +68,6 @@ def salted_agg(
     )
 
 
-def salted_repartition(
-    df: DataFrame, key: str, n_salts: int = 8, fine_grain: str = "doc_id"
-) -> DataFrame:
-    """Repartition by (key, salt(fine_grain)) so a hot key's rows land on
-    n_salts partitions instead of one — the pre-shuffle for grouped-map UDFs
-    keyed by a skewed column (the UDF must then be salt-agnostic or merge)."""
-    return df.repartition(
-        F.concat_ws(
-            "#", F.col(key), F.pmod(F.xxhash64(F.col(fine_grain)), F.lit(n_salts))
-        )
-    )
-
-
 def skew_report(df: DataFrame, key: str) -> DataFrame:
     """Per-key row share — quantifies the imbalance salting addresses."""
     total = df.count()

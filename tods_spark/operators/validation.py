@@ -71,11 +71,6 @@ def dedup_timestamps(
     raise ValueError(f"keep must be 'first' or 'average', got {keep!r}")
 
 
-def dedup_exact(df: DataFrame, subset: tuple[str, ...] | None = None) -> DataFrame:
-    """Exact row dedup (hash-groupBy under the hood; map-side partial)."""
-    return df.dropDuplicates(list(subset) if subset else None)
-
-
 def rule_filter(df: DataFrame, rule: str, mode: str = "flag",
                 flag_col: str = "result") -> DataFrame:
     """`rule` is a SQL boolean expression over columns. mode='flag' appends

@@ -204,7 +204,7 @@ def run_tier(
     drifted: list[str] = []
 
     verify = [p for p in skipped if p not in expired]
-    if verify_resume and verify and out_table.exists():
+    if verify_resume and verify:
         actual = out_table.read_stats(verify)
         drifted = [
             p for p in verify if actual[p]

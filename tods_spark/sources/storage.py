@@ -177,10 +177,14 @@ class PartitionedTable:
     def read_stats(self, parts: list[str]) -> dict:
         """{partition: (rows, fingerprint)} of the bytes on disk of each of
         `parts`, (0, 0) for one with no rows (as a write of no rows
-        records): one groupBy over their read-back. Only what a write could
-        not observe is read back this way: `verify_resume`'s audit, and the
-        partitions of a commit that records no stats."""
+        records) or no directory: one groupBy over their read-back, and no
+        read at all (the table's schema may be gone with its directory)
+        when none has a directory. Only what a write could not observe is
+        read back this way: `verify_resume`'s audit, and the partitions of
+        a commit that records no stats."""
         (col,) = self.partition_cols
+        if not any(v[col] in parts for _path, v in self.partition_dirs()):
+            return dict.fromkeys(parts, (0, 0))
         df = self.read(days=parts)
         rows = df.groupBy(col).agg(
             F.count(F.lit(1)).alias("n"), F.sum(fingerprint(df, col)).alias("fp"),
