@@ -11,8 +11,11 @@ Building from raw values is an exact quantile evaluation (1m windows are
 small). Merging digests is a weighted quantile of the reconstructed samples:
 each digest contributes its K+1 grid points with weight count/(K+1). The
 result is again a K+1 grid, so merging is associative enough for tier
-cascades; max rank error per merge level is O(1/K) (~1.6% at K=64),
-documented here as the engine's sketch error bound.
+cascades. The intended rank error per merge level is O(1/K) (~1.6% at
+K=64), but it is NOT a bound the engine holds: a tier's error depends on
+which Arrow batches split a window into partial digests, and seed 12 of
+``tests/test_rollup.py::test_digest_rank_error_bound_every_tier`` reaches
+0.0191 at 1m (a strict xfail until the merge is fixed; ROADMAP item 9).
 
 All kernels are vectorized numpy invoked from pandas/Arrow UDFs — no per-row
 Python (driver rule).

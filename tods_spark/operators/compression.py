@@ -70,13 +70,13 @@ def unpack_tier(
 
     def unpack(batches):
         for pdf in batches:
-            for _, row in pdf.iterrows():
-                ts, vals = gorilla.decode_series(bytes(row["blob"]))
+            for blob, *key_vals in zip(pdf["blob"], *(pdf[k] for k in key_list)):
+                ts, vals = gorilla.decode_series(bytes(blob))
                 out = pd.DataFrame(
                     {"window_start": pd.to_datetime(ts, unit="s"), value_col: vals}
                 )
-                for k in key_list:
-                    out[k] = row[k]
+                for k, v in zip(key_list, key_vals):
+                    out[k] = v
                 yield out[[*key_list, "window_start", value_col]]
 
     return packed.mapInPandas(unpack, schema)

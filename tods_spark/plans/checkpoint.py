@@ -170,13 +170,13 @@ def run_tier(
         dirs = {v[partition_col]: path for path, v in source.partition_dirs()}
         days = sorted(dirs)
     else:
-        # one job gives the day set and every day's row count
-        inp = source.withColumn(
-            partition_col, F.date_format(in_ts_col, "yyyy-MM-dd")
-        )
+        # one job gives the day set and every day's row count; rows are
+        # keyed by their DATE (no per-row string formatting), and only the
+        # few collected dates become "yyyy-MM-dd" keys, on the driver
+        inp = source.withColumn(partition_col, F.to_date(in_ts_col))
         day_rows = {
-            r[partition_col]: int(r["count"])
-            for r in inp.groupBy(partition_col).count().collect()
+            (d.isoformat() if d is not None else None): int(n)
+            for d, n in inp.groupBy(partition_col).count().collect()
         }
         days = sorted(day_rows)
     members: dict[str, list[str]] = {}
@@ -234,7 +234,8 @@ def run_tier(
             # rows take the IN filter
             pending = (source.read(days=feed)
                        if isinstance(source, PartitionedTable)
-                       else inp.filter(F.col(partition_col).isin(feed)))
+                       else inp.filter(F.col(partition_col).isin(
+                           [date.fromisoformat(d) for d in feed])))
             t0 = time.time()
             result = compute(pending.drop(partition_col), feed).withColumn(
                 partition_col, F.date_format(out_ts_col, "yyyy-MM-dd")

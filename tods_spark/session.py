@@ -17,6 +17,33 @@ from pyspark.sql import SparkSession
 
 HEAP_CAP_MB = 24 * 1024
 
+# The driver JVM's JIT policy: HotSpot's tier-4 (C2) thresholds at 10x their
+# defaults (5000 / 600 / 15000 / 40000), so only really hot methods reach C2
+# and the lukewarm start-up, planner and codegen code stays in C1. Most of a
+# session's fixed cost was C2 compiling code that runs a few thousand times.
+# Measured on 4 CPUs, 10 alternating pairs of perfbench/run.py per workload:
+# build_cpu_s -22% on cascade_sparse and -16% on cascade_dense, setup_s -31%
+# and -35%; at 4M dense docs (scripts/cold_build.py, 3 fresh processes a
+# side) the cold build 107 -> 90 CPU-s and a warm one 51 -> 43. The cost: a
+# long session of many small, different jobs runs longer (the test suite's
+# wall time +10-19%), and a cold build's wall time does not fall.
+# Not C1 only (-XX:TieredStopAtLevel=1): it cuts start-up more but loses on
+# per-row JVM work (cascade_dense resume_cpu_s +26%; at 4M dense docs a warm
+# build +17% and a resume +89%).
+# The flags go in spark.driver.defaultJavaOptions: a caller that passes its
+# own spark.driver.extraJavaOptions (perfbench/run.py does) replaces the
+# extraJavaOptions set below. Spark starts the JVM with
+# -XX:+IgnoreUnrecognizedVMOptions, so a misspelt flag would be dropped
+# silently; tests/test_session.py reads the values back from the JVM.
+# Scope: the driver JVM that get_spark launches, which in local mode runs
+# every task. Under spark-submit the JVM starts before get_spark: pass the
+# string there with --conf spark.driver.defaultJavaOptions=... . Executor
+# JVMs on a cluster are not covered, and were not measured.
+JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000"
+    " -XX:Tier4CompileThreshold=60000 -XX:Tier4BackEdgeThreshold=400000"
+)
+
 
 def available_memory_bytes() -> int:
     """Memory this process can still use: /proc/meminfo MemAvailable, or
@@ -101,6 +128,7 @@ def get_spark(
         # extra first-touch faults per JVM vs 24g (48s vs 29s cold on the
         # 16M-row rollup), and a heap the host cannot commit kills the JVM
         .config("spark.driver.extraJavaOptions", "-Xms" + heap)
+        .config("spark.driver.defaultJavaOptions", JIT_OPTIONS)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "1073741824")
