@@ -21,7 +21,7 @@ def test_driver_mem_override(monkeypatch):
     assert session.default_driver_mem() == "3g"
 
 
-def test_driver_jvm_runs_the_jit_thresholds(spark):
+def test_driver_jvm_runs_the_jit_options(spark):
     """The values the running JVM chose, not its command line: Spark starts
     it with -XX:+IgnoreUnrecognizedVMOptions, so a misspelt flag would be
     on the command line and have no effect."""
@@ -29,12 +29,12 @@ def test_driver_jvm_runs_the_jit_thresholds(spark):
     bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
         jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
     flags = dict(f.removeprefix("-XX:").split("=") for f in session.JIT_OPTIONS.split())
-    assert len(flags) == 4
+    assert len(flags) == 2
     for name, value in flags.items():
         assert bean.getVMOption(name).getValue() == value, name
 
 
-def test_caller_extra_java_options_keep_the_jit_thresholds(monkeypatch):
+def test_caller_extra_java_options_keep_the_jit_options(monkeypatch):
     """A caller's extraJavaOptions (perfbench's start_session passes its own)
     replaces get_spark's, so the JIT policy lives in defaultJavaOptions."""
     conf = {}

@@ -17,19 +17,29 @@ from pyspark.sql import SparkSession
 
 HEAP_CAP_MB = 24 * 1024
 
-# The driver JVM's JIT policy: HotSpot's tier-4 (C2) thresholds at 10x their
-# defaults (5000 / 600 / 15000 / 40000), so only really hot methods reach C2
-# and the lukewarm start-up, planner and codegen code stays in C1. Most of a
-# session's fixed cost was C2 compiling code that runs a few thousand times.
-# Measured on 4 CPUs, 10 alternating pairs of perfbench/run.py per workload:
-# build_cpu_s -22% on cascade_sparse and -16% on cascade_dense, setup_s -31%
-# and -35%; at 4M dense docs (scripts/cold_build.py, 3 fresh processes a
-# side) the cold build 107 -> 90 CPU-s and a warm one 51 -> 43. The cost: a
-# long session of many small, different jobs runs longer (the test suite's
-# wall time +10-19%), and a cold build's wall time does not fall.
-# Not C1 only (-XX:TieredStopAtLevel=1): it cuts start-up more but loses on
-# per-row JVM work (cascade_dense resume_cpu_s +26%; at 4M dense docs a warm
-# build +17% and a resume +89%).
+# The driver JVM's JIT policy: C2 inlines at most 9 call levels deep
+# (JDK 17's default is 15, JDK 13's was 9) and inlines an already compiled
+# method only when its code is under 1000 bytes (default 2500). Most of the
+# CPU of a session's first builds is C2 compiling Spark's planner, codegen
+# and start-up code, and inlining sets a C2 compile's size; smaller compiles
+# cost less CPU and reach the same methods as early as before.
+# Measured on 4 CPUs against no flags, alternating runs: cascade_sparse
+# build_cpu_s -22% and resume_cpu_s -27% (perfbench/run.py, 10 pairs, each
+# lower in 10), with warm build wall -3%; bench.py at sf0.01, 3 rounds: total
+# wall 18.7 -> 17.7 s and process-tree CPU 291 -> 238 s (lower in 3 of 3).
+# At 4M dense docs (scripts/cold_build.py, 3 runs a side) the cold build
+# 101 -> 89 CPU-s and a warm one 50 -> 45.
+# Rejected, by measurement:
+#   raising the tier-4 (C2) thresholds keeps code in profiled C1 for
+#   longer: at 10x their defaults cascade_sparse build_cpu_s fell 22%, but
+#   bench.py's token_cascade wall rose 12% (4 of 5 rounds), the test suite's
+#   wall time 10-19%, and a one-shot cold build's wall did not fall; at 4x
+#   build_cpu_s fell 19% and bench.py's total rose 2-13% (3 of 3 rounds);
+#   at 2x build_cpu_s fell only 8% (5 of 6 pairs);
+#   C1 only (-XX:TieredStopAtLevel=1) loses on per-row JVM work
+#   (cascade_dense resume_cpu_s +26%; at 4M dense docs a warm build +17%
+#   and a resume +89%); -XX:-DoEscapeAnalysis saved 4% of bench.py's CPU
+#   in one run.
 # The flags go in spark.driver.defaultJavaOptions: a caller that passes its
 # own spark.driver.extraJavaOptions (perfbench/run.py does) replaces the
 # extraJavaOptions set below. Spark starts the JVM with
@@ -39,10 +49,7 @@ HEAP_CAP_MB = 24 * 1024
 # every task. Under spark-submit the JVM starts before get_spark: pass the
 # string there with --conf spark.driver.defaultJavaOptions=... . Executor
 # JVMs on a cluster are not covered, and were not measured.
-JIT_OPTIONS = (
-    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000"
-    " -XX:Tier4CompileThreshold=60000 -XX:Tier4BackEdgeThreshold=400000"
-)
+JIT_OPTIONS = "-XX:MaxInlineLevel=9 -XX:InlineSmallCode=1000"
 
 
 def available_memory_bytes() -> int:
