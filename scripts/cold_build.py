@@ -13,8 +13,11 @@ session start), a warm build, and a resume of the warm build. Times are wall
 and CPU seconds of the process tree (the run's Python process, its JVM and
 the JVM's Python workers), as in ``perfbench``; the ``*_jit_s`` figures are
 the seconds the JVM's JIT compilers ran in each span (``CompilationMXBean``,
-summed over compiler threads). Nothing is checked here: ``perfbench/run.py``
-checks the same builds.
+summed over compiler threads). ``archive`` says how the run's JVM used the
+class-data archive ``tods_spark.session.get_spark`` keeps: ``write`` (none
+existed: it records the classes it loads, and one is written from them at
+exit), ``read`` (it mapped one) or ``none``.
+Nothing is checked here: ``perfbench/run.py`` checks the same builds.
 
 To compare two versions of the program, run this script from each checkout,
 alternating. Prints one JSON line per run, then one line of medians.
@@ -48,6 +51,18 @@ def jit_s(spark) -> float:
     ).getTotalCompilationTime() / 1e3
 
 
+def archive_use(spark) -> str:
+    """"write", "read" or "none": see the module docstring."""
+    jvm = spark.sparkContext._jvm
+    args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+                .getInputArguments())
+    if any(a.startswith("-XX:DumpLoadedClassList=") for a in args):
+        return "write"
+    shared = [a.split("=", 1)[1] for a in args if a.startswith("-XX:SharedArchiveFile=")]
+    with open(f"/proc/{jvm.java.lang.ProcessHandle.current().pid()}/maps") as f:
+        return "read" if shared and shared[0] in f.read() else "none"
+
+
 def one_run(workload: str, seed: int, n_docs: int | None) -> dict:
     """The figures of one run, in this process."""
     from perfbench import cascade as C, host
@@ -65,6 +80,7 @@ def one_run(workload: str, seed: int, n_docs: int | None) -> dict:
         out = {"setup_s": time.perf_counter() - t0,
                "setup_cpu_s": host.tree_cpu_s(os.getpid()) - c0}
         jit = [jit_s(spark)]
+        archive = archive_use(spark)
         cold = C.Iteration(spark, *paths, f"{work}/cold")
         cold.build()
         jit.append(jit_s(spark))
@@ -79,7 +95,7 @@ def one_run(workload: str, seed: int, n_docs: int | None) -> dict:
                    cold_jit_s=jit[1] - jit[0], warm_jit_s=jit[2] - jit[1],
                    resume_jit_s=jit[3] - jit[2])
         out = {k: round(v, 3) for k, v in out.items()}
-        out.update(heap_mb=env["heap_mb"],
+        out.update(archive=archive, heap_mb=env["heap_mb"],
                    external_busy_cpus=host.since(start)["external_busy_cpus"])
         return out
     finally:

@@ -7,11 +7,13 @@ from datetime import datetime
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from tods_spark.datagen import token_table
 from tods_spark.operators import preprocessing as PP
 from tods_spark.pipeline import run_engine
+from tods_spark.plans.retention import check_horizons
 from tods_spark.sources.storage import PartitionedTable
 
 
@@ -76,6 +78,32 @@ def test_run_engine_end_to_end_and_resume(spark, tmp_path):
     assert set(r3["expired"]["1m"]) <= set(r4["1m"]["skipped"])
     assert spark.read.parquet(f"{base}/tier_1m").count() == n1m_after
     raw.unpersist()
+
+
+@pytest.mark.parametrize("horizons, key", [
+    ({"1m": -5}, "1m"),            # would expire a 7-day-old day
+    ({"1min": 1}, "1min"),         # would expire nothing
+    ({"1h": True}, "1h"),          # a bool is not a day count
+    ({"1d": 1.5}, "1d"),
+    ({"raw": "7"}, "raw"),
+    ({"1m": 1, "2w": None}, "2w"),
+])
+def test_run_engine_rejects_bad_horizons(tmp_path, horizons, key):
+    """Checked before any Spark job: no session, no input and nothing
+    written."""
+    with pytest.raises(ValueError, match=f"'{key}'"):
+        run_engine(None, None, str(tmp_path / "engine"), horizons=horizons,
+                   now=datetime(2020, 9, 20))
+    assert not (tmp_path / "engine").exists()
+
+
+@pytest.mark.parametrize("horizons", [
+    {"raw": 0, "1m": 30, "1h": 365, "1d": None, "1w": None},
+    {"1m": 0},
+    {"1w": None},
+])
+def test_check_horizons_accepts_tiers_and_day_counts(horizons):
+    check_horizons(horizons)
 
 
 def test_parse_columns(spark):

@@ -163,7 +163,7 @@ def test_digest_quantiles_cascade(spark):
     11,
     pytest.param(12, marks=pytest.mark.xfail(strict=True, reason=(
         "the weighted-grid merge of partial 1m digests reaches rank error "
-        "0.0191 > 1/K on this input (ROADMAP item 9)"))),
+        "0.0191 > 1/K on this input (ROADMAP item 1)"))),
     13,
     14,
 ])

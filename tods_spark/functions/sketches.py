@@ -15,7 +15,7 @@ cascades. The intended rank error per merge level is O(1/K) (~1.6% at
 K=64), but it is NOT a bound the engine holds: a tier's error depends on
 which Arrow batches split a window into partial digests, and seed 12 of
 ``tests/test_rollup.py::test_digest_rank_error_bound_every_tier`` reaches
-0.0191 at 1m (a strict xfail until the merge is fixed; ROADMAP item 9).
+0.0191 at 1m (a strict xfail until the merge is fixed; ROADMAP item 1).
 
 All kernels are vectorized numpy invoked from pandas/Arrow UDFs — no per-row
 Python (driver rule).

@@ -39,7 +39,8 @@ from pyspark.sql import SparkSession, functions as F
 from tods_spark.operators import compression
 from tods_spark.operators.rollup import refresh_tier, rollup_cascade, rollup_raw
 from tods_spark.plans.checkpoint import CheckpointLog, run_tier
-from tods_spark.plans.retention import DEFAULT_HORIZON_DAYS, expire_partitions
+from tods_spark.plans.retention import (DEFAULT_HORIZON_DAYS, check_horizons,
+                                        expire_partitions)
 from tods_spark.sources.storage import PartitionedTable
 
 CASCADE = (("1m", "1h"), ("1h", "1d"), ("1d", "1w"))
@@ -95,9 +96,15 @@ def run_engine(
 
     dedup: None | 'first' | 'average' — drop duplicate timestamps per key
     before the rollup (DuplicationValidation semantics, the F0 generator
-    plants duplicate ts on every 97th doc)."""
-    ckpt = CheckpointLog(f"{base_dir}/checkpoint.jsonl")
+    plants duplicate ts on every 97th doc).
+
+    horizons: {tier: days or None} over the tiers of
+    retention.DEFAULT_HORIZON_DAYS (which it replaces when given; a tier it
+    leaves out never expires); a bad tier or value raises ValueError before
+    any Spark job."""
     horizons = horizons or DEFAULT_HORIZON_DAYS
+    check_horizons(horizons)
+    ckpt = CheckpointLog(f"{base_dir}/checkpoint.jsonl")
     report: dict = {}
 
     if dedup is not None:

@@ -24,6 +24,20 @@ DEFAULT_HORIZON_DAYS = {"raw": 7, "1m": 30, "1h": 365, "1d": None,
                         "1w": None}
 
 
+def check_horizons(horizons: dict) -> None:
+    """Raise ValueError, naming the key, for a horizon that is not a tier of
+    DEFAULT_HORIZON_DAYS or whose days are neither None nor an int >= 0.
+    Unchecked, {"1m": -5} would expire a 7-day-old day and {"1min": 1}
+    nothing, both silently."""
+    for tier, days in horizons.items():
+        if tier not in DEFAULT_HORIZON_DAYS:
+            raise ValueError(f"horizons: unknown tier {tier!r}, expected one "
+                             f"of {list(DEFAULT_HORIZON_DAYS)}")
+        if days is not None and (type(days) is not int or days < 0):
+            raise ValueError(f"horizons[{tier!r}] = {days!r}: expected None "
+                             f"or a whole number of days >= 0")
+
+
 def expire_partitions(
     table: PartitionedTable,
     tier: str,

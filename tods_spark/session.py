@@ -10,8 +10,19 @@ the DuckDB oracle.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import hashlib
 import os
+import shutil
+import signal
+import subprocess
+import sys
 
+import pyspark
+from pyspark import SparkContext
+from pyspark.errors import PySparkRuntimeError
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 
@@ -51,6 +62,53 @@ HEAP_CAP_MB = 24 * 1024
 # JVMs on a cluster are not covered, and were not measured.
 JIT_OPTIONS = "-XX:MaxInlineLevel=9 -XX:InlineSmallCode=1000"
 
+# The driver JVM starts from a dynamic AppCDS archive: the classes a session
+# loads, already parsed and verified, mapped from one file. A session start
+# loads and verifies about 10.5k classes; the archive makes that a mapping.
+# A launch with no archive runs as before but records the classes it loads
+# (-XX:DumpLoadedClassList, no measurable cost) into
+# <key>.classes.<pid>.tmp. At its exit, get_spark's atexit hook stops the
+# JVM, waits for it and runs write_archive in a child process, bounded by
+# ARCHIVE_EXIT_TIMEOUT_S: a gateway JVM started like the session's loads the
+# recorded classes and writes them at its exit (-XX:ArchiveClassesAtExit)
+# into <key>.jsa.<pid>.tmp, which is renamed to <key>.jsa only when that JVM
+# exited 0, else deleted. The rename is what makes it safe: a truncated
+# archive at the final path made the JVM die at start with SIGBUS, and a
+# reader keeps its mapping of a replaced file. A JVM that dies at start
+# from an archive anyway (one cut short after it was published) makes
+# get_spark start again without it, and delete it once that start works;
+# an archive the JVM maps is touched, one it rejects (-Xshare:auto) is
+# deleted, so the next launch writes it again. The writer also deletes the
+# *.<pid>.tmp files of pids no longer running and keeps only the
+# ARCHIVES_KEPT archives used last (two checkouts run in turn, as an A/B
+# benchmark does, keep one each). The session's own JVM does not write the
+# archive: in dump mode JDK 17 compares every class it loads with each class
+# path entry (a stat of both files per entry; Spark's class path has about
+# 290 jars), and a session start cost 2.3 CPU-s (+23%) more; its JVM system
+# time rose from 0.3 to 1.3-1.8 s.
+# The key hashes the java binary (path, size, mtime), Spark's jars/ listing,
+# the pyspark version and JIT_OPTIONS; one archive loaded under heaps from
+# 1536m to 6213m, so the heap is not in it. Eligibility: JDK 17 writes no
+# archive when the class path holds a non-empty directory ("Cannot have
+# non-empty directory in paths"), and Spark puts its conf dir there. So a
+# launch uses the archive only when that dir holds nothing but *.template
+# files, no Hadoop/YARN conf dir or extra class path is set, and pyspark
+# launches the JVM itself; it then runs with SPARK_CONF_DIR pointed at an
+# empty dir in the cache. Any other launch runs exactly as before, with no
+# archive. CDS logging is off: a rejected archive would print a warning on
+# stdout, where perfbench's last line must stay its JSON result.
+# Measured on 4 CPUs against no archive (perfbench/run.py --seconds 20,
+# alternating pairs, archive written by an earlier run): setup_s
+# 10.7 -> 6.4 CPU-s on cascade_sparse (10 pairs) and 9.4 -> 5.7 on
+# cascade_dense (6 pairs), lower in every pair; session-start wall about
+# 5 -> 2.5 s; warm builds and resumes did not move past the noise, and
+# neither did a cold build's CPU (scripts/cold_build.py). The archive is
+# 140-195 MB. The process that writes it runs its session at the cost of
+# one without archives, and its exit takes 15-20 s longer.
+CDS_OPTIONS = "-Xlog:cds=off,cds+dynamic=off"
+ARCHIVE_EXIT_TIMEOUT_S = 120
+ARCHIVES_KEPT = 2
+
 
 def available_memory_bytes() -> int:
     """Memory this process can still use: /proc/meminfo MemAvailable, or
@@ -82,6 +140,198 @@ def default_driver_mem() -> str:
     return f"{mb}m"
 
 
+def archive_dir() -> str:
+    """Where the driver JVM's class-data archives live:
+    $XDG_CACHE_HOME/tods_spark/jvm, else ~/.cache/tods_spark/jvm."""
+    cache = os.environ.get("XDG_CACHE_HOME") or os.path.join(
+        os.path.expanduser("~"), ".cache")
+    return os.path.join(cache, "tods_spark", "jvm")
+
+
+def archive_path() -> str | None:
+    """The class-data archive of this JDK, Spark jar set, pyspark version
+    and JIT_OPTIONS (whether or not it exists yet); None when the java
+    binary or Spark's jars cannot be read."""
+    java_home = os.environ.get("JAVA_HOME")
+    java = (os.path.join(java_home, "bin", "java") if java_home
+            else shutil.which("java"))
+    try:
+        java = os.path.realpath(java)
+        st = os.stat(java)
+        jars = sorted((e.name, e.stat().st_size)
+                      for e in os.scandir(os.path.join(_find_spark_home(), "jars")))
+    except (OSError, TypeError):
+        return None
+    key = hashlib.sha256(repr((java, st.st_size, st.st_mtime_ns, jars,
+                               pyspark.__version__, JIT_OPTIONS)).encode())
+    return os.path.join(archive_dir(), key.hexdigest()[:16] + ".jsa")
+
+
+def _shared_archive(extra_conf: dict) -> str | None:
+    """archive_path() when this launch can write or read it (see
+    CDS_OPTIONS), with its empty conf dir made; else None."""
+    if (SparkContext._gateway is not None
+            or "PYSPARK_GATEWAY_PORT" in os.environ
+            or os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell") != "pyspark-shell"
+            or any(os.environ.get(v) for v in ("HADOOP_CONF_DIR", "YARN_CONF_DIR",
+                                               "SPARK_DIST_CLASSPATH"))
+            or "spark.driver.extraClassPath" in extra_conf):
+        return None
+    conf_dir = (os.environ.get("SPARK_CONF_DIR")
+                or os.path.join(_find_spark_home(), "conf"))
+    empty_conf_dir = os.path.join(archive_dir(), "conf")
+    archive = archive_path()
+    try:
+        names = os.listdir(conf_dir) if os.path.isdir(conf_dir) else []
+        if archive is None or not all(n.endswith(".template") for n in names):
+            return None
+        os.makedirs(empty_conf_dir, exist_ok=True)
+        if os.listdir(empty_conf_dir):
+            return None
+    except OSError:
+        return None
+    # Spark splits the option string on white space and quotes
+    return None if any(c.isspace() or c in "'\"\\" for c in archive) else archive
+
+
+def _running(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def _sweep(keep: str) -> None:
+    """Delete what writers that died left in the archive dir (a
+    *.<pid>.tmp of a pid no longer running) and every archive but ``keep``
+    and the ARCHIVES_KEPT - 1 others used last."""
+    others = []
+    with contextlib.suppress(OSError):
+        for e in os.scandir(os.path.dirname(keep)):
+            if e.name.endswith(".tmp"):
+                pid = e.name.rsplit(".", 2)[-2]
+                if pid.isdigit() and not _running(int(pid)):
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(e.path)
+            elif e.name.endswith(".jsa") and e.path != keep:
+                others.append((e.stat().st_mtime, e.path))
+    for _, path in sorted(others, reverse=True)[ARCHIVES_KEPT - 1:]:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(path)
+
+
+def write_archive(class_list: str, archive: str) -> None:
+    """Write ``archive`` from the classes a session loaded (``class_list``,
+    as -XX:DumpLoadedClassList writes it): a gateway JVM launched as
+    get_spark launches one loads them and writes them at its exit. The
+    archive is published only when that JVM exited 0. Runs in a child
+    process of the session's (python -m tods_spark.session LIST ARCHIVE)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from py4j.protocol import Py4JError
+    from pyspark import SparkConf
+    from pyspark.java_gateway import launch_gateway
+
+    _sweep(archive)
+    with open(class_list) as f:  # "@..." lines are lambdas, "#" comments
+        names = [line.split()[0].replace("/", ".") for line in f
+                 if line.strip() and line[0] not in "@#"]
+    tmp = f"{archive}.{os.getpid()}.tmp"
+    os.environ["SPARK_CONF_DIR"] = os.path.join(os.path.dirname(archive), "conf")
+    gateway = launch_gateway(SparkConf().set(
+        "spark.driver.defaultJavaOptions",
+        f"{CDS_OPTIONS} -XX:ArchiveClassesAtExit={tmp}"))
+    proc = gateway.proc
+    try:
+        # loads without initializing; one py4j call a class, 4 at a time
+        is_loadable = gateway.jvm.org.apache.spark.util.Utils.classIsLoadable
+
+        def load(name):
+            with contextlib.suppress(Py4JError):  # e.g. a LinkageError
+                is_loadable(name)
+
+        with ThreadPoolExecutor(min(4, os.cpu_count() or 1)) as pool:
+            for _ in pool.map(load, names, chunksize=64):
+                pass
+        gateway.shutdown()
+        proc.stdin.close()  # the gateway server exits 0 on stdin EOF
+        if proc.wait(ARCHIVE_EXIT_TIMEOUT_S) == 0:
+            fd = os.open(tmp, os.O_RDONLY)
+            try:
+                os.fsync(fd)  # whole on disk before it has the final name
+            finally:
+                os.close(fd)
+            os.replace(tmp, archive)
+    finally:
+        if proc.poll() is None:
+            proc.kill()
+            proc.wait()
+        with contextlib.suppress(FileNotFoundError):  # a failed or cut dump
+            os.remove(tmp)
+    _sweep(archive)
+
+
+def _write_at_exit(class_list: str, archive: str) -> None:
+    """At interpreter exit, stop the JVM get_spark launched, wait for it,
+    and write the archive from the classes it loaded (see CDS_OPTIONS)."""
+    proc = getattr(SparkContext._gateway, "proc", None)
+    if proc is None:
+        return
+
+    def write():
+        try:
+            if proc.poll() is None:
+                if SparkContext._active_spark_context is not None:
+                    # first, or pyspark's accumulator server sees the JVM's
+                    # socket close and prints an EOFError
+                    SparkContext._active_spark_context.stop()
+                proc.stdin.close()  # the gateway server exits 0 on stdin EOF
+                try:
+                    proc.wait(ARCHIVE_EXIT_TIMEOUT_S)
+                except subprocess.TimeoutExpired:
+                    proc.kill()
+                    proc.wait()
+            if (proc.returncode == 0 and os.path.isfile(class_list)
+                    and not os.path.exists(archive)):
+                root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+                path = os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")]))
+                writer = subprocess.Popen(
+                    [sys.executable, "-m", "tods_spark.session", class_list, archive],
+                    env={**os.environ, "PYTHONPATH": path}, stdin=subprocess.DEVNULL,
+                    stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
+                    start_new_session=True)
+                try:
+                    writer.wait(ARCHIVE_EXIT_TIMEOUT_S)
+                finally:
+                    if writer.poll() is None:  # too slow, or interrupted:
+                        os.killpg(writer.pid, signal.SIGKILL)  # and its JVM
+                        writer.wait()
+        except (OSError, subprocess.TimeoutExpired):
+            pass
+        finally:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(class_list)
+
+    atexit.register(write)
+
+
+def _note_use(archive: str) -> None:
+    """Touch an archive the driver JVM mapped (see _sweep); delete one it
+    rejected, so that the next launch writes it again."""
+    try:
+        with open(f"/proc/{SparkContext._gateway.proc.pid}/maps") as f:
+            mapped = archive in f.read()
+        if mapped:
+            os.utime(archive)
+        else:
+            os.remove(archive)
+    except (OSError, AttributeError):
+        pass
+
+
 def get_spark(
     app_name: str = "tods_spark",
     cores: int | str | None = None,
@@ -111,6 +361,13 @@ def get_spark(
         shuffle_partitions = max(8, n_cores)
 
     heap = default_driver_mem()
+    archive = _shared_archive(extra_conf or {})
+    java_options, class_list = JIT_OPTIONS, None
+    if archive and os.path.isfile(archive):
+        java_options += f" {CDS_OPTIONS} -XX:SharedArchiveFile={archive}"
+    elif archive:
+        class_list = f"{archive[:-len('.jsa')]}.classes.{os.getpid()}.tmp"
+        java_options += f" {CDS_OPTIONS} -XX:DumpLoadedClassList={class_list}"
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -135,7 +392,7 @@ def get_spark(
         # extra first-touch faults per JVM vs 24g (48s vs 29s cold on the
         # 16M-row rollup), and a heap the host cannot commit kills the JVM
         .config("spark.driver.extraJavaOptions", "-Xms" + heap)
-        .config("spark.driver.defaultJavaOptions", JIT_OPTIONS)
+        .config("spark.driver.defaultJavaOptions", java_options)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "1073741824")
@@ -143,6 +400,33 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    conf_dir = os.environ.get("SPARK_CONF_DIR")
+    if archive:
+        os.environ["SPARK_CONF_DIR"] = os.path.join(archive_dir(), "conf")
+    try:
+        spark = builder.getOrCreate()
+        if archive and not class_list:
+            _note_use(archive)
+    except PySparkRuntimeError as e:
+        # a damaged archive at the final path (copied in, or cut short by a
+        # crash) kills the JVM at start: start without it, and drop it only
+        # once that start shows the archive was the cause
+        if not archive or class_list or e.getCondition() != "JAVA_GATEWAY_EXITED":
+            raise
+        spark = builder.config("spark.driver.defaultJavaOptions",
+                               JIT_OPTIONS).getOrCreate()
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(archive)
+    finally:
+        if archive and conf_dir is None:
+            del os.environ["SPARK_CONF_DIR"]
+        elif archive:
+            os.environ["SPARK_CONF_DIR"] = conf_dir
+    if class_list:
+        _write_at_exit(class_list, archive)
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+if __name__ == "__main__":
+    write_archive(*sys.argv[1:])
